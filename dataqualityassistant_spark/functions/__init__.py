@@ -1,4 +1,4 @@
-from dataqualityassistant_spark.functions.text_features import with_text_features, FEATURE_COLUMNS
+from dataqualityassistant_spark.functions.text_features import FEATURE_COLUMNS
 from dataqualityassistant_spark.functions.langid import langid_udf
 from dataqualityassistant_spark.functions.perplexity import perplexity_udf
 from dataqualityassistant_spark.functions.normalize import normalize_text_column, strip_control_chars
@@ -7,7 +7,6 @@ from dataqualityassistant_spark.functions.scrub import scrub_text_column, scrub_
 __all__ = [
     "normalize_text_column",
     "strip_control_chars",
-    "with_text_features",
     "FEATURE_COLUMNS",
     "langid_udf",
     "perplexity_udf",

@@ -25,6 +25,7 @@ from functools import lru_cache
 
 import numpy as np
 import pandas as pd
+from pandas._libs.hashtable import Int64HashTable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -97,13 +98,13 @@ _LANGID_TYPE = T.StructType(
 
 
 @lru_cache(maxsize=1)
-def _profiles_dense() -> tuple[np.ndarray, int, list[str], np.ndarray, np.ndarray]:
+def _profiles_dense() -> tuple[np.ndarray, int, list[str], np.ndarray]:
     """Vectorized form of :func:`_profiles`: a codepoint → char-id LUT over
-    the union training vocabulary (0 = out-of-vocabulary) plus, per language,
-    a dense ``K³`` float64 table indexed ``(i0·K + i1)·K + i2`` — every slot
-    not keyed in that language's profile (including all id-0 slots)
-    initialized to its ``__oov__`` value, so a gather reproduces
-    ``table.get(gram, oov)`` exactly."""
+    the union training vocabulary (0 = out-of-vocabulary) plus a dense
+    ``(K³, n_langs)`` float64 table whose row ``(i0·K + i1)·K + i2`` holds
+    every language's log-prob of that trigram — its ``__oov__`` value where
+    the language's profile has no such key (including every row touching
+    id 0), so a gather reproduces ``table.get(gram, oov)`` exactly."""
     profiles = _profiles()
     chars = sorted({c for table in profiles.values() for g in table for c in g
                     if g != "__oov__"})
@@ -112,69 +113,65 @@ def _profiles_dense() -> tuple[np.ndarray, int, list[str], np.ndarray, np.ndarra
     for i, c in enumerate(chars, start=1):
         lut[ord(c)] = i
     langs = sorted(profiles)  # sorted: the tie-break below needs this order
-    dense = np.empty((len(langs), K * K * K), dtype=np.float64)
-    oovs = np.empty(len(langs), dtype=np.float64)
+    dense = np.empty((K * K * K, len(langs)), dtype=np.float64)
+    dense[:] = [profiles[lang]["__oov__"] for lang in langs]
     for li, lang in enumerate(langs):
-        table = profiles[lang]
-        dense[li].fill(table["__oov__"])
-        oovs[li] = table["__oov__"]
-        for g, v in table.items():
+        for g, v in profiles[lang].items():
             if g == "__oov__":
                 continue
             i0, i1, i2 = (int(lut[ord(c)]) for c in g)
-            dense[li][(i0 * K + i1) * K + i2] = v
-    return lut, K, langs, dense, oovs
+            dense[(i0 * K + i1) * K + i2, li] = v
+    return lut, K, langs, dense
+
+
+_CP = (1 << 21) - 1  # every codepoint fits in 21 bits
+#: documents per slab of :func:`classify_batch`; each contributes at most
+#: 2004 codepoints, so a slab's arrays stay a few MiB
+_SLAB_DOCS = 64
 
 
 def classify_batch(texts) -> list[tuple[str, float]]:
     """Batch form of :func:`classify_text` — bit-identical per document
-    (differentially asserted in tests). The per-gram dict work becomes one
-    UTF-32 decode + LUT gather + ``np.unique`` + one dense gather per
-    language; the score sum replays the serial loop exactly: unique grams in
-    FIRST-OCCURRENCE order (``Counter`` iterates insertion order), each
-    contributing ``count * logp`` as one multiply, accumulated left-to-right
-    via ``np.cumsum``. Distinct out-of-vocabulary chars all map to LUT id 0,
-    which would merge distinct unseen trigrams (changing the grouping and
-    therefore the float sum), so OOV chars are re-assigned unique per-doc
-    ids before grouping — gram identity then matches string identity."""
-    lut, K, langs, dense, _ = _profiles_dense()
-    out = []
-    for text in texts:
-        if text is None or len(text) < MIN_CHARS:
-            out.append((UNKNOWN, 0.0))
-            continue
-        t = f"  {text[:2000].lower()}  "
-        n = len(t) - NGRAM + 1
-        if n <= 0:
-            out.append((UNKNOWN, 0.0))
-            continue
-        try:
-            codes = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32)
-        except UnicodeEncodeError:
-            out.append(classify_text(text))  # lone surrogates: scalar path
-            continue
-        # group occurrences by the raw codepoint triple packed into 63 bits
-        # (codepoints < 2^21): packed equality == string-trigram equality,
-        # so the grouping matches Counter's exactly — no vocab aliasing
-        c64 = codes.astype(np.int64)
-        tri_key = (c64[:-2] << 42) | (c64[1:-1] << 21) | c64[2:]
-        _, first_idx, counts = np.unique(tri_key, return_index=True,
-                                         return_counts=True)
-        order = np.argsort(first_idx, kind="stable")
-        first_idx = first_idx[order]
-        cnts = counts[order].astype(np.float64)
-        # dense-table slot of each unique gram, via its first occurrence:
-        # all occurrences share the string trigram, hence the same slot
-        ids = lut[codes].astype(np.int64)
-        tri_in = (ids[first_idx] * K + ids[first_idx + 1]) * K + ids[first_idx + 2]
-        # one (n_langs, n_unique) gather; axis-1 cumsum accumulates each row
-        # strictly left to right == the serial per-gram loop
-        totals = np.cumsum(cnts[None, :] * dense[:, tri_in], axis=1)[:, -1]
-        scores = {lang: float(totals[li]) / n for li, lang in enumerate(langs)}
-        best = max(sorted(scores), key=lambda k: scores[k])
-        ranked = sorted(scores.values(), reverse=True)
-        margin = ranked[0] - ranked[1] if len(ranked) > 1 else 0.0
-        out.append((best, margin))
+    (differentially asserted in tests). Per slab of documents: one UTF-32
+    decode (``surrogatepass`` keeps a lone surrogate as its own codepoint,
+    out of vocabulary as in the spec) and trigram occurrences packed as
+    codepoint triples into int64 keys, so key equality is string-trigram
+    equality. Per document: one hash factorization, whose uniques come back
+    in first-occurrence order, the order ``Counter`` iterates in, with no
+    sort. Each unique gram contributes ``count * logp`` as one multiply,
+    accumulated left to right by a per-document ``np.cumsum``, whose last
+    element equals the serial ``total +=`` loop. Keep it so: a 1-D
+    ``np.add.reduceat`` or ``ndarray.sum`` sums pairwise and does NOT
+    reproduce it."""
+    lut, K, langs, dense = _profiles_dense()
+    out = [(UNKNOWN, 0.0)] * len(texts)
+    rows = [i for i, t in enumerate(texts) if t is not None and len(t) >= MIN_CHARS]
+    for s in range(0, len(rows), _SLAB_DOCS):
+        slab = rows[s : s + _SLAB_DOCS]
+        padded = [f"  {texts[i][:2000].lower()}  " for i in slab]
+        c = np.frombuffer("".join(padded).encode("utf-32-le", "surrogatepass"),
+                          dtype=np.uint32).astype(np.int64)
+        keys = (c[:-2] << 42) | (c[1:-1] << 21) | c[2:]  # spans documents; sliced per doc
+        grams, counts, start = [], [], 0
+        for t in padded:
+            n = len(t) - NGRAM + 1
+            uniques, labels = Int64HashTable(n).factorize(keys[start : start + n])
+            grams.append(uniques)
+            counts.append(np.bincount(labels))
+            start += len(t)
+        g = np.concatenate(grams)
+        slots = (lut[g >> 42].astype(np.int64) * K + lut[(g >> 21) & _CP]) * K + lut[g & _CP]
+        terms = np.concatenate(counts)[:, None] * dense[slots]
+        start = 0
+        for i, t, uniques in zip(slab, padded, grams):
+            totals = np.cumsum(terms[start : start + len(uniques)], axis=0)[-1]
+            start += len(uniques)
+            n = len(t) - NGRAM + 1
+            scores = {lang: float(total) / n for lang, total in zip(langs, totals)}
+            best = max(sorted(scores), key=lambda k: scores[k])
+            ranked = sorted(scores.values(), reverse=True)
+            margin = ranked[0] - ranked[1] if len(ranked) > 1 else 0.0
+            out[i] = (best, margin)
     return out
 
 

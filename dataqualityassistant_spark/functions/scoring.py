@@ -5,20 +5,24 @@ and perplexity — in a single pass over each batch.
 Why one fused UDF (measured on this box, 100k docs):
 
 - Spark's higher-order functions (``filter``/``transform``/``aggregate``
-  with lambdas) do NOT participate in whole-stage codegen — the feature
-  projection runs interpreted, allocating per row, and stops scaling past
-  ~8 cores (1.3× speedup at 4× cores). The same logic as a batched Python
-  loop scales at ~2.3× and is absolutely faster.
+  with lambdas) do NOT participate in whole-stage codegen — an earlier JVM
+  feature projection ran interpreted, allocating per row, and stopped
+  scaling past ~8 cores (1.3× speedup at 4× cores). The same logic as a
+  batched Python stage scales at ~2.3× and is absolutely faster.
 - Each pandas UDF column costs an Arrow serialize/deserialize of its
   inputs, and ``udf(c)["a"]`` + ``udf(c)["b"]`` can evaluate the UDF twice.
   Fusing makes the hot path exactly one Python stage with one text transfer
   per row.
 
-The feature values are computed by the *same* pure functions as the pandas
-oracle (``text_features._pandas_features_one``), so Spark↔oracle label
-parity is exact by construction. The JVM expression variants in
-``text_features.text_feature_exprs`` remain for à-la-carte use and are
-differentially tested against the mirror.
+The UDF runs batch kernels over each Arrow batch
+(``text_features.text_features_batch``, ``langid.classify_batch``,
+``perplexity.log_perplexity_batch``). The oracle replays the per-document
+scalar spec (``_pandas_features_one`` / ``classify_text`` /
+``log_perplexity``); differential tests pin every kernel to its spec bit
+for bit, so Spark↔oracle label parity stays exact. A float sum over a
+document's segment must stay a left-to-right ``np.cumsum``, never
+``np.add.reduceat`` or ``ndarray.sum``: over 1-D segments those sum
+pairwise and are not bit-identical to the spec's serial loop.
 
 The quality RULES over these columns still compile to Spark SQL expressions
 (``expect_column_values_to_be_between`` masks) — only the derived-column
@@ -37,7 +41,7 @@ from dataqualityassistant_spark.functions.langid import classify_batch
 from dataqualityassistant_spark.functions.perplexity import log_perplexity_batch
 from dataqualityassistant_spark.functions.text_features import (
     FEATURE_COLUMNS,
-    _pandas_features_one,
+    text_features_batch,
 )
 
 _FEATURE_TYPES = {
@@ -61,25 +65,18 @@ SCORE_FIELDS = [f.name for f in _SCORES_TYPE.fields]
 
 @pandas_udf(_SCORES_TYPE)
 def text_scores_udf(texts: pd.Series) -> pd.DataFrame:
-    # langid + perplexity run as the vectorized batch kernels (bit-identical
-    # to classify_text / log_perplexity — the pure per-doc spec functions the
-    # oracle replays; differential tests pin the batch==scalar invariant)
-    langs = classify_batch(list(texts))
-    ppls = log_perplexity_batch(list(texts))
-    rows = []
-    for t, (lang, margin), lp in zip(texts, langs, ppls):
-        feats = _pandas_features_one(t)
-        feats["detected_lang"] = lang
-        feats["langid_margin"] = margin
-        feats["log_ppl"] = lp
-        rows.append(feats)
-    out = pd.DataFrame(rows, columns=SCORE_FIELDS, index=texts.index)
-    # NaN (e.g. log_ppl of an empty text) must reach Spark as NULL, not NaN:
-    # Spark treats NaN as an ordinary largest-double (NaN > x is TRUE), so a
-    # NaN leaking into a `between` mask counts as a violation while the
-    # pandas oracle (notnull(NaN) = False) passes it. Object-dtype columns
-    # make Arrow transmit both None and NaN as null.
-    return out.astype(object).where(pd.notna(out), None)
+    docs = texts.tolist()
+    # float64 columns with NaN for null: the Arrow serializer masks isnull(),
+    # so NaN (e.g. log_ppl of an empty text) reaches Spark as NULL, not NaN.
+    # It must: Spark treats NaN as an ordinary largest-double (NaN > x is
+    # TRUE), so a NaN leaking into a `between` mask would count as a
+    # violation while the pandas oracle (notnull(NaN) = False) passes it.
+    out = pd.DataFrame(text_features_batch(docs), index=texts.index)
+    langs = classify_batch(docs)
+    out["detected_lang"] = [lang for lang, _ in langs]
+    out["langid_margin"] = [margin for _, margin in langs]
+    out["log_ppl"] = log_perplexity_batch(docs)
+    return out
 
 
 def with_text_scores(df: DataFrame, text_col: str = "text") -> DataFrame:

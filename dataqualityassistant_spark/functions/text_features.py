@@ -1,15 +1,21 @@
 """Gopher/C4-style heuristic text features.
 
-Every feature except n-gram repetition is a pure Spark SQL expression
-(split / filter / transform / aggregate / regexp_count): JVM-side,
-whole-stage-codegen'd, zero Python on the hot path. Repetition features
-(top-k word n-gram character fractions, per the Gopher paper's repetition
-filters) need per-document hash maps, so they run in one Arrow-batched
-pandas UDF.
+One definition, two implementations:
 
-``pandas_text_features`` is the exact pandas mirror used by the oracle to
-freeze golden keep/drop labels — both implementations are tested equal on
-the fixture corpus (tests/test_webtext.py).
+- ``_pandas_features_one`` is the SPEC: a plain per-document function.
+  ``pandas_text_features`` replays it in the pandas oracle to freeze the
+  golden keep/drop labels.
+- ``text_features_batch`` is what the fused scoring UDF
+  (``functions/scoring.py``) runs: batch kernels over word-bounded slabs of
+  an Arrow batch. Each document is tokenized once. Words get slab-level ids
+  in lexicographic rank, so the stopword and alpha predicates run once per
+  distinct word. Counts are integer segment reductions, so every ratio is
+  one exact int ÷ int division. Repetition n-grams are grouped by hash
+  factorization of int64 keys.
+
+Differential tests (tests/test_property_differential.py) pin the batch
+kernel to the spec bit for bit, column by column. Change the two in
+lockstep only.
 
 The features become plain derived columns, so quality rules over them are
 ordinary compiled expectations (`expect_column_values_to_be_between` on
@@ -20,29 +26,26 @@ from __future__ import annotations
 
 import re
 from collections import Counter
+from operator import methodcaller
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pandas._libs.hashtable import Int64HashTable
 
 from dataqualityassistant_spark.functions.corpus import EN_STOPWORDS
 
-_STOPWORDS = sorted(EN_STOPWORDS)
 _NORM_RE = re.compile(r"(^[^a-z]+)|([^a-z]+$)")
 
-# Python-side whitespace matching Java's (?U)\s EXACTLY (the Unicode
-# White_Space property): Python's \s additionally matches the C0 separators
-# \x1c-\x1f (str.isspace() quirk), which Java does not — real crawl text
-# containing FS/GS/RS/US would otherwise tokenize differently on the JVM
-# expressions vs this mirror (and vs the fused scoring UDF). [^\S\x1c-\x1f]
-# = "whitespace minus \x1c-\x1f". str.strip() has the same quirk, so line
-# trimming uses the same class instead of .strip().
+# Whitespace matching Java's (?U)\s EXACTLY (the Unicode White_Space
+# property), the class the JVM-side html collapse uses too: Python's \s
+# additionally matches the C0 separators \x1c-\x1f (str.isspace() quirk),
+# which Java does not. [^\S\x1c-\x1f] = "whitespace minus \x1c-\x1f".
+# str.strip() has the same quirk, so line trimming uses the same class
+# instead of .strip().
 PY_WS_RE = re.compile(r"[^\S\x1c-\x1f]+")
 _PY_WS_STRIP = re.compile(r"^[^\S\x1c-\x1f]+|[^\S\x1c-\x1f]+$")
 
-# Order matters for docs: these are the columns with_text_features adds.
+# Order matters for docs: the feature columns of the scored table.
 FEATURE_COLUMNS = [
     "n_chars",
     "word_count",
@@ -62,77 +65,15 @@ FEATURE_COLUMNS = [
 ]
 
 
-def _norm_word(w: Column) -> Column:
-    # lowercase, strip leading/trailing non-letters (so "The," matches "the")
-    # — the ONE pattern shared with the pandas mirror (_NORM_RE), so the two
-    # sides cannot drift independently
-    return F.regexp_replace(F.lower(w), _NORM_RE.pattern, "")
-
-
-def text_feature_exprs(text_col: str = "text") -> dict[str, Column]:
-    t = F.col(text_col)
-    # (?U) = Java UNICODE_CHARACTER_CLASS so \s matches the same whitespace
-    # set as Python's re (e.g.   non-breaking space, ubiquitous in
-    # HTML-extracted text) — without it the JVM exprs and the pandas mirror
-    # tokenize unicode text differently
-    words = F.filter(F.split(t, r"(?U)\s+"), lambda w: w != F.lit(""))
-    wc = F.size(words)
-    # line trim matches the mirror's whitespace class (Unicode White_Space)
-    # — F.trim strips ASCII space ONLY, so a CRLF document's '\r' would
-    # survive here while the mirror stripped it (off-by-one line lengths,
-    # '\r'-only lines counted non-empty)
-    lines = F.filter(
-        F.transform(F.split(t, "\n"),
-                    lambda l: F.regexp_replace(l, r"(?U)^\s+|\s+$", "")),
-        lambda l: l != F.lit(""))
-    nl = F.size(lines)
-
-    def safe_ratio(num: Column, den: Column) -> Column:
-        return F.when(den > 0, num.cast("double") / den.cast("double"))
-
-    total_word_chars = F.aggregate(words, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w))
-    total_line_chars = F.aggregate(lines, F.lit(0).cast("long"), lambda acc, l: acc + F.length(l))
-
-    n_stop = F.size(F.filter(words, lambda w: _norm_word(w).isin(*_STOPWORDS)))
-    n_alpha = F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]")))
-    n_symbols = (
-        F.regexp_count(t, F.lit("#"))
-        + F.regexp_count(t, F.lit(r"\.\.\."))
-        + F.regexp_count(t, F.lit("…"))
-    )
-    n_bullet = F.size(F.filter(lines, lambda l: l.rlike(r"^[-*•·]")))
-    n_ellipsis = F.size(F.filter(lines, lambda l: l.rlike(r"(\.\.\.|…)$")))
-    n_distinct_lines = F.size(F.array_distinct(lines))
-
-    guard = t.isNotNull()
-
-    def g(expr: Column) -> Column:
-        return F.when(guard, expr)
-
-    return {
-        "n_chars": g(F.length(t)),
-        "word_count": g(wc),
-        "mean_word_length": g(safe_ratio(total_word_chars, wc)),
-        "stopword_ratio": g(safe_ratio(n_stop, wc)),
-        "symbol_word_ratio": g(safe_ratio(n_symbols, wc)),
-        "alpha_word_ratio": g(safe_ratio(n_alpha, wc)),
-        "n_lines": g(nl),
-        "mean_line_length": g(safe_ratio(total_line_chars, nl)),
-        "max_line_length": g(F.when(nl > 0, F.array_max(F.transform(lines, F.length)))),
-        "bullet_line_frac": g(safe_ratio(n_bullet, nl)),
-        "ellipsis_line_frac": g(safe_ratio(n_ellipsis, nl)),
-        "dup_line_frac": g(safe_ratio(nl - n_distinct_lines, nl)),
-    }
-
-
-# ---------------------------------------------------------------- repetition
+# ---------------------------------------------------------------- the spec
 
 def _repetition_counter(words: list[str], total_chars: int) -> tuple[float, float, float]:
-    """Counter-over-word-tuples reference implementation of the repetition
-    signals — the SPEC the vectorized path must match bit for bit (asserted
-    differentially in tests); also the dispatch target for tiny docs (numpy
-    overhead dominates) and for pathological vocabularies (id-packing
-    overflow guard)."""
+    """(top_2gram_char_frac, top_3gram_char_frac, dup_5gram_char_frac).
+
+    Gopher-style repetition signals over word n-grams:
+      - fraction of characters contained in the single most frequent word
+        2-gram / 3-gram (when it occurs more than once);
+      - fraction of characters covered by 5-grams that occur ≥2 times."""
 
     def top_ngram_frac(n: int) -> float:
         if len(words) < n:
@@ -164,172 +105,14 @@ def _repetition_counter(words: list[str], total_chars: int) -> tuple[float, floa
     )
 
 
-#: below this word count the Counter path wins (numpy call overhead);
-#: above ~2M distinct tokens the base-V packing could overflow 63 bits
-_REP_NUMPY_MIN_WORDS = 48
-_REP_MAX_VOCAB = 2_000_000
-
-
-def repetition_features(text: str | None,
-                        words: list[str] | None = None) -> tuple[float, float, float]:
-    """(top_2gram_char_frac, top_3gram_char_frac, dup_5gram_char_frac).
-
-    Gopher-style repetition signals over word n-grams:
-      - fraction of characters contained in the single most frequent word
-        2-gram / 3-gram (when it occurs more than once);
-      - fraction of characters covered by 5-grams that occur ≥2 times.
-    Pure function shared by the Spark UDF and the pandas oracle.
-    ``words`` lets a caller that already tokenized (``_pandas_features_one``
-    on the fused hot path) skip the second full-text regex split.
-
-    Dispatches to a vectorized numpy path (~3x on web docs): words map to
-    first-occurrence integer ids (injective, so id-tuple equality ==
-    word-tuple equality), 2/3-grams pack into one base-V int64 key and
-    5-grams group via a bytewise void view of the id window matrix; counts
-    come from ``np.unique``; the count-tie break reconstructs the tied word
-    tuples and takes the lexicographic min, exactly like the Counter spec.
-    All counts/lengths are exact integers on both paths, converted to Python
-    ints before the final division — results are bit-identical to
-    :func:`_repetition_counter` (differential test over the corpus).
-    """
-    if not text:
-        return (float("nan"),) * 3
-    if words is None:
-        words = [w for w in PY_WS_RE.split(text) if w]
-    total_chars = sum(len(w) for w in words)
-    nw = len(words)
-    if total_chars == 0 or nw < 2:
-        return (0.0, 0.0, 0.0)
-    if nw < _REP_NUMPY_MIN_WORDS:
-        return _repetition_counter(words, total_chars)
-
-    import numpy as np
-
-    vocab: dict[str, int] = {}
-    setdef = vocab.setdefault
-    ids = np.fromiter((setdef(w, len(vocab)) for w in words),
-                      dtype=np.int64, count=nw)
-    V = len(vocab)
-    if V > _REP_MAX_VOCAB:
-        return _repetition_counter(words, total_chars)
-    lens = np.fromiter(map(len, words), dtype=np.int64, count=nw)
-
-    vocab_words = list(vocab)  # id -> word (insertion order)
-
-    def top_frac(n: int) -> float:
-        key = ids[: nw - n + 1]
-        for j in range(1, n):
-            key = key * V + ids[j : nw - n + 1 + j]
-        uq, counts = np.unique(key, return_counts=True)
-        cnt = int(counts.max())
-        if cnt < 2:
-            return 0.0
-        # decode tied keys back to word tuples (base-V digits, id -> word is
-        # a bijection) and take the lexicographic min, per the Counter spec
-        best = None
-        for k in uq[counts == cnt]:
-            k = int(k)
-            comp = []
-            for _ in range(n):
-                comp.append(k % V)
-                k //= V
-            g = tuple(vocab_words[i] for i in reversed(comp))
-            if best is None or g < best:
-                best = g
-        return cnt * sum(len(w) for w in best) / total_chars
-
-    def dup5_frac() -> float:
-        if nw < 5:
-            return 0.0
-        if V ** 5 < 2 ** 63:
-            key = ids[: nw - 4]
-            for j in range(1, 5):
-                key = key * V + ids[j : nw - 4 + j]
-            _, inv, counts = np.unique(key, return_inverse=True,
-                                       return_counts=True)
-        else:
-            # vocab too large to pack 5 base-V digits into 63 bits: group by
-            # the raw id window bytes instead (exact, slower generic sort)
-            win = np.lib.stride_tricks.sliding_window_view(
-                ids.astype(np.int32), 5)
-            keys = np.ascontiguousarray(win).view("V20").ravel()
-            _, inv, counts = np.unique(keys, return_inverse=True,
-                                       return_counts=True)
-        starts = np.flatnonzero(counts[inv] >= 2)
-        if starts.size == 0:
-            return 0.0
-        # mark [i, i+5) per flagged window via a difference array (window
-        # start indices are distinct, so plain fancy-index += is exact)
-        d = np.zeros(nw + 1, dtype=np.int64)
-        d[starts] += 1
-        d[starts + 5] -= 1
-        covered = np.cumsum(d[:-1]) > 0
-        return int(lens[covered].sum()) / total_chars
-
-    return (
-        min(top_frac(2), 1.0),
-        min(top_frac(3), 1.0),
-        min(dup5_frac(), 1.0),
-    )
-
-
-# Explicit DataType (not a DDL string): string return types are parsed at
-# decoration time and require an active SparkContext, which Python workers
-# importing this module don't have.
-_REP_TYPE = T.StructType(
-    [
-        T.StructField("top_2gram_char_frac", T.DoubleType()),
-        T.StructField("top_3gram_char_frac", T.DoubleType()),
-        T.StructField("dup_5gram_char_frac", T.DoubleType()),
-    ]
-)
-
-
-@pandas_udf(_REP_TYPE)
-def repetition_udf(texts: pd.Series) -> pd.DataFrame:
-    vals = texts.map(repetition_features)
-    return pd.DataFrame(
-        {
-            "top_2gram_char_frac": vals.map(lambda v: v[0]),
-            "top_3gram_char_frac": vals.map(lambda v: v[1]),
-            "dup_5gram_char_frac": vals.map(lambda v: v[2]),
-        }
-    )
-
-
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add all FEATURE_COLUMNS. One projection; Catalyst computes the shared
-    `words`/`lines` arrays once per output row via subexpression elimination."""
-    exprs = text_feature_exprs(text_col)
-    df = df.withColumns(exprs)
-    rep = repetition_udf(F.col(text_col))
-    return (
-        df.withColumn("__rep", rep)
-        .withColumns(
-            {
-                "top_2gram_char_frac": F.col("__rep.top_2gram_char_frac"),
-                "top_3gram_char_frac": F.col("__rep.top_3gram_char_frac"),
-                "dup_5gram_char_frac": F.col("__rep.dup_5gram_char_frac"),
-            }
-        )
-        .drop("__rep")
-    )
-
-
-# ---------------------------------------------------------------- pandas mirror
-
 _ALPHA_RE = re.compile("[A-Za-z]")
 _BULLET_RE = re.compile(r"^[-*•·]")
 _ELLIPSIS_RE = re.compile(r"(\.\.\.|…)$")
 
-#: per-word (is_stopword, has_alpha) memo. Both predicates are pure functions
-#: of the word string, and web-text vocabulary is Zipf — the hot head covers
-#: nearly every occurrence, so the per-word regex sub + set lookup (measured
-#: ~37% of the feature stage) collapses to one dict hit. Capped so a worker
-#: processing unbounded vocabulary (random strings) cannot grow it without
-#: limit (~100 MB at the cap); entries past the cap are computed uncached.
-_WORD_MEMO: dict[str, tuple[bool, bool]] = {}
-_WORD_MEMO_CAP = 1_000_000
+
+def _is_stopword(word: str) -> bool:
+    # lowercase, strip leading/trailing non-letters (so "The," matches "the")
+    return _NORM_RE.sub("", word.lower()) in EN_STOPWORDS
 
 
 def _pandas_features_one(text: str | None) -> dict:
@@ -343,38 +126,205 @@ def _pandas_features_one(text: str | None) -> dict:
     out["n_chars"] = len(text)
     out["word_count"] = wc
     out["n_lines"] = nl
+    total_wchars = sum(len(w) for w in words)
     if wc > 0:
-        total_wchars = sum(len(w) for w in words)
         out["mean_word_length"] = total_wchars / wc
-        n_stop = n_alpha = 0
-        memo = _WORD_MEMO
-        sub, search = _NORM_RE.sub, _ALPHA_RE.search
-        for w in words:
-            fl = memo.get(w)
-            if fl is None:
-                fl = (sub("", w.lower()) in EN_STOPWORDS,
-                      search(w) is not None)
-                if len(memo) < _WORD_MEMO_CAP:
-                    memo[w] = fl
-            n_stop += fl[0]
-            n_alpha += fl[1]
-        out["stopword_ratio"] = n_stop / wc
+        out["stopword_ratio"] = sum(_is_stopword(w) for w in words) / wc
         n_symbols = text.count("#") + len(re.findall(r"\.\.\.", text)) + text.count("…")
         out["symbol_word_ratio"] = n_symbols / wc
-        out["alpha_word_ratio"] = n_alpha / wc
+        out["alpha_word_ratio"] = sum(_ALPHA_RE.search(w) is not None for w in words) / wc
     if nl > 0:
         out["mean_line_length"] = sum(len(l) for l in lines) / nl
         out["max_line_length"] = max(len(l) for l in lines)
         out["bullet_line_frac"] = sum(1 for l in lines if _BULLET_RE.match(l)) / nl
         out["ellipsis_line_frac"] = sum(1 for l in lines if _ELLIPSIS_RE.search(l)) / nl
         out["dup_line_frac"] = (nl - len(set(lines))) / nl
-    r2, r3, r5 = repetition_features(text, words)
-    out["top_2gram_char_frac"] = r2
-    out["top_3gram_char_frac"] = r3
-    out["dup_5gram_char_frac"] = r5
+    if not text:
+        rep = (float("nan"),) * 3
+    elif total_wchars == 0 or wc < 2:
+        rep = (0.0, 0.0, 0.0)
+    else:
+        rep = _repetition_counter(words, total_wchars)
+    out["top_2gram_char_frac"], out["top_3gram_char_frac"], out["dup_5gram_char_frac"] = rep
     return out
 
 
 def pandas_text_features(texts: pd.Series) -> pd.DataFrame:
-    """Oracle-side mirror of with_text_features (used to freeze labels)."""
+    """Oracle-side features: the spec, one document at a time."""
     return pd.DataFrame([_pandas_features_one(t) for t in texts], index=texts.index)
+
+
+# ---------------------------------------------------------------- batch kernel
+
+#: Words per slab of :func:`text_features_batch` (a longer document is a
+#: slab of its own). It bounds the kernel's transient arrays and word lists;
+#: sized from measured worker RSS and µs/doc (CHANGES.md). It also keeps
+#: every n-gram key below 2**63: a slab of several documents has
+#: V <= 2**16 distinct words, so (doc·V + w)·V + w < docs · 2**32; a
+#: single-document slab of N words has keys below N².
+_SLAB_WORDS = 1 << 16
+
+_TOKEN_RE = re.compile(r"[\S\x1c-\x1f]+")
+_C0_SEPARATORS = ("\x1c", "\x1d", "\x1e", "\x1f")
+# PY_WS_RE's set as a str.strip() argument. No White_Space character lies
+# above U+3000 (pinned by a test over every codepoint).
+_WS_CHARS = "".join(PY_WS_RE.findall("".join(map(chr, range(0x3001)))))
+_is_bullet = methodcaller("startswith", ("-", "*", "•", "·"))
+_is_ellipsis = methodcaller("endswith", ("...", "…"))
+_REPETITION = ("top_2gram_char_frac", "top_3gram_char_frac", "dup_5gram_char_frac")
+
+
+def _tokenize(text: str) -> list[str]:
+    """The spec's words: ``PY_WS_RE.split`` without empty strings.
+    ``str.split()`` splits on the same set plus \\x1c-\\x1f, so it serves
+    every text without those."""
+    if any(c in text for c in _C0_SEPARATORS):
+        return _TOKEN_RE.findall(text)
+    return text.split()
+
+
+def _lens(items) -> np.ndarray:
+    return np.fromiter(map(len, items), np.int64, len(items))
+
+
+def _flags(pred, items) -> np.ndarray:
+    return np.fromiter(map(pred, items), bool, len(items))
+
+
+def _offsets(lengths: np.ndarray) -> np.ndarray:
+    return np.concatenate(([0], np.cumsum(lengths)))
+
+
+def _seg_sums(x: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+    """Integer sums of ``x`` over [offsets[i], offsets[i+1]) (exact, and 0
+    for an empty segment)."""
+    c = _offsets(x)
+    return c[offsets[1:]] - c[offsets[:-1]]
+
+
+def _factorize(keys: np.ndarray) -> np.ndarray:
+    """Hash labels of int64 keys, numbered by first occurrence."""
+    return Int64HashTable(len(keys)).factorize(keys)[1]
+
+
+def text_features_batch(texts: list[str | None]) -> dict[str, np.ndarray]:
+    """Batch form of :func:`_pandas_features_one`: FEATURE_COLUMNS as
+    float64 arrays, NaN where the spec gives None or NaN, every other value
+    bit-identical to the spec. Every reduction is per document, so a row
+    does not depend on the batch or slab its document lands in."""
+    out = {c: np.full(len(texts), np.nan) for c in FEATURE_COLUMNS}
+    rows: list[int] = []
+    toks: list[list[str]] = []
+    n_words = 0
+    for i, text in enumerate(texts):
+        if text is None:
+            continue
+        words = _tokenize(text)
+        if rows and n_words + len(words) > _SLAB_WORDS:
+            _features_slab(out, rows, toks, texts)
+            rows, toks, n_words = [], [], 0
+        rows.append(i)
+        toks.append(words)
+        n_words += len(words)
+    if rows:
+        _features_slab(out, rows, toks, texts)
+    return out
+
+
+def _features_slab(out: dict, rows: list[int], toks: list[list[str]], texts) -> None:
+    texts = [texts[i] for i in rows]
+    rows = np.asarray(rows)
+    n_chars = _lens(texts)
+    wc = _lens(toks)
+    out["n_chars"][rows] = n_chars
+    out["word_count"][rows] = wc
+
+    lines = [[l for l in (s.strip(_WS_CHARS) for s in t.split("\n")) if l] for t in texts]
+    nl = _lens(lines)
+    out["n_lines"][rows] = nl
+    flat = [l for ls in lines for l in ls]
+    if flat:
+        offs, has = _offsets(nl), nl > 0
+        r, n = rows[has], nl[has]
+        line_len = _lens(flat)
+        out["mean_line_length"][r] = _seg_sums(line_len, offs)[has] / n
+        out["max_line_length"][r] = np.maximum.reduceat(line_len, offs[:-1][has])
+        out["bullet_line_frac"][r] = _seg_sums(_flags(_is_bullet, flat), offs)[has] / n
+        out["ellipsis_line_frac"][r] = _seg_sums(_flags(_is_ellipsis, flat), offs)[has] / n
+        distinct = np.fromiter(map(len, map(set, lines)), np.int64, len(lines))
+        out["dup_line_frac"][r] = (n - distinct[has]) / n
+
+    for c in _REPETITION:  # the spec's 0.0 for a non-empty text; NaN for ""
+        out[c][rows[n_chars > 0]] = 0.0
+    words = [w for ws in toks for w in ws]
+    if not words:
+        return
+    vocab = sorted(set(words))
+    w = np.fromiter(map(dict(zip(vocab, range(len(vocab)))).__getitem__, words),
+                    np.int64, len(words))
+    offs, has = _offsets(wc), wc > 0
+    r, n = rows[has], wc[has]
+    word_len = _lens(vocab)[w]
+    chars = _seg_sums(word_len, offs)
+    out["mean_word_length"][r] = chars[has] / n
+    out["stopword_ratio"][r] = _seg_sums(_flags(_is_stopword, vocab)[w], offs)[has] / n
+    alpha = _flags(lambda v: _ALPHA_RE.search(v) is not None, vocab)
+    out["alpha_word_ratio"][r] = _seg_sums(alpha[w], offs)[has] / n
+    symbols = np.fromiter((t.count("#") + t.count("...") + t.count("…") for t in texts),
+                          np.int64, len(texts))
+    out["symbol_word_ratio"][r] = symbols[has] / n
+    _repetition_slab(out, rows, w, len(vocab), wc, offs, word_len, chars)
+
+
+def _repetition_slab(out, rows, w, V, wc, offs, word_len, chars) -> None:
+    """The spec's repetition signals for every document of a slab at once.
+
+    An n-gram's key is its (n-1)-gram's hash label · V + its last word, so
+    keys are exact (injective) int64s and grams never span documents (the
+    first key holds the document). An n-gram can only repeat where its
+    prefix (n-1)-gram does, so each level keeps only those start positions.
+    """
+    doc = np.repeat(np.arange(len(wc)), wc)
+    left = offs[1:][doc] - np.arange(len(w))  # words from each position to its doc's end
+    at, key = np.arange(len(w)), doc * V + w
+    for n in (2, 3, 4, 5):
+        fits = left[at] >= n
+        at, key = at[fits], key[fits]
+        if at.size == 0:
+            return
+        labels = _factorize(key * V + w[at + n - 1])
+        counts = np.bincount(labels)
+        if n <= 3:
+            _top_ngram(out[f"top_{n}gram_char_frac"], rows, n, at, labels, counts,
+                       doc, w, word_len, chars)
+        repeats = counts[labels] >= 2
+        at, key = at[repeats], labels[repeats]
+    # `at` now holds the start of every 5-gram that occurs at least twice
+    if at.size:
+        d = np.zeros(len(w) + 1, np.int64)
+        d[at] += 1
+        d[at + 5] -= 1
+        covered = _seg_sums(np.where(np.cumsum(d[:-1]) > 0, word_len, 0), offs)
+        hit = covered > 0
+        out["dup_5gram_char_frac"][rows[hit]] = np.minimum(covered[hit] / chars[hit], 1.0)
+
+
+def _top_ngram(col, rows, n, at, labels, counts, doc, w, word_len, chars) -> None:
+    """Per document: ``count · chars(gram) / chars(doc)`` of its most
+    frequent n-gram, ties to the lexicographically smallest gram, where that
+    count is at least 2 (else the 0.0 already set)."""
+    # labels number groups by first occurrence, and documents are contiguous,
+    # so each group's first start and document come out in label order and
+    # groups are contiguous per document
+    first = at[np.flatnonzero(np.diff(np.maximum.accumulate(labels), prepend=-1))]
+    gdoc = doc[first]
+    starts = np.flatnonzero(np.diff(gdoc, prepend=-1))
+    best = np.repeat(np.maximum.reduceat(counts, starts), np.diff(starts, append=len(counts)))
+    cand = np.flatnonzero((counts == best) & (best >= 2))
+    # word ids are lexicographic ranks: sorting tied grams by their word ids
+    # puts each document's lexicographically smallest gram first
+    cand = cand[np.lexsort([w[first[cand] + j] for j in reversed(range(n))] + [gdoc[cand]])]
+    win = cand[np.diff(gdoc[cand], prepend=-1) != 0]
+    p, d = first[win], gdoc[win]
+    gram_chars = sum(word_len[p + j] for j in range(n))
+    col[rows[d]] = np.minimum(counts[win] * gram_chars / chars[d], 1.0)

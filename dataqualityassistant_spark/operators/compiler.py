@@ -224,7 +224,7 @@ def _python_regex_match_col(column: str, pattern: str) -> Column:
 
     # DataType OBJECT, not a DDL string: DDL parsing needs an active
     # SparkContext, which executor-side module imports don't have (repo-wide
-    # hard constraint; see langid.py/text_features.py).
+    # hard constraint; see langid.py).
     @pandas_udf(T.BooleanType())
     def _match(s: pd.Series) -> pd.Series:
         rx = re.compile(pattern)

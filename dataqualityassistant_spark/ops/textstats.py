@@ -73,7 +73,7 @@ def remove_repeated_lines(col: Column | str, split_regex: str = r"\n",
 
 def quality_score_expr() -> Column:
     """Composite 0..1 quality score over the derived feature columns
-    (requires with_text_features upstream): equal-weight blend of
+    (requires with_text_scores upstream): equal-weight blend of
     stopword presence, alphabetic density, length adequacy, and
     non-repetitiveness. A cheap single-number ranking signal."""
     stop = F.least(F.coalesce(F.col("stopword_ratio") / 0.3, F.lit(0.0)), F.lit(1.0))

@@ -1,8 +1,9 @@
 """Pandas oracle for the web-text quality filter.
 
-Computes the same derived features (via the pandas mirror in
-``text_features``, and the very same pure Python functions the Spark UDFs
-wrap for langid / perplexity / repetition), applies the same rule suite
+Computes the same derived features with the per-document scalar spec
+(``text_features._pandas_features_one``, ``langid.classify_text``,
+``perplexity.log_perplexity``) that differential tests pin the Spark UDF's
+batch kernels to, applies the same rule suite
 through :mod:`oracle`'s reference-semantics evaluator, and scrubs with the
 Python-re reference chain. Used to freeze golden keep/drop labels and
 byte-exact scrubbed text; the Spark pipeline must reproduce them at

@@ -6,7 +6,7 @@ bounds, mostly extremes)."""
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from dataqualityassistant_spark import Rule, run_suite
@@ -384,9 +384,17 @@ _TEXT_ALPHABET = st.characters(
 )
 
 
+_OOV = "".join(chr(0x4E00 + i) for i in range(2500))
+
+
 @settings(max_examples=60, deadline=None)
 @given(st.lists(st.one_of(st.none(), st.text(_TEXT_ALPHABET, max_size=400)),
                 min_size=0, max_size=8))
+# many distinct out-of-vocabulary characters, text past the 2000-char cap,
+# lone surrogates, and more documents than one 64-document langid slab
+@example([_OOV, " ".join(f"the {chr(0x0400 + i)}{chr(0x3040 + i)} cat" for i in range(400)),
+          "the quick brown fox " * 150, _OOV[:11], "\udcff" * 30 + _OOV]
+         + [f"the cat sat on the mat {i} times, der Hund schläft" for i in range(140)])
 def test_langid_batch_matches_scalar(docs):
     from dataqualityassistant_spark.functions.langid import (
         classify_batch,
@@ -415,8 +423,9 @@ def test_perplexity_batch_matches_scalar(docs):
 
 
 def test_langid_ppl_batch_surrogate_fallback():
-    """Lone surrogates cannot encode to UTF-32; the batch kernels must fall
-    back to the scalar slicing path, not crash."""
+    """Lone surrogates cannot encode to strict UTF-32: langid encodes them
+    with ``surrogatepass``, perplexity falls back to the scalar slicing
+    path. Neither may crash or differ from its spec."""
     from dataqualityassistant_spark.functions.langid import (
         classify_batch,
         classify_text,
@@ -431,19 +440,51 @@ def test_langid_ppl_batch_surrogate_fallback():
     assert log_perplexity_batch([t]) == [log_perplexity(t)]
 
 
+def _assert_features_match_spec(texts, got):
+    """Batch features == ``_pandas_features_one``, column by column, bit for
+    bit; the spec's None and NaN are the batch kernel's NaN."""
+    import math
+
+    from dataqualityassistant_spark.functions.text_features import (
+        FEATURE_COLUMNS,
+        _pandas_features_one,
+    )
+
+    want = [_pandas_features_one(t) for t in texts]
+    for col in FEATURE_COLUMNS:
+        assert len(got[col]) == len(texts)
+        for t, row, g in zip(texts, want, got[col]):
+            w = row[col]
+            if w is None or (isinstance(w, float) and math.isnan(w)):
+                assert math.isnan(g), (col, t, w, g)
+            else:
+                assert g == w, (col, t, w, g)
+
+
+def _assert_rows_match_alone(texts, got):
+    """Each row of a batch result equals its document scored alone."""
+    from dataqualityassistant_spark.functions.text_features import text_features_batch
+
+    for i, t in enumerate(texts):
+        alone = text_features_batch([t])
+        for col, values in got.items():
+            v, a = values[i], alone[col][0]
+            assert v == a or (v != v and a != a), (col, t, v, a)
+
+
 @settings(max_examples=80, deadline=None)
 @given(st.lists(st.sampled_from(["aa", "bb", "cc", "dd", "ee", "x", "longword",
                                  "Tie", "tie", "zz-1", "…"]),
                 min_size=0, max_size=120),
        st.integers(0, 3))
 def test_repetition_numpy_matches_counter_spec(words, pad):
-    """The vectorized repetition path (base-V packing + np.unique + key
-    decode) must equal the Counter-over-word-tuples spec exactly, including
-    count-tie lexicographic gram selection. Long inputs force the numpy
-    path; `pad` appends unique words to vary the vocabulary."""
+    """The batch kernel's repetition signals (hash-grouped n-gram keys, the
+    count-tie lexicographic gram selection) must equal the
+    Counter-over-word-tuples spec exactly. `pad` appends unique words to
+    vary the vocabulary."""
     from dataqualityassistant_spark.functions.text_features import (
         _repetition_counter,
-        repetition_features,
+        text_features_batch,
     )
 
     words = words + [f"uniq{i}" for i in range(pad * 30)]
@@ -453,18 +494,111 @@ def test_repetition_numpy_matches_counter_spec(words, pad):
     total = sum(len(w) for w in words)
     want = ((0.0, 0.0, 0.0) if total == 0 or len(words) < 2
             else _repetition_counter(words, total))
-    assert repetition_features(text) == want
+    got = text_features_batch([text])
+    assert tuple(got[c][0] for c in ("top_2gram_char_frac", "top_3gram_char_frac",
+                                     "dup_5gram_char_frac")) == want
 
 
-def test_repetition_void_fallback_matches_counter_spec():
-    """A >6208-word vocabulary overflows 5-digit base-V packing; the void-
-    view grouping fallback must still equal the Counter spec."""
+def test_repetition_large_vocabulary_matches_counter_spec():
+    """A 7000-word vocabulary (5 base-V digits would overflow 63 bits) must
+    still equal the Counter spec, alone and next to other documents."""
     from dataqualityassistant_spark.functions.text_features import (
         _repetition_counter,
-        repetition_features,
+        text_features_batch,
     )
 
     words = [f"w{i}" for i in range(7000)] + [f"w{i}" for i in range(600)]
     text = " ".join(words)
     want = _repetition_counter(words, sum(len(w) for w in words))
-    assert repetition_features(text) == want
+    for batch in ([text], ["a b a b", text, "c d c d c"]):
+        got = text_features_batch(batch)
+        i = batch.index(text)
+        assert (got["top_2gram_char_frac"][i], got["top_3gram_char_frac"][i],
+                got["dup_5gram_char_frac"][i]) == want
+
+
+# words that stress the kernel: case and punctuation for the stopword
+# normalization, bullets / ellipses / symbols, non-ASCII, lone surrogates,
+# NUL and the C0 separators \x1c-\x1f (not whitespace for PY_WS_RE)
+_FEATURE_WORDS = st.sampled_from([
+    "the", "The,", "(and)", "a", "b", "aa", "x1", "42", "#tag", "...", "…",
+    "wait...", "-dash", "*star", "•", "·dot", "héllo", "wörld", "日本語",
+    "\udcff", "a\udcffb", "x\x00y", "a\x1cb", "\x1d", "zz-1", "Tie", "tie",
+])
+_FEATURE_SEPS = st.sampled_from([
+    " ", "  ", "\n", "\r\n", "\n\n", " \n ", "\t", "\xa0", "\x85", "\u2009",
+    "\u3000", "\x0b", "\x1c", "\x1f",
+])
+
+
+@st.composite
+def _feature_doc(draw):
+    words = draw(st.lists(_FEATURE_WORDS, max_size=70))
+    seps = draw(st.lists(_FEATURE_SEPS, min_size=len(words) + 1,
+                         max_size=len(words) + 1))
+    return seps[0] + "".join(w + sep for w, sep in zip(words, seps[1:]))
+
+
+_feature_docs = st.lists(st.one_of(
+    st.none(),
+    st.just(""),
+    st.text(st.sampled_from(" \t\n\r\xa0\x85\u2028\u3000\x1c"), max_size=6),
+    _feature_doc(),
+    st.text(max_size=120),
+), max_size=10)
+
+
+@settings(max_examples=150, deadline=None)
+@given(_feature_docs)
+def test_feature_batch_matches_scalar_spec(docs):
+    """text_features_batch == _pandas_features_one on None, "", whitespace-
+    only text, short docs, count ties and unusual code points."""
+    from dataqualityassistant_spark.functions.text_features import text_features_batch
+
+    _assert_features_match_spec(docs, text_features_batch(docs))
+
+
+@settings(max_examples=40, deadline=None)
+@given(_feature_docs, st.integers(min_value=1, max_value=40))
+def test_feature_row_independent_of_batch_and_slab(docs, slab_words):
+    """A document's row is the same alone and anywhere in a batch cut into
+    slabs of any size."""
+    from unittest import mock
+
+    from dataqualityassistant_spark.functions import text_features
+
+    with mock.patch.object(text_features, "_SLAB_WORDS", slab_words):
+        got = text_features.text_features_batch(docs)
+    _assert_rows_match_alone(docs, got)
+
+
+def test_feature_rows_across_a_real_slab_boundary():
+    """Fixture pages past the default slab size: every row equals the spec
+    and the same document scored alone."""
+    from dataqualityassistant_spark.fixtures import pages_batch
+    from dataqualityassistant_spark.functions.text_features import (
+        _SLAB_WORDS,
+        _tokenize,
+        text_features_batch,
+    )
+
+    texts = list(pages_batch(0, 320)["text"])
+    assert sum(len(_tokenize(t)) for t in texts if t) > _SLAB_WORDS
+    got = text_features_batch(texts)
+    _assert_features_match_spec(texts, got)
+    _assert_rows_match_alone(texts, got)
+
+
+def test_feature_whitespace_sets_cover_every_codepoint():
+    """The batch kernel's fast tokenizer and line-trim set agree with
+    PY_WS_RE over every code point."""
+    from dataqualityassistant_spark.functions.text_features import (
+        PY_WS_RE,
+        _WS_CHARS,
+        _tokenize,
+    )
+
+    every = "".join(map(chr, range(0x110000)))
+    assert "".join(PY_WS_RE.findall(every)) == _WS_CHARS
+    for text in ("a".join(every), "a".join(c for c in every if c not in "\x1c\x1d\x1e\x1f")):
+        assert _tokenize(text) == [w for w in PY_WS_RE.split(text) if w]

@@ -12,11 +12,11 @@ from dataqualityassistant_spark.fixtures import pages_batch, pages_spark_df, PAG
 from dataqualityassistant_spark.functions.corpus import LANG_SENTENCES
 from dataqualityassistant_spark.functions.langid import classify_text
 from dataqualityassistant_spark.functions.perplexity import log_perplexity
+from dataqualityassistant_spark.functions.scoring import with_text_scores
 from dataqualityassistant_spark.functions.scrub import scrub_text_column, scrub_text_python
 from dataqualityassistant_spark.functions.text_features import (
     FEATURE_COLUMNS,
     pandas_text_features,
-    with_text_features,
 )
 from dataqualityassistant_spark.plans.quality_filter import QualityFilterPipeline, default_webtext_rules
 from dataqualityassistant_spark.webtext_oracle import oracle_score_pages
@@ -36,7 +36,7 @@ def pages_sdf(spark, pages_pdf):
 
 def test_spark_features_match_pandas_mirror(spark, pages_pdf, pages_sdf):
     got = (
-        with_text_features(pages_sdf.select("url", "text"))
+        with_text_scores(pages_sdf.select("url", "text"))
         .orderBy("url")
         .toPandas()
         .set_index("url")
@@ -48,7 +48,7 @@ def test_spark_features_match_pandas_mirror(spark, pages_pdf, pages_sdf):
         g = got[col].astype(float)
         w = want[col].astype(float)
         both_nan = g.isna() & w.isna()
-        close = (g - w).abs() < 1e-9
+        close = g == w  # bit-identical: the UDF runs kernels pinned to the spec
         ok = (both_nan | close).all()
         assert ok, f"feature {col} mismatch: {got[col][~(both_nan | close)].head()} vs {w[~(both_nan | close)].head()}"
 
@@ -245,11 +245,12 @@ def test_pipeline_observe_metrics_equal_engine_metrics(spark, tmp_path):
                 assert by_key[k]["element"] == er["result"]["element_count"], k
 
 
-def test_jvm_features_match_mirror_on_unicode_whitespace(spark):
-    # non-breaking space / thin space: JVM (?U)\\s must tokenize like Python \\s
+def test_scored_features_match_mirror_on_unicode_whitespace(spark):
+    # non-breaking space / thin space / NEL split words like the mirror's
+    # Unicode White_Space class
     texts = ["foo\u00a0bar\u2009baz", "a\u00a0b", "tab\there", "nl\u0085end", None]
     sdf = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i: long, text: string")
-    got = with_text_features(sdf).orderBy("i").toPandas()
+    got = with_text_scores(sdf).orderBy("i").toPandas()
     want = pandas_text_features(pd.Series(texts))
     for col in ("word_count", "mean_word_length", "alpha_word_ratio"):
         g, w = got[col].astype(float), want[col].astype(float)
@@ -583,9 +584,10 @@ def test_stateful_stream_rejects_trigger_once_with_idle_timeout(spark, tmp_path)
 
 def test_feature_parity_on_control_and_unicode_whitespace(spark):
     """JVM (?U)\\s == Unicode White_Space; Python \\s additionally matches
-    \\x1c-\\x1f. The mirror now uses the exact Java set (PY_WS_RE), so CRLF,
-    NBSP, NEL, and C0-separator text must produce identical features on
-    both sides — these are exactly the inputs the fixture corpus lacks."""
+    \\x1c-\\x1f. The mirror uses the exact Java set (PY_WS_RE), so CRLF,
+    NBSP, NEL, and C0-separator text must produce identical features in the
+    scoring UDF and the mirror — these are exactly the inputs the fixture
+    corpus lacks."""
     from dataqualityassistant_spark.functions.html_text import (
         html_to_text_column,
         html_to_text_python,
@@ -601,12 +603,12 @@ def test_feature_parity_on_control_and_unicode_whitespace(spark):
         " \x1c lead\x1d trail \x1e ",
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text: string")
-    got = with_text_features(df).toPandas()
+    got = with_text_scores(df).toPandas()
     want = pandas_text_features(pd.Series(texts))
     for col in FEATURE_COLUMNS:
         g = got[col].astype(float)
         w = want[col].astype(float).reset_index(drop=True)
-        ok = ((g.isna() & w.isna()) | ((g - w).abs() < 1e-9)).all()
+        ok = ((g.isna() & w.isna()) | (g == w)).all()
         assert ok, f"{col}: spark={list(g)} mirror={list(w)}"
     # html collapse byte parity on the same adversarial set
     hdf = spark.createDataFrame([(t.encode(),) for t in texts], "html: binary")
