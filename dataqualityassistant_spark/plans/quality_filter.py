@@ -21,10 +21,10 @@ Common-Crawl-style pages ``(url, warc_ts, html, text, lang)``:
    watermarks for idempotent resume.
 
 Scale design (10^12 docs, 1000 executors):
-- the whole hot path is scan → project (codegen + two Arrow UDF stages) →
-  write: **no shuffle at all** on the main data path;
-- metrics ride the write via ``observe`` (AccumulatorV2 under the hood);
-- lineage/domain stats aggregate only tiny projections of the output;
+- the hot path is scan → project (codegen + the fused Arrow UDF stage) →
+  ONE shuffle onto ``min(buckets, shuffle_parallelism)`` write tasks → write;
+- metrics, row/kept counts and the watermark ride the write via ``observe``;
+- lineage is one read-back of a 3-column projection of the written buckets;
 - host-domain skew never concentrates work because per-domain aggregation
   is two-phase (salt → partial agg → final agg);
 - resume is per-bucket: dynamic partition overwrite + watermark records.
@@ -33,16 +33,29 @@ Scale design (10^12 docs, 1000 executors):
 from __future__ import annotations
 
 import time
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dataqualityassistant_spark.rules import Rule
+from dataqualityassistant_spark.session import shuffle_parallelism
 from dataqualityassistant_spark.operators.engine import SuiteEngine
 from dataqualityassistant_spark.functions.scoring import with_text_scores
 from dataqualityassistant_spark.functions.scrub import scrub_text_column
 from dataqualityassistant_spark.streaming.checkpoint import CheckpointStore
+
+
+def shuffle_to_buckets(df: DataFrame, buckets: Sequence[int]) -> DataFrame:
+    """Shuffle rows for a ``partitionBy("part_bucket")`` write: the k-th of
+    ``buckets`` goes to task k mod ``min(len(buckets), shuffle_parallelism)``,
+    so each bucket is one task's (one file per bucket, no fan-out writer).
+    Not ``part_bucket mod n``: a resumed or multi-wave run holds a strided
+    subset (0, 2, 4, …) that would leave half the tasks empty."""
+    n = min(len(buckets), shuffle_parallelism(df))
+    slot = F.array_position(F.array(*map(F.lit, buckets)), F.col("part_bucket")) - 1
+    return df.repartitionById(n, slot.cast("int"))
 
 
 def default_webtext_rules() -> list[Rule]:
@@ -107,13 +120,6 @@ class QualityFilterPipeline:
     n_buckets: int = 64          # url-hash partition groups (resume granularity)
     domain_salt: int = 16        # salt fan-out for per-domain aggregation
     reference_parity: bool = False
-    # Shuffle rows onto their bucket before the partitioned write. Without
-    # this every task holds an open writer per bucket (fan-out writer):
-    # measured 110s vs 19s at 32 cores on this box, and at cluster scale the
-    # fan-out path means tasks×buckets small files + writer memory. With it,
-    # each write task handles ~one bucket. Size n_buckets so a bucket fits a
-    # task (e.g. rows/bucket ≈ a few hundred MB) at the target scale.
-    shuffle_before_write: bool = True
     # Fill missing `text` from the html payload (JVM regexp chain, byte-
     # identical to the Python oracle — functions/html_text.py) before
     # scoring. Off by default: the input contract provides text, and reading
@@ -255,12 +261,12 @@ class QualityFilterPipeline:
     ) -> dict:
         """Execute the pipeline with per-bucket checkpointed waves.
 
-        Each wave = one Spark job: score pending buckets → write output
-        partitions (dynamic overwrite ⇒ idempotent re-run) → observe()
-        yields the rule metrics for free → lineage from a 3-column scan of
-        the just-written partitions → watermark record committed last.
-        ``max_buckets`` processes only a prefix of pending buckets (used by
-        the kill-and-resume test to simulate a mid-run crash).
+        Each wave: score pending buckets → shuffle onto write tasks → write
+        output partitions (dynamic overwrite ⇒ idempotent re-run), whose
+        observe() yields the rule metrics, row/kept counts and watermark →
+        metrics → lineage (one read-back, only with ``lineage_path``) →
+        watermark record committed last. ``max_buckets`` processes only a
+        prefix of pending buckets (the kill-and-resume test's mid-run crash).
         """
         # dynamic partition overwrite is set PER WRITER below, never on the
         # session: a session-wide conf.set would silently change overwrite
@@ -288,14 +294,15 @@ class QualityFilterPipeline:
             scored = self.score(pages).filter(F.col("part_bucket").isin(buckets))
 
             obs = Observation(f"metrics-{run_id}-{wave_idx}")
-            observed = scored.observe(obs, *self.metric_aggs(metric_masks))
+            observed = scored.observe(
+                obs, *self.metric_aggs(metric_masks),
+                F.sum(F.col("verdict").cast("long")).alias("kept"),
+                F.max("warc_ts").alias("watermark"))
             drop = [c for c in self.output_drop_columns if c in observed.columns]
             if drop:
                 observed = observed.drop(*drop)
-            if self.shuffle_before_write:
-                observed = observed.repartition(len(buckets), F.col("part_bucket"))
 
-            (observed.write.mode("overwrite")
+            (shuffle_to_buckets(observed, buckets).write.mode("overwrite")
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy("part_bucket")
              .parquet(output_path))
@@ -326,42 +333,30 @@ class QualityFilterPipeline:
                  .partitionBy("run_id", "wave")
                  .parquet(metrics_path))
 
-            # lineage: per-bucket counts + warc_ts watermark from the freshly
-            # written partitions (2-column pruned scan, bucket-pruned read).
-            if element_count == 0:
-                # empty wave: nothing written (parquet emits no files), so
-                # there is nothing to read back — just checkpoint the buckets.
-                if store:
-                    store.mark_completed(run_id, wave_key, buckets,
-                                         {"rows": 0, "kept": 0, "watermark": None})
-                continue
-            out = spark.read.parquet(output_path).filter(F.col("part_bucket").isin(buckets))
-            lineage = (
-                out.groupBy("part_bucket")
-                .agg(
-                    F.count(F.lit(1)).alias("rows"),
-                    F.sum(F.col("verdict").cast("long")).alias("kept"),
-                    F.max("warc_ts").alias("watermark"),
-                )
-                .withColumn("run_id", F.lit(run_id))
-                .withColumn("wave", F.lit(wave_key))
-            )
-            lineage_rows = lineage.collect()
-            if lineage_path:
-                # per-wave dynamic partition overwrite, like metrics: a wave
-                # re-run after a crash-between-lineage-and-checkpoint
-                # replaces its partition instead of duplicating rows
-                (lineage.write.mode("overwrite")
+            # lineage: per-bucket counts + warc_ts watermark, read back from
+            # the written buckets (3-column pruned, bucket-pruned scan) and
+            # written in the same job. An empty wave wrote no files, so there
+            # is nothing to read. Per-wave dynamic partition overwrite, like
+            # metrics: a wave re-run after a crash before its checkpoint
+            # replaces its partition instead of duplicating rows.
+            if lineage_path and element_count:
+                (spark.read.parquet(output_path)
+                 .filter(F.col("part_bucket").isin(buckets))
+                 .groupBy("part_bucket")
+                 .agg(F.count(F.lit(1)).alias("rows"),
+                      F.sum(F.col("verdict").cast("long")).alias("kept"),
+                      F.max("warc_ts").alias("watermark"))
+                 .withColumn("run_id", F.lit(run_id))
+                 .withColumn("wave", F.lit(wave_key))
+                 .write.mode("overwrite")
                  .option("partitionOverwriteMode", "dynamic")
                  .partitionBy("run_id", "wave")
                  .parquet(lineage_path))
 
             if store:
-                kept = sum(r["kept"] or 0 for r in lineage_rows)
-                rows = sum(r["rows"] for r in lineage_rows)
-                watermark = max((r["watermark"] for r in lineage_rows if r["watermark"]), default=None)
+                watermark = row["watermark"]
                 store.mark_completed(run_id, wave_key, buckets, {
-                    "rows": int(rows), "kept": int(kept),
+                    "rows": element_count, "kept": int(row["kept"] or 0),
                     "watermark": watermark.isoformat() if watermark else None,
                 })
 

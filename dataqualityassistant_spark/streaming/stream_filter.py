@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dataqualityassistant_spark.fixtures import PAGES_SCHEMA
-from dataqualityassistant_spark.plans.quality_filter import QualityFilterPipeline
+from dataqualityassistant_spark.plans.quality_filter import QualityFilterPipeline, shuffle_to_buckets
 
 
 def make_batch_processor(
@@ -62,11 +62,10 @@ def make_batch_processor(
         drop = [c for c in pipe.output_drop_columns if c in scored.columns]
         if drop:
             scored = scored.drop(*drop)
-        if pipe.shuffle_before_write:
-            scored = scored.repartition(pipe.n_buckets, F.col("part_bucket"))
         # batch_id partitioning + dynamic overwrite = idempotent replay:
         # a re-delivered micro-batch overwrites ONLY its own partitions
-        (scored.withColumn("batch_id", F.lit(batch_id))
+        (shuffle_to_buckets(scored, range(pipe.n_buckets))
+         .withColumn("batch_id", F.lit(batch_id))
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("batch_id", "part_bucket")

@@ -10,8 +10,9 @@ from pyspark.sql import functions as F
 
 from dataqualityassistant_spark import Rule
 from dataqualityassistant_spark.operators.engine import SuiteEngine
-from dataqualityassistant_spark.plans.quality_filter import QualityFilterPipeline
-from dataqualityassistant_spark.fixtures import pages_batch, PAGES_SCHEMA
+from dataqualityassistant_spark.plans.quality_filter import QualityFilterPipeline, shuffle_to_buckets
+from dataqualityassistant_spark.fixtures import pages_batch, pages_spark_df, PAGES_SCHEMA
+from dataqualityassistant_spark.session import shuffle_parallelism
 
 SF = "/root/testdata/sf0.01"
 
@@ -80,6 +81,49 @@ def test_pipeline_score_has_no_shuffle_and_prunes_html(spark):
     assert "Exchange" not in plan  # scan → project → UDF stage: NO shuffle
     read = [l for l in plan.splitlines() if "ReadSchema" in l][0]
     assert "html" not in read  # binary payload never read
+
+
+@pytest.mark.parametrize("n_buckets", [8, 16])
+def test_pipeline_write_is_one_task_per_core_one_file_per_bucket(spark, tmp_path, n_buckets):
+    """The commit shuffles a wave's buckets into min(len(buckets),
+    shuffle_parallelism) write tasks, not one task per bucket, and every
+    part_bucket= directory still holds exactly one parquet file."""
+    import os
+
+    pages = pages_spark_df(spark, 400, partitions=4)
+    n = min(n_buckets, shuffle_parallelism(pages))
+    out = tmp_path / "out"
+    sc = spark.sparkContext
+    sc.setJobGroup("write-shape", "pipeline run")
+    try:
+        QualityFilterPipeline(n_buckets=n_buckets).run(spark, pages, str(out))
+        st = sc.statusTracker()
+        stage_tasks = [st.getStageInfo(s).numTasks
+                       for j in st.getJobIdsForGroup("write-shape")
+                       for s in st.getJobInfo(j).stageIds]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the scan stage has 4 tasks; the write stage after the exchange has n
+    assert max(stage_tasks) == n, stage_tasks
+    for b in range(n_buckets):
+        files = [f for f in os.listdir(out / f"part_bucket={b}") if f.endswith(".parquet")]
+        assert len(files) == 1, (b, files)
+
+
+def test_strided_wave_fills_every_write_task(spark):
+    """A resumed or multi-wave run commits a strided bucket subset; placing
+    by the bucket's index in the wave (not part_bucket mod n) puts rows in
+    every write task and each bucket in exactly one."""
+    pipe = QualityFilterPipeline(n_buckets=8)
+    scored = pipe.score(pages_spark_df(spark, 400, partitions=4))
+    for buckets in ([0, 2, 4, 6], [1, 3, 5, 7], [2, 4, 6], list(range(8))):
+        wave = scored.filter(F.col("part_bucket").isin(buckets))
+        placed = (shuffle_to_buckets(wave, buckets)
+                  .select(F.spark_partition_id().alias("pid"), "part_bucket")
+                  .distinct().collect())
+        n = min(len(buckets), shuffle_parallelism(scored))
+        assert {r["pid"] for r in placed} == set(range(n)), (buckets, placed)
+        assert sorted(r["part_bucket"] for r in placed) == sorted(buckets)
 
 
 def test_topk_uses_take_ordered(spark):

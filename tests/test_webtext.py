@@ -292,6 +292,42 @@ def test_resume_lineage_metrics_no_duplicates(spark, tmp_path):
     assert metrics.select("wave").distinct().count() == 2
 
 
+def test_checkpoint_stats_reconcile_with_lineage(spark, tmp_path):
+    """Checkpoint records take rows/kept/watermark from the write's observe();
+    on a crashed-then-resumed multi-wave run each wave's record must equal
+    the lineage table's sums and max for that wave, and the totals must
+    equal run()'s rows and every metric's element_count."""
+    from dataqualityassistant_spark.streaming.checkpoint import CheckpointStore
+
+    pages = pages_spark_df(spark, 400, partitions=4)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    lin, met = str(tmp_path / "lineage"), str(tmp_path / "metrics")
+    pipe = QualityFilterPipeline(n_buckets=8)
+    kw = dict(lineage_path=lin, metrics_path=met, checkpoint_path=ckpt, run_id="r")
+    s1 = pipe.run(spark, pages, out, max_buckets=3, **kw)
+    s2 = pipe.run(spark, pages, out, waves=2, **kw)
+
+    records = CheckpointStore(ckpt).records("r")
+    assert [r["wave"] for r in records] == [0, 1, 2]
+    lineage = {
+        r["wave"]: r for r in spark.read.parquet(lin).groupBy("wave").agg(
+            F.sum("rows").alias("rows"), F.sum("kept").alias("kept"),
+            F.max("watermark").alias("watermark")).collect()
+    }
+    for rec in records:
+        got = lineage[rec["wave"]]
+        assert rec["rows"] == got["rows"] and rec["kept"] == got["kept"], (rec, got)
+        assert rec["watermark"] == got["watermark"].isoformat(), (rec, got)
+    assert sum(r["rows"] for r in records) == s1["rows"] + s2["rows"] == 400
+    rows_by_wave = {rec["wave"]: rec["rows"] for rec in records}
+    metric_rows = spark.read.parquet(met).select("wave", "element_count").collect()
+    assert {r["wave"] for r in metric_rows} == set(rows_by_wave)
+    for m in metric_rows + s1["metrics"] + s2["metrics"]:
+        assert m["element_count"] == rows_by_wave[m["wave"]], m
+    kept = spark.read.parquet(out).agg(F.sum(F.col("verdict").cast("long"))).first()[0]
+    assert sum(r["kept"] for r in records) == kept
+
+
 def test_streaming_filter_exactly_once(spark, tmp_path):
     """readStream -> foreachBatch(score+write): drain with availableNow,
     then add more files and drain again — streaming checkpoint must process
