@@ -5,8 +5,8 @@ Four strategies, each with a distinct cost/recall profile at 10^12-doc scale:
 - **exact**: hash-groupBy on the full text. One shuffle keyed by a 64-bit
   hash (never the raw text — shuffle volume stays O(rows × 8B + survivors)).
 - **MinHash + LSH**: char-shingle MinHash signatures (Arrow-batched numpy),
-  banded into LSH buckets; only same-bucket pairs are candidates, so the
-  self-join is bucket-local instead of all-pairs. Signature agreement
+  banded into LSH buckets; only same-bucket pairs are candidates, so pair
+  building is bucket-local instead of all-pairs. Signature agreement
   estimates Jaccard for the final threshold.
 - **SimHash**: 64-bit fingerprints, Hamming-banded (4×16-bit chunks): near
   dups collide on at least one chunk by pigeonhole when hamming ≤ 3.
@@ -19,7 +19,8 @@ hashing numpy-side) — no Python ``hash()`` (salted per process) anywhere.
 
 from __future__ import annotations
 
-from functools import lru_cache
+import operator
+from functools import lru_cache, reduce
 
 import numpy as np
 import pandas as pd
@@ -165,18 +166,66 @@ def drop_near_duplicates(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
 DEFAULT_MAX_BUCKET_SIZE = 1000
 
 
-def _drop_hot_buckets(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
-    """Drop every row belonging to a bucket with more than ``cap`` members.
+def _collect_members(keys: list[str], *conds: Column) -> Column:
+    """``collect_list`` of the member ``m`` over rows meeting ``conds``. A
+    row with a null key is skipped, as the key join skips it; a filter
+    instead would push below an upstream Python UDF and run it twice."""
+    keep = [F.col(k).isNotNull() for k in keys] + list(conds)
+    return F.collect_list(F.when(reduce(operator.and_, keep), F.col("m")))
 
-    Implemented as a two-phase count aggregate (map-side partial combine)
-    filtered down to the hot buckets, anti-joined back — cheaper at scale
-    than a window count, which would sort every partition by the bucket
-    keys. The hot relation has at most rows/cap entries by construction, so
-    AQE picks a broadcast anti-join in all but adversarial cases."""
-    hot = (df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
-           .where(F.col("__n") > cap)
-           .select(*keys))
-    return df.join(hot, keys, "left_anti")
+
+def _capped_buckets(rows: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """``(*keys, __ms)``: the members ``m`` of every bucket holding at most
+    ``cap`` of them — the one groupBy behind :func:`bucket_pairs`' capped
+    self form (n-gram Jaccard also counts retained shingles from it)."""
+    return (rows.groupBy(*keys).agg(_collect_members(keys).alias("__ms"))
+            .where(F.size("__ms") <= cap))
+
+
+def bucket_pairs(left: DataFrame, keys: list[str], cap: int | None,
+                 right: DataFrame | None = None) -> DataFrame:
+    """Candidate pairs ``(a, b)`` of rows sharing a bucket — the pair
+    builder of every LSH family.
+
+    ``left`` (and ``right``) hold the bucket columns ``keys`` and a struct
+    member ``m`` whose first field is ``id``; ``a`` and ``b`` are members.
+    Self pairs (``right=None``) are ordered ``a.id < b.id``, so a duplicated
+    or null id never pairs with itself. Cross pairs are every ``left`` ×
+    ``right`` member of a bucket. A null key never pairs, and a pair sharing
+    several buckets comes once per bucket (a family folds the repeats with a
+    distinct, or counts them).
+
+    ``cap`` is the hot-bucket skew guard: a bucket with more than ``cap``
+    members (cross: more than ``cap`` ``right`` members) emits nothing. The
+    capped shape is ONE ``groupBy(keys)`` + ``collect_list`` with the pairs
+    exploded in place: ``left`` is read once, so a UDF upstream of the bucket
+    runs once, and no anti-join or self-join exchanges it again. A hot
+    bucket's list is still built once before it is dropped, so keep ``m``
+    narrow where buckets can be huge. ``cap=None`` keeps the plain key join:
+    a list per uncapped bucket could be any size."""
+    if cap is None:
+        pairs = left.select(*keys, F.col("m").alias("a")).join(
+            (left if right is None else right).select(*keys, F.col("m").alias("b")), keys)
+        if right is None:
+            pairs = pairs.where(F.col("a.id") < F.col("b.id"))
+        return pairs.select("a", "b")
+    if right is None:
+        buckets = _capped_buckets(left, keys, cap).where(F.size("__ms") >= 2)
+        pairs = (buckets.select(F.posexplode("__ms").alias("__i", "a"), "__ms")
+                 .select("a", F.explode(F.slice("__ms", F.col("__i") + 2, F.size("__ms")))
+                         .alias("b")))
+        swap = F.col("a.id") > F.col("b.id")
+        return (pairs.select(F.when(swap, F.col("b")).otherwise(F.col("a")).alias("a"),
+                             F.when(swap, F.col("a")).otherwise(F.col("b")).alias("b"))
+                .where(F.col("a.id") < F.col("b.id")))
+    tagged = (left.select(*keys, "m", F.lit(True).alias("__left"))
+              .unionByName(right.select(*keys, "m", F.lit(False).alias("__left"))))
+    buckets = (tagged.groupBy(*keys)
+               .agg(_collect_members(keys, F.col("__left")).alias("__l"),
+                    _collect_members(keys, ~F.col("__left")).alias("__r"))
+               .where(F.size("__r") <= cap))
+    return (buckets.select(F.explode("__l").alias("a"), "__r")
+            .select("a", F.explode("__r").alias("b")))
 
 
 # ------------------------------------------------------------------ minhash
@@ -365,6 +414,42 @@ def _finalize_pairs(out: DataFrame, cached: DataFrame | None,
     return out
 
 
+def _minhash_bands(signatures: DataFrame, id_col: str, bands: int,
+                   lazy_guard: bool) -> DataFrame:
+    """``(band, bh, m)`` per LSH band of every non-null signature, ``m`` =
+    ``struct(id)`` — the :func:`bucket_pairs` input of both MinHash pair
+    builders.
+
+    ``lazy_guard`` adds a per-row ``assert_true`` for a signature shorter
+    than ``bands``: ``rows_per_band`` would floor to 0, every band would
+    hash an empty slice, and all docs would share one bucket (all-pairs, or
+    with the default cap every bucket dropped and dedup silently off). It
+    raises at execution, so building the plan fires no Spark job."""
+    n = F.size("signature")
+    rpb = F.floor(n / bands).cast("int")
+    if lazy_guard:
+        rpb = F.when(
+            F.assert_true(n >= bands,
+                          F.concat(F.lit(f"bands ({bands}) must be <= signature length "),
+                                   n.cast("string"))).isNull(),
+            rpb,
+        )
+    return (
+        signatures.where(F.col("signature").isNotNull())
+        .select(
+            F.struct(F.col(id_col).alias("id")).alias("m"),
+            F.col("signature"),
+            F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
+            rpb.alias("rpb"),
+        )
+        .select(
+            "band",
+            F.xxhash64(F.slice("signature", F.col("band") * F.col("rpb") + 1, F.col("rpb"))).alias("bh"),
+            "m",
+        )
+    )
+
+
 def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                        n_hashes: int = 128, shingle: int = 9, seed: int = 42) -> DataFrame:
     """(id, signature array<long>) via an Arrow-batched numpy UDF over
@@ -384,12 +469,12 @@ def minhash_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
                             persist_signatures: bool = True,
                             materialize: bool = False) -> DataFrame:
     """LSH banding: split each signature into ``bands`` rows of
-    (band_idx, band_hash); a self-join on those keys yields candidate pairs
-    (bucket-local — never all-pairs); signature agreement >= threshold is
-    the returned Jaccard estimate filter.
+    (band_idx, band_hash); docs sharing one of those buckets are candidate
+    pairs (bucket-local — never all-pairs); signature agreement >= threshold
+    is the returned Jaccard estimate filter.
 
-    Scale notes: the exploded table is rows×bands; the self-join shuffles on
-    (band, hash) so only colliding docs meet. A giant bucket (boilerplate —
+    Scale notes: the exploded table is rows×bands; the pair builder shuffles
+    on (band, hash) so only colliding docs meet. A giant bucket (boilerplate —
     e.g. millions of near-empty pages sharing a template) turns its bucket
     into an O(n²) hot spot; ``max_bucket_size`` drops buckets above the cap
     (a bucket of identical boilerplate needs only pairwise linking through
@@ -403,10 +488,12 @@ def minhash_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     Without it, a lazy per-row ``assert_true`` guard catches the degenerate
     ``rows_per_band == 0`` case at execution time instead.
 
-    The signature relation feeds FOUR plan subtrees (band-join left/right +
-    two re-attach joins); ``persist_signatures`` caches it MEMORY_AND_DISK so
-    the signature UDF runs once, not four times (measured 6.5s → 2.0s at
-    sf0.1). Two ways to avoid leaking that cache entry in a long-lived
+    Pairs come from :func:`bucket_pairs` over the (band, band-hash) buckets.
+    The signature relation feeds three plan subtrees (the bucket groupBy +
+    two re-attach joins; four with ``max_bucket_size=None``, whose self-join
+    reads it twice); ``persist_signatures`` caches it MEMORY_AND_DISK so
+    the signature UDF runs once, not once per subtree (measured 6.5s → 2.0s
+    at sf0.1). Two ways to avoid leaking that cache entry in a long-lived
     session:
 
     * ``materialize=True`` (recommended default usage): the pairs are
@@ -434,82 +521,22 @@ def minhash_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
         from pyspark import StorageLevel
 
         signatures = signatures.persist(StorageLevel.MEMORY_AND_DISK)
-    n_hashes_col = F.size("signature")
-    rows_per_band = F.floor(n_hashes_col / bands).cast("int")
-    if n_hashes is None:
-        # lazy guard: raises during execution if signatures are shorter than
-        # bands (no driver-side job at plan-construction time)
-        rows_per_band = F.when(
-            F.assert_true(n_hashes_col >= bands,
-                          F.concat(F.lit(f"bands ({bands}) must be <= signature length "),
-                                   n_hashes_col.cast("string"))).isNull(),
-            rows_per_band,
-        )
-    banded = (
-        signatures.where(F.col("signature").isNotNull())
-        .select(
-            F.col(id_col),
-            F.col("signature"),
-            F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
-            rows_per_band.alias("rpb"),
-        )
-        .select(
-            id_col,
-            "signature",
-            "band",
-            F.xxhash64(F.slice("signature", F.col("band") * F.col("rpb") + 1, F.col("rpb"))).alias("bh"),
-        )
-    )
+    banded = _minhash_bands(signatures, id_col, bands, lazy_guard=n_hashes is None)
     # Candidate pairs dedupe on (id_a, id_b) ONLY — a distinct over the full
     # signature arrays would shuffle ~1 KB per row instead of 16 bytes.
     # Signatures re-attach afterwards via two joins against the (small
     # relative to the exploded band table) signature relation.
+    cand = bucket_pairs(banded, ["band", "bh"], max_bucket_size).select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     if max_bucket_size is not None:
-        # r6: with the cap on (the default), the bucket contents are bounded,
-        # so pairs come from ONE groupBy over the banded table: collect the
-        # bucket's ids, keep 2 <= size <= cap (same row set as
-        # _drop_hot_buckets followed by the self-join — a hot bucket's rows
-        # all vanish, singleton buckets emit nothing), and explode the
-        # value-ordered id pairs in place. This replaces three passes over
-        # the exploded band table (hot-count aggregate, anti-join,
-        # self-join with two map scans) with one — and leaves exactly ONE
-        # subtree scanning the signature relation, so the banding UDF
-        # evaluates once even before the cache fills (measured 5.5 -> 3.5 s
-        # on the sf1.0 headline query). Unbounded buckets (cap=None) keep
-        # the self-join shape below: collect_list on an uncapped bucket
-        # would build one giant array row.
-        buckets = (
-            banded.select(id_col, "band", "bh")
-            .groupBy("band", "bh")
-            .agg(F.collect_list(id_col).alias("__ids"))
-            .where((F.size("__ids") >= 2) & (F.size("__ids") <= max_bucket_size))
-        )
         from dataqualityassistant_spark.session import shuffle_parallelism
 
-        expl = buckets.select(F.posexplode("__ids").alias("__i", "__u"), "__ids")
-        cand = (
-            expl.select(
-                "__u",
-                F.explode(F.slice("__ids", F.col("__i") + 2, F.size("__ids"))).alias("__v"),
-            )
-            .select(F.least("__u", "__v").alias("id_a"),
-                    F.greatest("__u", "__v").alias("id_b"))
-            # explicit repartition: satisfies distinct's distribution AND the
-            # downstream attach-joins' parallelism; AQE would otherwise
-            # coalesce this small exchange to one task (see
-            # session.shuffle_parallelism; measured 4.5 -> 3.0 s at sf1.0)
-            .repartition(shuffle_parallelism(signatures), "id_a", "id_b")
-            .distinct()
-        )
-    else:
-        left = banded.select(F.col(id_col).alias("id_a"), "band", "bh")
-        right = banded.select(F.col(id_col).alias("id_b"), "band", "bh")
-        cand = (
-            left.join(right, ["band", "bh"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
+        # explicit repartition: satisfies distinct's distribution AND the
+        # downstream attach-joins' parallelism; AQE would otherwise coalesce
+        # the small exchange after the bucket groupBy to one task (see
+        # session.shuffle_parallelism; measured 4.5 -> 3.0 s at sf1.0)
+        cand = cand.repartition(shuffle_parallelism(signatures), "id_a", "id_b")
+    cand = cand.distinct()
     sigs = signatures.where(F.col("signature").isNotNull())
     pairs = (
         cand.join(sigs.select(F.col(id_col).alias("id_a"), F.col("signature").alias("sig_a")), "id_a")
@@ -609,45 +636,17 @@ def minhash_pairs_against(new_signatures: DataFrame, corpus_signatures: DataFram
     buckets make every matching new doc quadratic); ON by default, ``None``
     to opt out.
 
-    Scan note: the CORPUS relation feeds three subtrees (the bucket-cap
-    count, the banded join, and the sig_b re-attach) — a plain parquet store
-    is read up to three times per call. Pass a pre-persisted frame
+    Scan note: the CORPUS relation feeds two subtrees (the banded cross
+    pairs of :func:`bucket_pairs` and the sig_b re-attach) — a plain parquet
+    store is read twice per call. Pass a pre-persisted frame
     (:func:`incremental_dedup` persists its corpus projection for the
     duration of the step); at scale the bucketed-store layout (the
     compaction target) amortizes this across batches."""
-
-    def banded(sigs: DataFrame, out_id: str) -> DataFrame:
-        # lazy degenerate-banding guard (same as the self-join sibling): a
-        # signature shorter than `bands` would floor rows_per_band to 0 —
-        # every band hashes an empty slice, all docs share one bucket, and
-        # the default corpus cap would then DROP every bucket (dedup
-        # silently disabled). assert_true raises at execution instead.
-        rpb_expr = F.floor(F.size("signature") / bands).cast("int")
-        rpb = F.when(
-            F.assert_true(
-                F.size("signature") >= bands,
-                F.concat(F.lit(f"bands ({bands}) must be <= signature length "),
-                         F.size("signature").cast("string"))).isNull(),
-            rpb_expr)
-        return (
-            sigs.where(F.col("signature").isNotNull())
-            .select(
-                F.col(id_col).alias(out_id),
-                F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
-                rpb.alias("rpb"),
-                F.col("signature"),
-            )
-            .select(
-                out_id, "band",
-                F.xxhash64(F.slice("signature", F.col("band") * F.col("rpb") + 1, F.col("rpb"))).alias("bh"),
-            )
-        )
-
-    new_b = banded(new_signatures, "new_id")
-    corpus_b = banded(corpus_signatures, "corpus_id")
-    if max_bucket_size is not None:
-        corpus_b = _drop_hot_buckets(corpus_b, ["band", "bh"], max_bucket_size)
-    cand = new_b.join(corpus_b, ["band", "bh"]).select("new_id", "corpus_id").distinct()
+    new_b = _minhash_bands(new_signatures, id_col, bands, lazy_guard=True)
+    corpus_b = _minhash_bands(corpus_signatures, id_col, bands, lazy_guard=True)
+    cand = (bucket_pairs(new_b, ["band", "bh"], max_bucket_size, right=corpus_b)
+            .select(F.col("a.id").alias("new_id"), F.col("b.id").alias("corpus_id"))
+            .distinct())
     new_s = new_signatures.select(F.col(id_col).alias("new_id"), F.col("signature").alias("sig_a"))
     cor_s = corpus_signatures.select(F.col(id_col).alias("corpus_id"), F.col("signature").alias("sig_b"))
     pairs = cand.join(new_s, "new_id").join(cor_s, "corpus_id")
@@ -719,9 +718,9 @@ def incremental_dedup(new_docs: DataFrame, store_path: str, batch_id: str,
             # after a crash-after-write must not match the batch against its
             # own stored signatures and return zero survivors.
             # PERSISTED for the duration of the step: the corpus relation
-            # feeds three subtrees inside minhash_pairs_against (bucket-cap
-            # count, banded join, sig_b re-attach) — unpersisted, a plain
-            # parquet store would be scanned up to three times per batch.
+            # feeds two subtrees inside minhash_pairs_against (banded cross
+            # pairs, sig_b re-attach) — unpersisted, a plain parquet store
+            # would be scanned twice per batch.
             corpus = (_read_signature_store(spark, store_path)
                       .where(F.col("batch_id") != F.lit(str(batch_id)))
                       .select(id_col, "signature")
@@ -1055,13 +1054,14 @@ def simhash_candidate_pairs(hashes: DataFrame, id_col: str = "doc_id",
     be a candidate (that is a cross join, not an LSH).
 
     The banding is ONE ``posexplode`` over the 4 chunk values and ONE
-    self-join on (band, chunk) — NOT a union of four per-chunk joins. The
-    union shape referenced the input 12+ times and re-ran the upstream
-    simhash UDF in every subtree (measured 48 ArrowEvalPython operators /
-    32 scans in a single query plan before this rewrite); the exploded
-    shape references it twice (join left/right) plus once for the bucket
-    cap, and ``persist_hashes`` (default ON — the relation is 16 bytes/row)
-    caches it so the scoring UDF runs exactly once. Same handle/`
+    :func:`bucket_pairs` on (band, chunk) — NOT a union of four per-chunk
+    joins. The union shape referenced the input 12+ times and re-ran the
+    upstream simhash UDF in every subtree (measured 48 ArrowEvalPython
+    operators / 32 scans in a single query plan before this rewrite); the
+    exploded shape references it once (the bucket groupBy; twice for the
+    ``max_bucket_size=None`` self-join), and ``persist_hashes`` (default
+    ON — the relation is 16 bytes/row) caches it so the scoring UDF runs
+    exactly once. Same handle/`
     ``materialize`` contract as :func:`minhash_candidate_pairs`: the lazy
     result exposes ``result.persisted_hashes`` to unpersist later, or pass
     ``materialize=True`` to compute the (small) pairs eagerly and release
@@ -1076,10 +1076,10 @@ def simhash_candidate_pairs(hashes: DataFrame, id_col: str = "doc_id",
     when you keep the handle and unpersist it yourself.
 
     ``max_bucket_size`` drops (chunk_idx, chunk_value) buckets above the cap
-    before the self-join — at web scale a hot chunk value (e.g. all-zero
-    chunks from short boilerplate docs, or just 10^12 rows / 65k chunk
-    values) is an O(n²) bucket; the cap bounds every bucket's pair count,
-    same rationale as MinHash's ``max_bucket_size``. ON by default
+    — at web scale a hot chunk value (e.g. all-zero chunks from short
+    boilerplate docs, or just 10^12 rows / 65k chunk values) is an O(n²)
+    bucket; the cap bounds every bucket's pair count, same rationale as
+    MinHash's ``max_bucket_size``. ON by default
     (:data:`DEFAULT_MAX_BUCKET_SIZE`); ``None`` opts out."""
     if max_hamming >= 64:
         raise ValueError(
@@ -1104,52 +1104,19 @@ def simhash_candidate_pairs(hashes: DataFrame, id_col: str = "doc_id",
         .bitwiseAND(F.lit((1 << widths[i]) - 1))
         for i in range(n_chunks)
     ])
-    banded = t_nn.select(
-        id_col, "simhash", F.posexplode(chunks).alias("band", "k"))
+    # the (id, hash) member rides in the bucket, so no re-attach join
+    member = F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("h"))
+    banded = t_nn.select(member.alias("m"), F.posexplode(chunks).alias("band", "k"))
+    cand = bucket_pairs(banded, ["band", "k"], max_bucket_size).select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+        F.col("a.h").alias("h_a"), F.col("b.h").alias("h_b"))
     if max_bucket_size is not None:
-        # r6: same one-groupBy bucket shape as minhash_candidate_pairs —
-        # replaces the hot-count aggregate + anti-join + self-join (three
-        # passes over the banded table) with one groupBy. The (id, hash)
-        # struct rides in the bucket list; LEAST/GREATEST on the struct
-        # orders a pair by id (struct comparison is field-lexicographic and
-        # ids within a bucket are distinct), reproducing the join's
-        # id_a < id_b exactly. 2 <= size <= cap keeps the same row set as
-        # _drop_hot_buckets + self-join.
-        member = F.struct(F.col(id_col).alias("i"), F.col("simhash").alias("h"))
-        buckets = (
-            banded.select("band", "k", member.alias("__m"))
-            .groupBy("band", "k")
-            .agg(F.collect_list("__m").alias("__ms"))
-            .where((F.size("__ms") >= 2) & (F.size("__ms") <= max_bucket_size))
-        )
-        expl = buckets.select(F.posexplode("__ms").alias("__i", "__u"), "__ms")
-        pairw = expl.select(
-            "__u",
-            F.explode(F.slice("__ms", F.col("__i") + 2, F.size("__ms"))).alias("__v"),
-        )
         from dataqualityassistant_spark.session import shuffle_parallelism
 
-        lo, hi = F.least("__u", "__v"), F.greatest("__u", "__v")
-        cand = (
-            pairw.select(lo["i"].alias("id_a"), hi["i"].alias("id_b"),
-                         lo["h"].alias("h_a"), hi["h"].alias("h_b"))
-            # explicit repartition on the full distinct key: AQE would
-            # coalesce this small exchange to one task (see
-            # session.shuffle_parallelism)
-            .repartition(shuffle_parallelism(hashes), "id_a", "id_b", "h_a", "h_b")
-            .distinct()  # a pair colliding on several chunks appears once
-        )
-    else:
-        l = banded.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("h_a"),
-                          "band", "k")
-        r = banded.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("h_b"),
-                          "band", "k")
-        cand = (
-            l.join(r, ["band", "k"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "h_a", "h_b")
-            .distinct()  # a pair colliding on several chunks appears once
-        )
+        # explicit repartition on the full distinct key: AQE would coalesce
+        # this small exchange to one task (see session.shuffle_parallelism)
+        cand = cand.repartition(shuffle_parallelism(hashes), "id_a", "id_b", "h_a", "h_b")
+    cand = cand.distinct()  # a pair colliding on several chunks appears once
     hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
     out = (
         cand.withColumn("hamming", hamming)
@@ -1170,23 +1137,24 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
                         persist_shingles: bool = True,
                         materialize: bool = False) -> DataFrame:
     """Exact word-n-gram Jaccard similarity for all pairs sharing at least
-    one shingle. Pure DataFrame algebra (explode → shingle self-join →
-    count ∩ → |A|+|B|−∩ union). Exact and therefore the most expensive
-    strategy — at web scale run it only on LSH candidates.
+    one shingle. Pure DataFrame algebra (explode → :func:`bucket_pairs` on
+    the shingle → count ∩ → |A|+|B|−∩ union). Exact and therefore the most
+    expensive strategy — at web scale run it only on LSH candidates.
 
     ``max_shingle_df`` is the hot-shingle skew cap and is ON by default
     (:data:`DEFAULT_MAX_BUCKET_SIZE`, matching the sibling pair generators):
     a shingle appearing in more docs than the cap (template boilerplate) is
-    dropped before the self-join, since one such shingle alone goes O(n²).
+    dropped from the pairs, since one such shingle alone goes O(n²).
     Dropping shingles changes the Jaccard denominator for affected docs —
     sizes are recomputed over the RETAINED shingle universe so intersection
     and union stay consistent. Pass ``None`` to opt out explicitly (exact
     textbook Jaccard; safe only when the corpus is known boilerplate-free,
     e.g. when running on LSH candidates that were already capped).
 
+    Rows sharing an id count as one document (copies of one text).
+
     ``persist_shingles`` (default ON) caches the shingle relation so its
-    tokenize→explode(→cap→sizes-join) subtree runs once, not once per
-    consuming subtree. Same handle/``materialize`` contract as
+    tokenize→explode subtree runs once, not once per consuming subtree. Same handle/``materialize`` contract as
     :func:`minhash_candidate_pairs`: lazy results expose
     ``result.persisted_shingles`` to unpersist; one-shot calls should pass
     ``materialize=True`` (pairs checkpointed, cache released before
@@ -1207,56 +1175,48 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     )
     from pyspark import StorageLevel
 
-    cached = None
+    member = [F.col(id_col).alias("id")]
     if max_shingle_df is None:
-        # fast path: per-doc shingle count comes free from the array size
-        shingled = (
-            df.select(F.col(id_col), grams.alias("grams"))
-            .where(F.col("grams").isNotNull())
-            .select(id_col, F.size("grams").alias("n_grams"), F.explode("grams").alias("g"))
-        )
-        if persist_shingles:
-            # the shingle relation feeds the self-join twice (a/b sides);
-            # uncached, the tokenize→explode subtree runs once per side.
-            # Same handle/``materialize`` contract as the minhash/simhash
-            # pair builders (result.persisted_shingles, or materialize=True
-            # for one-shot calls — no cache left behind).
-            shingled = shingled.persist(StorageLevel.MEMORY_AND_DISK)
-            cached = shingled
-    else:
-        # hot shingles (template boilerplate appearing in huge numbers of
-        # docs) are both join-skew bombs and similarity noise; drop them and
-        # compute Jaccard over the retained shingle universe (sizes must be
-        # recomputed post-filter so the denominator stays consistent)
-        exploded = (
-            df.select(F.col(id_col), grams.alias("grams"))
-            .where(F.col("grams").isNotNull())
-            .select(id_col, F.explode("grams").alias("g"))
-        )
-        if persist_shingles:
-            # cache the RAW tokenize→explode relation, not the capped+sized
-            # result: the hot-count agg, the anti-join probe side, the sizes
-            # agg, and the pair join all consume it, so a cache placed
-            # downstream of the cap would still re-run the xxhash
-            # tokenization 3-4x INSIDE its own build (measured: the whole
-            # subtree ran at input-split parallelism, dominating the query).
-            # Here tokenization runs exactly once; everything downstream is
-            # cache scans + aggregations. Same handle/``materialize``
-            # contract as the minhash/simhash pair builders.
-            exploded = exploded.persist(StorageLevel.MEMORY_AND_DISK)
-            cached = exploded
-        exploded = _drop_hot_buckets(exploded, ["g"], max_shingle_df)
-        sizes = exploded.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_grams"))
-        shingled = exploded.join(sizes, id_col)
-    a = shingled.select(F.col(id_col).alias("id_a"), F.col("n_grams").alias("na"), "g")
-    b = shingled.select(F.col(id_col).alias("id_b"), F.col("n_grams").alias("nb"), "g")
-    inter = (
-        a.join(b, "g")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("inter"))
+        # uncapped: a doc's shingle count comes free from the array size
+        member.append(F.size("grams").alias("n"))
+    shingled = (
+        df.select(F.col(id_col), grams.alias("grams"))
+        .where(F.col("grams").isNotNull())
+        .select(F.struct(*member).alias("m"), F.explode("grams").alias("g"))
     )
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
+    cached = None
+    if persist_shingles:
+        # cache the tokenize→explode relation: the pair builder and (capped)
+        # the retained-size count both consume it, so uncached the xxhash
+        # tokenization would re-run per consumer. Same handle/``materialize``
+        # contract as the minhash/simhash pair builders.
+        shingled = shingled.persist(StorageLevel.MEMORY_AND_DISK)
+        cached = shingled
+    pairs = bucket_pairs(shingled, ["g"], max_shingle_df)
+    if max_shingle_df is None:
+        inter = pairs.groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+                              F.col("a.n").alias("na"), F.col("b.n").alias("nb")) \
+            .agg(F.count(F.lit(1)).alias("inter"))
+    else:
+        # hot shingles (template boilerplate) are both skew bombs and
+        # similarity noise: Jaccard runs over the RETAINED shingle universe,
+        # so a doc's size counts its shingles in the same capped buckets the
+        # pairs come from. Spark re-runs that groupBy per consumer: its
+        # collect_list is nondeterministic, so the exchange is never reused.
+        sizes = (_capped_buckets(shingled, ["g"], max_shingle_df)
+                 .select(F.explode(F.array_distinct("__ms.id")).alias("id"))
+                 .groupBy("id").agg(F.count(F.lit(1)).alias("n")))
+        inter = (
+            pairs.groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .agg(F.count(F.lit(1)).alias("inter"))
+            .join(sizes.select(F.col("id").alias("id_a"), F.col("n").alias("na")), "id_a")
+            .join(sizes.select(F.col("id").alias("id_b"), F.col("n").alias("nb")), "id_b")
+        )
+    # rows sharing an id are copies of one doc: each copy pairs on every
+    # shingle, so clamp ∩ to the smaller set (a no-op for unique ids) — else
+    # the union would reach 0 (division by zero) or Jaccard exceed 1
+    inter_n = F.least("inter", "na", "nb")
+    jac = inter_n / (F.col("na") + F.col("nb") - inter_n)
     out = (
         inter.withColumn("jaccard", jac.cast("double"))
         .where(F.col("jaccard") >= threshold)

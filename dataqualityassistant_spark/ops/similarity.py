@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from .dedup import DEFAULT_MAX_BUCKET_SIZE, _drop_hot_buckets
+from .dedup import DEFAULT_MAX_BUCKET_SIZE, bucket_pairs
 
 
 def _lit_vec(vec) -> "Column":
@@ -173,9 +173,10 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
     """Embedding-cosine near-duplicate pairs.
 
     Default path: LSH-bucketed — only same-bucket pairs are candidates
-    (self-join keyed on the hyperplane bucket, never all-pairs), then exact
-    cosine filters. Recall misses pairs split across buckets; lower
-    n_planes or run twice with different seeds for higher recall.
+    (:func:`~dataqualityassistant_spark.ops.dedup.bucket_pairs` on the
+    hyperplane bucket, never all-pairs), then exact cosine filters. Recall
+    misses pairs split across buckets; lower n_planes or run twice with
+    different seeds for higher recall.
     ``exhaustive=True`` skips bucketing (exact, O(n²) — validation only).
 
     Sizing at scale: 2^n_planes must be large relative to corpus size or a
@@ -204,23 +205,22 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
     # the vectorized kernel below (where Arrow surfaces the null as NaN)
     # agrees on the final pair set
     base = base.where(~F.exists(F.col(vec_col), lambda x: x.isNull()))
+    # the vector and its norm ride in the bucket member: no re-attach join
+    member = F.struct(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
+                      F.col("__norm").alias("n")).alias("m")
     if exhaustive:
-        keyed = base.withColumn("__b", F.lit(0))
-    else:
-        keyed = lsh_bucket_ids(base, vec_col, n_planes, seed=seed, out_col="__b")
-    if max_bucket_size is not None and not exhaustive:
-        keyed = _drop_hot_buckets(keyed, ["__b"], max_bucket_size)
-    a = keyed.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-                     F.col("__norm").alias("na"), "__b")
-    b = keyed.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-                     F.col("__norm").alias("nb"), "__b")
-    if exhaustive:
+        keyed = base.select(F.lit(0).alias("__b"), member)
         # the constant __b key constant-folds into a BroadcastNestedLoopJoin
         # whose parallelism = PROBE-side partitions; from a few-file input
         # the whole O(n²) pair loop would run in 1-2 tasks (measured 9.1 s
         # → 1.1 s at 2k×2k on 32 cores). The O(n) round-robin shuffle is
         # free next to the O(n²) probe it spreads.
-        a = a.repartition(df.sparkSession.sparkContext.defaultParallelism)
+        probe = keyed.repartition(df.sparkSession.sparkContext.defaultParallelism)
+        pairs = (bucket_pairs(probe, ["__b"], None, right=keyed)
+                 .where(F.col("a.id") < F.col("b.id")))
+    else:
+        keyed = lsh_bucket_ids(base, vec_col, n_planes, seed=seed, out_col="__b")
+        pairs = bucket_pairs(keyed.select("__b", member), ["__b"], max_bucket_size)
 
     # Pair scoring is the O(candidate-pairs) hot loop, so it must NOT be a
     # HOF-lambda fold: F.aggregate/zip_with expressions are interpreted per
@@ -272,12 +272,9 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
                     out[j] = [c]
         return pd.Series(out, dtype=object)
 
-    return (
-        a.join(b, "__b")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b",
-                F.explode(_cos_if_near("va", "vb", "na", "nb")).alias("cosine"))
-    )
+    return pairs.select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+        F.explode(_cos_if_near("a.v", "b.v", "a.n", "b.n")).alias("cosine"))
 
 
 def write_bucketed_embeddings(df: DataFrame, path: str, vec_col: str = "embedding",

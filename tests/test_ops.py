@@ -260,6 +260,36 @@ def test_minhash_bucket_cap_drops_hot_buckets(spark):
     assert not any(p[0] < 30 and p[1] < 30 for p in got)  # hot bucket dropped
 
 
+def _self_pairs(spark, family, cap):
+    """Pairs of the four self-pair families over three identical rows,
+    id 1 twice and id 2 once."""
+    if family == "embedding":
+        df = spark.createDataFrame([(1, [1.0, 2.0]), (1, [1.0, 2.0]), (2, [1.0, 2.0])],
+                                   "vec_id: long, embedding: array<float>")
+        return embedding_near_dup_pairs(df, threshold=0.9, n_planes=2, max_bucket_size=cap)
+    df = spark.createDataFrame([(1, BASE), (1, BASE), (2, BASE)], "doc_id: long, text: string")
+    if family == "minhash":
+        return minhash_candidate_pairs(minhash_signatures(df, n_hashes=64), bands=16,
+                                       threshold=0.9, max_bucket_size=cap, materialize=True)
+    if family == "simhash":
+        return simhash_candidate_pairs(simhash(df), max_hamming=2, max_bucket_size=cap,
+                                       materialize=True)
+    return ngram_jaccard_pairs(df, threshold=0.5, max_shingle_df=cap, materialize=True)
+
+
+@pytest.mark.parametrize("capped", [True, False], ids=["default_cap", "no_cap"])
+@pytest.mark.parametrize("family", ["minhash", "simhash", "ngram", "embedding"])
+def test_duplicate_id_never_pairs_with_itself(spark, family, capped):
+    """An id occurring twice must not yield the self-pair (1, 1): the
+    capped bucket groupBy used to emit it while the uncapped self-join's
+    strict id_a < id_b did not. n-gram Jaccard must also count the copies
+    as one doc (it used to divide by zero uncapped)."""
+    from dataqualityassistant_spark.ops.dedup import DEFAULT_MAX_BUCKET_SIZE
+
+    pairs = _self_pairs(spark, family, DEFAULT_MAX_BUCKET_SIZE if capped else None)
+    assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} == {(1, 2)}
+
+
 def test_skew_caps_on_by_default(spark):
     """A naive caller with default args must survive a giant hot bucket:
     1200 boilerplate docs share every LSH/SimHash bucket (> the default cap

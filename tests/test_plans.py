@@ -4,6 +4,7 @@ change probably reintroduced a scan, a shuffle, or a pruning regression."""
 
 import io
 import contextlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -169,7 +170,7 @@ def test_vocab_topk_is_partial_agg_plus_take_ordered(spark):
 
 
 def test_minhash_pairs_reuse_cached_signatures(spark):
-    """The signature relation feeds four plan subtrees (band join left/right
+    """The signature relation feeds three plan subtrees (the bucket groupBy
     + two re-attach joins); minhash_candidate_pairs persists it, so the
     LAZY plan must read the signatures from the cache (InMemoryRelation),
     not recompute the Arrow UDF per subtree. The entry query materializes
@@ -193,6 +194,51 @@ def test_minhash_pairs_reuse_cached_signatures(spark):
     eplan = df._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in eplan          # checkpointed pairs, compute done
     assert "ArrowEvalPython" not in eplan  # no UDF re-evaluation possible
+
+
+def _lsh_pairs_and_bucket_keys(spark, family, cap):
+    from dataqualityassistant_spark.ops.dedup import (
+        minhash_pairs_against, minhash_signatures, ngram_jaccard_pairs)
+    from dataqualityassistant_spark.ops.similarity import embedding_near_dup_pairs
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    if family == "embedding":
+        emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
+        return embedding_near_dup_pairs(emb, threshold=0.3, n_planes=3,
+                                        max_bucket_size=cap), "__b"
+    if family == "ngram":
+        return ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_df=cap,
+                                   persist_shingles=False), "g"
+    new = docs.withColumn("doc_id", F.col("doc_id") + 1_000_000).where(F.col("doc_id") % 3 == 0)
+    return minhash_pairs_against(minhash_signatures(new, n_hashes=64),
+                                 minhash_signatures(docs, n_hashes=64),
+                                 threshold=0.9, max_bucket_size=cap), "band|bh"
+
+
+@pytest.mark.parametrize("capped", [True, False], ids=["default_cap", "no_cap"])
+@pytest.mark.parametrize("family", ["embedding", "ngram", "against"])
+def test_lsh_pairs_come_from_one_bucket_groupby(spark, family, capped):
+    """With the hot-bucket cap on, bucket_pairs builds pairs from ONE
+    groupBy + collect_list: no anti-join against a hot-bucket count and no
+    join keyed on the bucket columns — so an upstream UDF runs once (the
+    embedding's lsh_bucket_ids UDF appears once). With the cap off, the
+    plain key join stays and nothing is collected into lists."""
+    from dataqualityassistant_spark.ops.dedup import DEFAULT_MAX_BUCKET_SIZE
+
+    cap = DEFAULT_MAX_BUCKET_SIZE if capped else None
+    df, keys = _lsh_pairs_and_bucket_keys(spark, family, cap)
+    plan = plan_of(df)
+    bucket_joins = [l for l in plan.splitlines()
+                    if re.search(rf"keys \[\d+\]: \[.*\b(?:{keys})#", l)]
+    if not capped:
+        assert bucket_joins, plan
+        assert "collect_list" not in plan
+        return
+    assert not bucket_joins, plan
+    assert "LeftAnti" not in tree_of(df)
+    assert "collect_list" in plan
+    if family == "embedding":
+        assert sum("Arguments: [bucket(" in l for l in plan.splitlines()) == 1, plan
 
 
 def test_failing_expectation_samples_run_as_one_job(spark):

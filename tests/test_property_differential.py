@@ -4,10 +4,13 @@ the in-repo pandas oracle (the reference's semantics). Catches boundary
 cases hand-written tests miss (all-null columns, empty value sets, negative
 bounds, mostly extremes)."""
 
+from collections import Counter, defaultdict
+
 import pandas as pd
 import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from dataqualityassistant_spark import Rule, run_suite
 from dataqualityassistant_spark.oracle import oracle_expectation
@@ -111,6 +114,78 @@ def test_dedup_clusters_match_union_find(spark, edges):
     got = {r["doc_id"]: r["cluster_id"] for r in dedup_clusters(pairs).collect()}
     want = _union_find_components(edges)
     assert got == want
+
+
+# ---------------------------------------------------------- bucket pairs
+
+# (k1, k2, id) rows: a two-column bucket key over a tiny domain (so buckets
+# of 1, cap and cap + 1 rows all occur), null keys and ids, repeated ids
+_bucket_rows = st.lists(
+    st.tuples(st.one_of(st.none(), st.integers(0, 1)), st.integers(0, 1),
+              st.one_of(st.none(), st.integers(0, 5))),
+    max_size=14,
+)
+
+
+def _reference_bucket_pairs(left, cap, right=None):
+    """Plain-Python bucket pairs over (k1, k2, id, tag) rows: group by key
+    (a null key never pairs), drop a bucket with more than ``cap`` rows
+    (cross: ``right`` rows), emit self pairs with a strict id order and
+    cross pairs as every left × right member."""
+    def buckets(rows):
+        out = defaultdict(list)
+        for k1, k2, i, tag in rows:
+            if k1 is not None and k2 is not None:
+                out[(k1, k2)].append((i, tag))
+        return out
+
+    pairs = Counter()
+    lb = buckets(left)
+    rb = lb if right is None else buckets(right)
+    for key, ms in lb.items():
+        others = rb.get(key, [])
+        if cap is not None and len(others) > cap:
+            continue
+        if right is not None:
+            pairs.update((a, b) for a in ms for b in others)
+            continue
+        for x in range(len(ms)):
+            for y in range(x + 1, len(ms)):
+                a, b = sorted((ms[x], ms[y]), key=lambda m: (m[0] is None, m[0]))
+                if a[0] is not None and b[0] is not None and a[0] < b[0]:
+                    pairs[(a, b)] += 1
+    return pairs
+
+
+@settings(max_examples=30, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(left=_bucket_rows, right=_bucket_rows, cap=st.sampled_from([None, 1, 2, 3]),
+       cross=st.booleans())
+@example(left=[(0, 0, 1), (0, 0, 2), (0, 0, 3), (1, 1, 1), (1, 1, 2), (1, 1, 3), (1, 1, 4)],
+         right=[(0, 0, 5), (0, 0, 6), (0, 0, 7), (1, 1, 5), (1, 1, 6), (1, 1, 7), (1, 1, 8)],
+         cap=3, cross=False)
+@example(left=[(0, 0, 1), (1, 1, 2)],
+         right=[(0, 0, 5), (0, 0, 6), (0, 0, 7), (1, 1, 5), (1, 1, 6), (1, 1, 7), (1, 1, 8)],
+         cap=3, cross=True)
+def test_bucket_pairs_match_reference(spark, left, right, cap, cross):
+    """bucket_pairs (capped collect_list shape and uncapped key join, self
+    and cross) equals the plain-Python reference on random small buckets —
+    duplicate and null ids, null keys, singletons, buckets of exactly cap
+    and cap + 1 rows (the explicit examples)."""
+    from dataqualityassistant_spark.ops.dedup import bucket_pairs
+
+    # the row index tags each member, so repeated ids stay distinct rows
+    left = [(*r, t) for t, r in enumerate(left)]
+    right = [(*r, 100 + t) for t, r in enumerate(right)]
+
+    def frame(rows):
+        return (spark.createDataFrame(rows, "k1: int, k2: int, id: long, tag: int")
+                .select("k1", "k2", F.struct("id", "tag").alias("m")))
+
+    got = bucket_pairs(frame(left), ["k1", "k2"], cap,
+                       right=frame(right) if cross else None)
+    got = Counter((tuple(r["a"]), tuple(r["b"])) for r in got.collect())
+    assert got == _reference_bucket_pairs(left, cap, right if cross else None)
 
 
 # ------------------------------------------- full-registry suite fuzzer
