@@ -5,6 +5,10 @@ Usage: python bench_extra.py QUERY [QUERY...] [--sf DIR] [--repeats N]
 Times each query exactly like bench.py's headline phase: one warm collect,
 then min of N timed collects, on local[$SPARK_GRAFT_CPUS] with the same
 session config. Prints one JSON line per query plus a total.
+
+The session is built by hand, not through ``session.tuned_session``: it
+mirrors the frozen bench.py's builder exactly, so its timings compare
+with bench.py's.
 """
 
 from __future__ import annotations

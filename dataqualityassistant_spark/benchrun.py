@@ -30,31 +30,23 @@ def main() -> None:
                          "scaling leg to reject host-level noise windows)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from dataqualityassistant_spark.plans.quality_filter import QualityFilterPipeline
+    from dataqualityassistant_spark.session import stop_session_hard, tuned_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .appName(f"dqa-bench-{args.cores}")
-        .config("spark.sql.shuffle.partitions", str(args.cores))
-        .config("spark.driver.memory", "24g")  # local mode: driver is the executor
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
+    # The timed path is scan → score → sink with no shuffle: parallelism
+    # comes from input splits, and an 8 MB split over the ~6 MB fixture
+    # files gives one split per file at every core count, so both scaling
+    # legs run the same plan.
+    spark = tuned_session(
+        f"dqa-bench-{args.cores}",
+        master=f"local[{args.cores}]",
+        shuffle_partitions=args.cores,
+        driver_memory="24g",  # local mode: driver is the executor
+        extra_conf={"spark.ui.enabled": "false",
+                    "spark.sql.files.maxPartitionBytes": str(8 << 20)},
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from pyspark.sql import functions as F
-
-    from dataqualityassistant_spark.plans.quality_filter import QualityFilterPipeline
-
-    # The timed path is scan → score → sink with NO shuffle (the real
-    # pipeline shape). Parallelism comes from input splits, not an artificial
-    # repartition exchange: 8 MB max split over the ~6 MB fixture files keeps
-    # one split per file (64 splits) at EVERY core count, so both scaling
-    # legs run identical plans with identical total work.
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
     pages = spark.read.parquet(args.pages)
     n = pages.count()
     pipe = QualityFilterPipeline(n_buckets=args.buckets)
@@ -103,8 +95,6 @@ def main() -> None:
     # a lost stop() reply here would burn the parent's whole 1800s
     # subprocess timeout and then crash the bench via TimeoutExpired —
     # the result line is already printed, so a hard stop loses nothing
-    from dataqualityassistant_spark.session import stop_session_hard
-
     stop_session_hard(spark)
 
 

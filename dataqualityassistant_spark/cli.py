@@ -34,20 +34,6 @@ import json
 import sys
 
 
-def _session(app: str, cores: str | None = None):
-    from pyspark.sql import SparkSession
-
-    b = SparkSession.builder.appName(app)
-    if cores:  # spark-submit usually supplies the master; local runs may not
-        b = b.master(f"local[{cores}]")
-    b = (b.config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.sql.execution.arrow.pyspark.enabled", "true"))
-    spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="dataqualityassistant_spark")
     ap.add_argument("--cores", default=None, help="local[N] master when not under spark-submit")
@@ -63,9 +49,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--run-ts", default="")
     p.add_argument("--buckets", type=int, default=64)
     p.add_argument("--waves", type=int, default=1)
-    p.add_argument("--split-bytes", default=None,
-                   help="override spark.sql.files.maxPartitionBytes for the run "
-                        "(e.g. 8m when the input is a few big files)")
 
     p = sub.add_parser("validate")
     p.add_argument("--input", required=True)
@@ -128,15 +111,17 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
     if args.cmd == "sample" and args.fractions and not args.stratify_col:
         ap.error("--fractions requires --stratify-col (rates are per-stratum)")
-    spark = _session(f"dqa-{args.cmd}", args.cores)
-
+    from dataqualityassistant_spark.session import stop_session_hard, tuned_session
     from dataqualityassistant_spark.sources import read_table
+
+    # spark-submit usually supplies the master; local runs may not
+    spark = tuned_session(f"dqa-{args.cmd}",
+                          master=f"local[{args.cores}]" if args.cores else None)
 
     if args.cmd == "filter":
         from dataqualityassistant_spark.plans.quality_filter import QualityFilterPipeline
 
-        pipe = QualityFilterPipeline(n_buckets=args.buckets,
-                                     input_split_bytes=args.split_bytes)
+        pipe = QualityFilterPipeline(n_buckets=args.buckets)
         stats = pipe.run(
             spark, read_table(spark, args.input), args.output,
             metrics_path=args.metrics, lineage_path=args.lineage,
@@ -275,8 +260,6 @@ def main(argv: list[str] | None = None) -> int:
 
     # watchdogged stop: a lost py4j stop() reply must not wedge the CLI
     # after its output is already printed
-    from dataqualityassistant_spark.session import stop_session_hard
-
     stop_session_hard(spark)
     return 0
 

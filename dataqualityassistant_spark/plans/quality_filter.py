@@ -142,14 +142,6 @@ class QualityFilterPipeline:
     sample_fractions: dict | None = None
     sample_default_fraction: float = 1.0
     sample_salt: int = 42
-    # Input split sizing for the Arrow scoring stage, applied (and restored)
-    # around run(). The default 128 MB gives one task per ~65k pages: with
-    # few big input files the stage degenerates to a handful of oversized
-    # Arrow tasks and straggler skew dominates (measured 3.2k vs 8.1k
-    # docs/s e2e on an 800k-page corpus — BASELINE.md scaling probe).
-    # "8m"-ish values give several tasks per core; None leaves the session
-    # conf untouched (right when the input is already many files).
-    input_split_bytes: str | None = None
 
     # ------------------------------------------------------------- scoring
 
@@ -221,32 +213,36 @@ class QualityFilterPipeline:
     def metric_aggs(metric_masks) -> list:
         """Observation aggregates for the expectation masks (element count +
         one conditional count aliased ``u{k}`` per mask) — shared by the
-        batch waves and the streaming foreachBatch sink so the two metrics
-        tables decode identically and cannot drift."""
+        batch waves and the streaming foreachBatch sink, and decoded by
+        :meth:`metric_rows` for both, so the two metrics tables cannot
+        drift."""
         return [F.count(F.lit(1)).alias("element_count")] + [
             F.sum(F.when(m, 1).otherwise(0)).alias(f"u{k}")
             for k, (_, _, _, _, m) in enumerate(metric_masks)
         ]
 
+    @staticmethod
+    def metric_rows(row, metric_masks, **keys) -> list[dict]:
+        """One metrics row per expectation mask from the observed
+        :meth:`metric_aggs` ``row``, prefixed with ``keys`` (the batch
+        wave's run/wave, or the stream's batch id)."""
+        n = int(row["element_count"])
+        out = []
+        for k, (rule_name, etype, kwargs, mostly, _) in enumerate(metric_masks):
+            cnt = int(row[f"u{k}"] or 0)
+            pct = cnt / n * 100 if n > 0 else 0.0
+            out.append({
+                **keys, "rule_name": rule_name, "expectation_type": etype,
+                "column": kwargs.get("column"),
+                "element_count": n, "unexpected_count": cnt,
+                "unexpected_percent": pct,
+                "success": pct <= (1 - mostly) * 100,
+            })
+        return out
+
     # ------------------------------------------------------------- execution
 
-    def run(self, spark: SparkSession, pages: DataFrame, output_path: str,
-            **kwargs) -> dict:
-        """Execute the pipeline (see :meth:`_run_impl` for the wave
-        mechanics). When ``input_split_bytes`` is set, the session's
-        ``maxPartitionBytes`` is overridden for the duration of the run and
-        restored afterwards (exception-safe)."""
-        if not self.input_split_bytes:
-            return self._run_impl(spark, pages, output_path, **kwargs)
-        split_key = "spark.sql.files.maxPartitionBytes"
-        old_split = spark.conf.get(split_key)
-        spark.conf.set(split_key, self.input_split_bytes)
-        try:
-            return self._run_impl(spark, pages, output_path, **kwargs)
-        finally:
-            spark.conf.set(split_key, old_split)
-
-    def _run_impl(
+    def run(
         self,
         spark: SparkSession,
         pages: DataFrame,
@@ -271,8 +267,7 @@ class QualityFilterPipeline:
         # dynamic partition overwrite is set PER WRITER below, never on the
         # session: a session-wide conf.set would silently change overwrite
         # semantics (stale partitions kept) for every later partitioned
-        # write in the same session (the maxPartitionBytes save/restore in
-        # run() exists for the same reason)
+        # write in the same session
         store = CheckpointStore(checkpoint_path) if checkpoint_path else None
         done = store.completed_buckets(run_id) if store else set()
         pending = [b for b in range(self.n_buckets) if b not in done]
@@ -310,18 +305,8 @@ class QualityFilterPipeline:
             row = obs.get
             element_count = int(row["element_count"])
             n_rows_total += element_count
-            wave_metrics = []
-            for k, (rule_name, etype, kwargs, mostly, _) in enumerate(metric_masks):
-                cnt = int(row[f"u{k}"] or 0)
-                pct = (cnt / element_count * 100) if element_count > 0 else 0
-                wave_metrics.append({
-                    "run_id": run_id, "run_ts": run_ts, "wave": wave_key,
-                    "rule_name": rule_name, "expectation_type": etype,
-                    "column": kwargs.get("column"),
-                    "element_count": element_count, "unexpected_count": cnt,
-                    "unexpected_percent": pct,
-                    "success": pct <= (1 - mostly) * 100,
-                })
+            wave_metrics = self.metric_rows(row, metric_masks, run_id=run_id,
+                                            run_ts=run_ts, wave=wave_key)
             all_metrics.extend(wave_metrics)
             if metrics_path and wave_metrics:
                 # per-wave dynamic partition overwrite: re-running a crashed

@@ -71,16 +71,7 @@ def make_batch_processor(
          .partitionBy("batch_id", "part_bucket")
          .parquet(output_path))
         if metrics_path and obs is not None:
-            row = obs.get
-            n = int(row["element_count"])
-            rows = [
-                {
-                    "batch_id": batch_id, "rule_name": rule, "expectation_type": etype,
-                    "column": kw.get("column"), "element_count": n,
-                    "unexpected_count": int(row[f"u{k}"] or 0),
-                }
-                for k, (rule, etype, kw, _, _) in enumerate(masks)
-            ]
+            rows = pipe.metric_rows(obs.get, masks, batch_id=batch_id)
             if rows:
                 (batch_df.sparkSession.createDataFrame(rows)
                  .write.mode("overwrite")

@@ -5,30 +5,20 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from dataqualityassistant_spark.session import stop_spark_hard, tuned_session
 
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("dqa-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    spark = tuned_session("dqa-spark-tests", "local[4]", shuffle_partitions=8,
+                          driver_memory="8g",
+                          extra_conf={"spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     gateway_proc = getattr(spark.sparkContext._gateway, "proc", None)
     yield spark
     # spark.stop()'s py4j reply can be lost (observed in bench runs: context
     # torn down, gateway idle, Python polling the reply socket forever) —
     # never let session teardown wedge the whole suite
-    from dataqualityassistant_spark.session import stop_spark_hard
-
     stop_spark_hard(spark.stop, gateway_proc, timeout=60)
 
 

@@ -185,9 +185,19 @@ def test_group_suggestions_keys():
 
 
 def test_tuned_session_reuses_active(spark):
+    """A second tuned_session() returns the active session and keeps a value
+    the user set: getOrCreate() applies builder options to an existing
+    session, so the factory must not restate Spark's defaults."""
     from dataqualityassistant_spark.session import tuned_session
-    s = tuned_session()  # getOrCreate returns the active test session
-    assert s is spark
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "8m")
+    try:
+        s = tuned_session()  # getOrCreate returns the active test session
+        assert s is spark
+        assert spark.conf.get(key) == "8m"
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_metrics_trend_across_runs(spark, tmp_path):

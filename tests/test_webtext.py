@@ -386,6 +386,30 @@ def test_streaming_replayed_batch_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(out).count() == 100
 
 
+def test_streaming_metrics_match_batch_run(spark, tmp_path):
+    """The foreachBatch sink and a one-wave run() decode their observed
+    metrics through the same helper: the same pages give the same
+    per-expectation counts, percentages and verdicts in both tables."""
+    from dataqualityassistant_spark.streaming.stream_filter import make_batch_processor
+
+    pages = spark.createDataFrame(pages_batch(0, 60), PAGES_SCHEMA)
+    pipe = QualityFilterPipeline(n_buckets=4)
+    stream_met = str(tmp_path / "stream_metrics")
+    make_batch_processor(pipe, str(tmp_path / "stream_out"), metrics_path=stream_met)(pages, 0)
+    batch_met = str(tmp_path / "batch_metrics")
+    pipe.run(spark, pages, str(tmp_path / "batch_out"), metrics_path=batch_met, run_id="m")
+
+    cols = ["rule_name", "expectation_type", "column", "unexpected_count",
+            "unexpected_percent", "success"]
+
+    def decoded(path):
+        return {tuple(r) for r in spark.read.parquet(path).select(*cols).collect()}
+
+    batch = decoded(batch_met)
+    assert len(batch) == len(pipe._expectation_metric_masks())
+    assert decoded(stream_met) == batch
+
+
 def test_output_drops_raw_text_by_default(spark, tmp_path):
     """The persisted output is the scrubbed corpus: raw `text` is scored but
     not written (the input table already holds it; duplicating doubles output
@@ -590,20 +614,6 @@ def test_pipeline_optin_sampling_and_canonical_urls(spark):
     # the scan: NO exchange anywhere in the whole scored plan
     plan = sampled._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
-
-
-def test_pipeline_input_split_bytes_scoped(spark, tmp_path):
-    from dataqualityassistant_spark.fixtures import pages_spark_df
-    from dataqualityassistant_spark.plans.quality_filter import QualityFilterPipeline
-
-    key = "spark.sql.files.maxPartitionBytes"
-    before = spark.conf.get(key)
-    pages = pages_spark_df(spark, 500)
-    out = str(tmp_path / "scored")
-    pipe = QualityFilterPipeline(n_buckets=4, input_split_bytes="8m")
-    stats = pipe.run(spark, pages, out, run_id="split-test")
-    assert stats["rows"] == 500
-    assert spark.conf.get(key) == before  # restored after the run
 
 
 def test_stateful_stream_rejects_trigger_once_with_idle_timeout(spark, tmp_path):
