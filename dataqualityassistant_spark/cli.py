@@ -111,9 +111,14 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
     if args.cmd == "sample" and args.fractions and not args.stratify_col:
         ap.error("--fractions requires --stratify-col (rates are per-stratum)")
+    from pyspark.sql import SparkSession
+
     from dataqualityassistant_spark.session import stop_session_hard, tuned_session
     from dataqualityassistant_spark.sources import read_table
 
+    # a caller's live session (main() called from Python) is reused and left
+    # running; only a session this call started is stopped at the end
+    owns_session = SparkSession.getActiveSession() is None
     # spark-submit usually supplies the master; local runs may not
     spark = tuned_session(f"dqa-{args.cmd}",
                           master=f"local[{args.cores}]" if args.cores else None)
@@ -260,7 +265,8 @@ def main(argv: list[str] | None = None) -> int:
 
     # watchdogged stop: a lost py4j stop() reply must not wedge the CLI
     # after its output is already printed
-    stop_session_hard(spark)
+    if owns_session:
+        stop_session_hard(spark)
     return 0
 
 

@@ -26,8 +26,6 @@ from functools import lru_cache
 import numpy as np
 import pandas as pd
 from pandas._libs.hashtable import Int64HashTable
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -180,7 +178,3 @@ def langid_udf(texts: pd.Series) -> pd.DataFrame:
     out = classify_batch(list(texts))
     return pd.DataFrame({"lang": [t[0] for t in out],
                          "margin": [t[1] for t in out]}, index=texts.index)
-
-
-def with_langid(df, text_col: str = "text", out_col: str = "langid") -> "DataFrame":
-    return df.withColumn(out_col, langid_udf(F.col(text_col)))

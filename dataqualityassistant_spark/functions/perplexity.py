@@ -18,7 +18,6 @@ from functools import lru_cache
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -124,7 +123,3 @@ def log_perplexity_batch(texts) -> list[float]:
 @pandas_udf(T.DoubleType())
 def perplexity_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(log_perplexity_batch(list(texts)), index=texts.index)
-
-
-def with_perplexity(df, text_col: str = "text", out_col: str = "log_ppl"):
-    return df.withColumn(out_col, perplexity_udf(F.col(text_col)))

@@ -94,6 +94,13 @@ class CompiledExpectation:
     # functions are legal in projections, not inside aggregates/filters)
     pre_project: bool = False
 
+    @property
+    def row_local(self) -> bool:
+        """Judges each row on its own (a compiled, non-window mask) — the
+        ONE test for the pipeline's verdict and metrics and ``keep_mask``.
+        Not: set-level checks, ``increasing`` windows, two-pass z-scores."""
+        return self.unexpected_mask is not None and not self.pre_project
+
     def agg_exprs(self, prefix: str) -> list[Column]:
         return [expr.alias(f"{prefix}_{name}") for name, expr in self._agg.items()]
 
@@ -576,7 +583,3 @@ def compile_expectation(expectation_type: str, kwargs: dict[str, Any],
             unexpected_mask=None,
             error=str(e),
         )
-
-
-def registered_types() -> list[str]:
-    return sorted(_COMPILERS)

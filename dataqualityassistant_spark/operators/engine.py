@@ -448,17 +448,17 @@ class SuiteEngine:
         """Per-row keep predicate: a row is kept iff NO row-local expectation
         flags it. (Row-granular analog of rule success = AND of expectations,
         reference quality_engine.py:445-446.) Expectations without a
-        ROW-LOCAL verdict contribute nothing, by contract: set-level checks
-        (uniqueness, of_type — dedup is its own operator), window-based
-        masks (``increasing`` — a window expression is illegal in WHERE),
-        and two-pass z-scores (μ/σ need their own aggregate). The pandas
-        counterpart (``oracle.oracle_keep_mask``) skips the SAME set so the
-        engine/oracle verdicts stay in lockstep."""
+        ROW-LOCAL verdict (``CompiledExpectation.row_local``) contribute
+        nothing, by contract: set-level checks (uniqueness, of_type — dedup
+        is its own operator), window-based masks (``increasing`` — a window
+        expression is illegal in WHERE), and two-pass z-scores (μ/σ need
+        their own aggregate). The pandas counterpart
+        (``oracle.oracle_keep_mask``) skips the SAME set so the engine/oracle
+        verdicts stay in lockstep."""
         mask = F.lit(True)
         for _, ces in self.compile_rules(rules):
             for ce in ces:
-                if (ce.unexpected_mask is not None and not ce.pre_project
-                        and getattr(ce, "zscore_threshold", None) is None):
+                if ce.row_local:
                     mask = mask & ~ce.unexpected_mask
         return mask
 

@@ -5,13 +5,18 @@ with ``mostly`` thresholds, per-rule metrics, suite verdicts — reference
 ``quality_engine.py:99-155``) as a distributed keep/drop pipeline over
 Common-Crawl-style pages ``(url, warc_ts, html, text, lang)``:
 
-1. **Feature stage** — Gopher/C4 heuristics as pure Spark SQL expressions;
-   langid + char-trigram perplexity as Arrow-batched pandas UDFs. The
-   ``html`` binary column is pruned out before any UDF (never deserialized).
+1. **Feature stage** — every derived column (Gopher/C4 heuristics,
+   repetition, langid, char-trigram perplexity) comes from ONE fused
+   Arrow-batched UDF (``functions/scoring.py``). The ``html`` binary column
+   is pruned out before it (never deserialized).
 2. **Rule stage** — the web-text rule suite is ordinary expectations over
    the derived feature columns, compiled by the same registry as every
    other rule; per-row verdict = AND of rule masks (row-granular analog of
-   rule success = AND of expectations, reference ``:445-446``).
+   rule success = AND of expectations, reference ``:445-446``). Only
+   ROW-LOCAL expectations (``CompiledExpectation.row_local``) judge a row,
+   and the same list is the metrics table; uniqueness, window
+   (``increasing``) and z-score expectations are suite-level only
+   (``run_suite``).
 3. **Scrub stage** — ordered JVM ``regexp_replace`` PII/toxicity chain,
    byte-identical to the Python-re oracle.
 4. **Outputs** — scored table (parquet, partitioned by url-hash bucket;
@@ -32,9 +37,11 @@ Scale design (10^12 docs, 1000 executors):
 
 from __future__ import annotations
 
+import operator
 import time
 from collections.abc import Sequence
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -113,35 +120,18 @@ def default_webtext_rules() -> list[Rule]:
     ]
 
 
+# salt fan-out for the per-domain aggregation in domain_stats
+DOMAIN_SALT = 16
+
+
 @dataclass
 class QualityFilterPipeline:
+    """Pre-stages (``html_to_text_column``, ``canonicalize_url``,
+    ``stratified_hash_sample``) are applied by the caller to ``pages``
+    before :meth:`score` / :meth:`run`; each rides the scan."""
+
     rules: list[Rule] = field(default_factory=default_webtext_rules)
-    text_col: str = "text"
     n_buckets: int = 64          # url-hash partition groups (resume granularity)
-    domain_salt: int = 16        # salt fan-out for per-domain aggregation
-    reference_parity: bool = False
-    # Fill missing `text` from the html payload (JVM regexp chain, byte-
-    # identical to the Python oracle — functions/html_text.py) before
-    # scoring. Off by default: the input contract provides text, and reading
-    # the binary payload doubles scan volume; enable for raw WARC drops.
-    extract_text_from_html: bool = False
-    # Columns scored but NOT persisted to the output table. Default drops the
-    # raw text: the output corpus is the scrubbed text + features + verdict,
-    # and the input table already holds the raw bytes (lineage via url) —
-    # duplicating them doubles output volume at 100 TB (measured 230 MB →
-    # 123 MB on the 200k-page corpus). Set to () to keep everything.
-    output_drop_columns: tuple = ("text",)
-    # Opt-in pre-scoring stages (both ride the scan — no extra shuffle):
-    # canonicalize_urls rewrites `url` through ops/urltools before bucketing
-    # and lineage, so tracking-param variants of one page share a bucket and
-    # identity; sample_fractions applies deterministic per-`lang` hash
-    # sampling (ops/sampling, keyed on url) BEFORE the expensive Arrow
-    # scoring stage — the cheap way to run a pilot fraction of a crawl.
-    # Note: suite metrics then describe the SAMPLED corpus.
-    canonicalize_urls: bool = False
-    sample_fractions: dict | None = None
-    sample_default_fraction: float = 1.0
-    sample_salt: int = 42
 
     # ------------------------------------------------------------- scoring
 
@@ -149,47 +139,23 @@ class QualityFilterPipeline:
         """Pure transformation: pages → scored rows. Lazy; no jobs run.
         Drops `html` immediately — the binary payload must never cross the
         Arrow boundary (input_hint: carried through but unscanned)."""
-        if self.canonicalize_urls:
-            from dataqualityassistant_spark.ops.urltools import canonicalize_url
-
-            df = df.withColumn("url", canonicalize_url("url"))
-        if self.sample_fractions is not None:
-            from dataqualityassistant_spark.ops.sampling import stratified_hash_sample
-
-            df = stratified_hash_sample(
-                df, self.sample_fractions, strata_col="lang",
-                salt=self.sample_salt,
-                default_fraction=self.sample_default_fraction,
-                key_expr=F.col("url"))
-        cols = [c for c in df.columns if c != "html"]
-        if self.extract_text_from_html and "html" in df.columns:
-            from dataqualityassistant_spark.functions.html_text import html_to_text_column
-
-            filled = F.coalesce(F.col(self.text_col), html_to_text_column("html"))
-            scored = df.withColumn(self.text_col, filled).select(*cols)
-        else:
-            scored = df.select(*cols)
+        scored = df.select(*[c for c in df.columns if c != "html"])
         # ALL derived columns (Gopher features, repetition, langid,
         # perplexity) come from ONE fused Arrow UDF stage: HOF-lambda SQL
         # expressions fall out of whole-stage codegen and stopped scaling
         # (see functions/scoring.py); the fused Python loop is faster and
         # bit-identical to the label oracle.
-        scored = with_text_scores(scored, self.text_col)
+        scored = with_text_scores(scored)
 
-        engine = SuiteEngine(reference_parity=self.reference_parity)
-        failed = []
-        for rule, ces in engine.compile_rules(self.rules):
-            masks = [ce.unexpected_mask for ce in ces if ce.unexpected_mask is not None]
-            if not masks:
-                continue
-            hit = masks[0]
-            for m in masks[1:]:
-                hit = hit | m
-            failed.append(F.when(hit, F.lit(rule.name)))
+        by_rule: dict[str, list[Column]] = {}
+        for rule_name, _, _, _, mask in self._expectation_metric_masks():
+            by_rule.setdefault(rule_name, []).append(mask)
+        failed = [F.when(reduce(operator.or_, masks), F.lit(name))
+                  for name, masks in by_rule.items()]
         failed_rules = F.array_compact(F.array(*failed)) if failed else F.array().cast("array<string>")
         scored = scored.withColumn("failed_rules", failed_rules)
         scored = scored.withColumn("verdict", F.size("failed_rules") == 0)
-        scored = scored.withColumn("scrubbed_text", scrub_text_column(self.text_col))
+        scored = scored.withColumn("scrubbed_text", scrub_text_column("text"))
         scored = scored.withColumn(
             "part_bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(self.n_buckets)).cast("int")
         )
@@ -197,17 +163,12 @@ class QualityFilterPipeline:
 
     def _expectation_metric_masks(self) -> list[tuple[str, str, dict, float, Column]]:
         """(rule_name, expectation_type, kwargs, mostly, mask) for every
-        row-local expectation — the observe() metric set."""
-        engine = SuiteEngine(reference_parity=self.reference_parity)
-        out = []
-        for rule, ces in engine.compile_rules(self.rules):
-            for ce in ces:
-                # pre_project masks contain window expressions — legal in
-                # score()'s projection but not inside observe() aggregates;
-                # such rules are evaluated by the engine path instead
-                if ce.unexpected_mask is not None and not ce.pre_project:
-                    out.append((rule.name, ce.expectation_type, ce.kwargs, ce.mostly, ce.unexpected_mask))
-        return out
+        row-local expectation: the verdict set of :meth:`score` and the
+        observe() metric set. Window masks would sort inside the Arrow
+        scoring stage and are illegal inside observe() aggregates."""
+        return [(rule.name, ce.expectation_type, ce.kwargs, ce.mostly, ce.unexpected_mask)
+                for rule, ces in SuiteEngine().compile_rules(self.rules)
+                for ce in ces if ce.row_local]
 
     @staticmethod
     def metric_aggs(metric_masks) -> list:
@@ -293,11 +254,9 @@ class QualityFilterPipeline:
                 obs, *self.metric_aggs(metric_masks),
                 F.sum(F.col("verdict").cast("long")).alias("kept"),
                 F.max("warc_ts").alias("watermark"))
-            drop = [c for c in self.output_drop_columns if c in observed.columns]
-            if drop:
-                observed = observed.drop(*drop)
-
-            (shuffle_to_buckets(observed, buckets).write.mode("overwrite")
+            # raw text is scored but not persisted: the output corpus is the
+            # scrubbed text, and the input table already holds the raw bytes
+            (shuffle_to_buckets(observed.drop("text"), buckets).write.mode("overwrite")
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy("part_bucket")
              .parquet(output_path))
@@ -360,10 +319,10 @@ class QualityFilterPipeline:
         """Per-host-domain keep rates with two-phase salted aggregation.
         Web host-domain frequency is power-law (a handful of hosts own ~30%
         of rows); a naive groupBy(domain) puts those hosts' rows on single
-        reducers. Salting fans each domain across `domain_salt` partial
+        reducers. Salting fans each domain across `DOMAIN_SALT` partial
         groups; the final reduce sees ≤ salt rows per domain."""
         domain = F.parse_url(F.col("url"), F.lit("HOST")).alias("domain")
-        salt = F.pmod(F.xxhash64(F.col("url")), F.lit(self.domain_salt))
+        salt = F.pmod(F.xxhash64(F.col("url")), F.lit(DOMAIN_SALT))
         partial = (
             scored.select(domain, salt.alias("__salt"), F.col("verdict"))
             .groupBy("domain", "__salt")

@@ -59,12 +59,9 @@ def make_batch_processor(
             # so a REPLAYED batch_id would collide with its first attempt
             obs = Observation()
             scored = scored.observe(obs, *pipe.metric_aggs(masks))
-        drop = [c for c in pipe.output_drop_columns if c in scored.columns]
-        if drop:
-            scored = scored.drop(*drop)
         # batch_id partitioning + dynamic overwrite = idempotent replay:
         # a re-delivered micro-batch overwrites ONLY its own partitions
-        (shuffle_to_buckets(scored, range(pipe.n_buckets))
+        (shuffle_to_buckets(scored.drop("text"), range(pipe.n_buckets))
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")

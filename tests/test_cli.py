@@ -1,19 +1,47 @@
-"""CLI subprocess tests: the `python -m dataqualityassistant_spark.cli`
-surface (the spark-submit driver script body) driven as real subprocesses —
-validate with a rules JSON + markdown report, and profile with suggestions."""
+"""CLI tests: the `python -m dataqualityassistant_spark.cli` surface (the
+spark-submit driver script body). `test_cli_validate_writes_report` drives
+it as a real subprocess; the rest call `cli.main(argv)` in-process on the
+shared test session, which main() reuses and leaves running."""
 
+import contextlib
+import io
 import json
 import os
 import subprocess
 import sys
+import types
 
 import pytest
+
+from dataqualityassistant_spark import cli
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.01"
 
 
-def run_cli(args, timeout=300):
+@pytest.fixture(autouse=True)
+def _shared_session(spark):
+    """main() builds through tuned_session, which reuses the active session
+    (and sets its log level to WARN)."""
+    yield
+    spark.sparkContext.setLogLevel("ERROR")
+
+
+def run_cli(args):
+    """`cli.main(argv)` in-process, shaped like a finished subprocess:
+    stdout/stderr captured, SystemExit (argparse errors) as the return code.
+    Other exceptions propagate and fail the test with their traceback."""
+    out, err = io.StringIO(), io.StringIO()
+    with contextlib.redirect_stdout(out), contextlib.redirect_stderr(err):
+        try:
+            code = cli.main(["--cores", "4", *args])
+        except SystemExit as e:
+            code = e.code
+    return types.SimpleNamespace(returncode=code, stdout=out.getvalue(),
+                                 stderr=err.getvalue())
+
+
+def run_cli_process(args, timeout=300):
     return subprocess.run(
         [sys.executable, "-m", "dataqualityassistant_spark.cli",
          "--cores", "4", *args],
@@ -33,9 +61,9 @@ def test_cli_validate_writes_report(tmp_path):
     rules_file = tmp_path / "rules.json"
     rules_file.write_text(json.dumps(rules))
     report = tmp_path / "report.md"
-    res = run_cli(["validate", "--input", f"{SF_DIR}/documents.parquet",
-                   "--rules", str(rules_file), "--table-name", "documents",
-                   "--report", str(report)])
+    res = run_cli_process(["validate", "--input", f"{SF_DIR}/documents.parquet",
+                           "--rules", str(rules_file), "--table-name", "documents",
+                           "--report", str(report)])
     assert res.returncode == 0, res.stderr[-2000:]
     text = report.read_text()
     assert "docs_basic" in text and "expect_column_values_to_not_be_null" in text

@@ -121,6 +121,34 @@ def test_keep_drop_f1_vs_oracle(spark, pages_pdf, pages_sdf):
     assert mismatch.empty, mismatch.head()
 
 
+def test_verdict_and_metrics_share_the_row_local_expectations(spark, pages_pdf, pages_sdf):
+    """A window (`increasing`), a set-level (`unique`) and a two-pass
+    (z-score) expectation have no row-local verdict: score() must judge
+    rows by exactly the expectations the oracle and the metrics table use,
+    and no window may enter the scoring plan."""
+    from dataqualityassistant_spark.rules import Rule
+
+    default = default_webtext_rules()
+    rules = default + [Rule(id=107, name="suite_level", rule_config=[
+        {"expectation_type": "expect_column_values_to_be_increasing",
+         "kwargs": {"column": "word_count", "order_by": "url", "partition_by": "lang"}},
+        {"expectation_type": "expect_column_values_to_be_unique",
+         "kwargs": {"column": "detected_lang"}},
+        {"expectation_type": "expect_column_value_z_scores_to_be_less_than",
+         "kwargs": {"column": "log_ppl", "threshold": 1.0}},
+    ])]
+    pipe = QualityFilterPipeline(rules=rules)
+    scored = pipe.score(pages_sdf)
+    got = dict(scored.select("url", "verdict").collect())
+    want = oracle_score_pages(pages_pdf, rules).set_index("url")["verdict"].to_dict()
+    assert len(got) == len(pages_pdf)
+    drift = [u for u in want if got[u] != bool(want[u])]
+    assert not drift, f"{len(drift)} verdicts differ from the oracle, e.g. {drift[:3]}"
+    assert len(pipe._expectation_metric_masks()) == sum(len(r.expectations) for r in default)
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, plan
+
+
 # -------------------------------------------------------- pipeline run/resume
 
 def test_pipeline_run_with_metrics_lineage_checkpoint(spark, tmp_path):
@@ -413,16 +441,12 @@ def test_streaming_metrics_match_batch_run(spark, tmp_path):
 def test_output_drops_raw_text_by_default(spark, tmp_path):
     """The persisted output is the scrubbed corpus: raw `text` is scored but
     not written (the input table already holds it; duplicating doubles output
-    volume at scale). output_drop_columns=() keeps everything."""
+    volume at scale)."""
     pages = pages_spark_df(spark, 100, partitions=2)
     out = str(tmp_path / "out")
     QualityFilterPipeline(n_buckets=2).run(spark, pages, out, run_id="d")
     cols = set(spark.read.parquet(out).columns)
     assert "text" not in cols and {"scrubbed_text", "verdict", "url"} <= cols
-
-    out2 = str(tmp_path / "out2")
-    QualityFilterPipeline(n_buckets=2, output_drop_columns=()).run(spark, pages, out2, run_id="d")
-    assert "text" in set(spark.read.parquet(out2).columns)
 
 
 def test_stateful_domain_stats_accumulate_across_batches(spark, tmp_path):
@@ -569,7 +593,10 @@ def test_html_extraction_byte_parity(spark):
 
 
 def test_pipeline_extracts_text_from_html_when_missing(spark):
-    from dataqualityassistant_spark.functions.html_text import html_to_text_python
+    from dataqualityassistant_spark.functions.html_text import (
+        html_to_text_column,
+        html_to_text_python,
+    )
 
     rows = [
         ("https://a.example/x", None, b"<html><body>Recovered body text that is "
@@ -579,34 +606,39 @@ def test_pipeline_extracts_text_from_html_when_missing(spark):
     pdf = spark.createDataFrame(
         [(u, None, bytearray(h), t, l) for u, _, h, t, l in rows],
         "url string, warc_ts timestamp, html binary, text string, lang string")
-    pipe = QualityFilterPipeline(extract_text_from_html=True)
-    got = {r["url"]: r for r in pipe.score(pdf).select("url", "scrubbed_text", "n_chars").collect()}
+    # the pre-stage is the caller's: fill missing text from the html payload
+    filled = pdf.withColumn("text", F.coalesce("text", html_to_text_column("html")))
+    got = {r["url"]: r for r in QualityFilterPipeline().score(filled)
+           .select("url", "scrubbed_text", "n_chars").collect()}
     extracted = html_to_text_python(rows[0][2])
     assert got["https://a.example/x"]["n_chars"] == len(extracted)
     assert got["https://a.example/y"]["scrubbed_text"] == "given text wins"
-    # default pipeline leaves missing text missing
+    # without the pre-stage, missing text stays missing
     got_off = {r["url"]: r for r in QualityFilterPipeline().score(pdf).select("url", "n_chars").collect()}
     assert got_off["https://a.example/x"]["n_chars"] is None
 
 
 def test_pipeline_optin_sampling_and_canonical_urls(spark):
     from dataqualityassistant_spark.fixtures import pages_spark_df
+    from dataqualityassistant_spark.ops.sampling import stratified_hash_sample
+    from dataqualityassistant_spark.ops.urltools import canonicalize_url
     from dataqualityassistant_spark.plans.quality_filter import QualityFilterPipeline
     from pyspark.sql import functions as F
 
+    def pre_stages(df):
+        # canonical urls first, so sampling and bucketing key on them
+        df = df.withColumn("url", canonicalize_url("url"))
+        return stratified_hash_sample(df, {"en": 0.5}, strata_col="lang",
+                                      default_fraction=0.1, key_expr=F.col("url"))
+
     pages = pages_spark_df(spark, 2000)
-    base = QualityFilterPipeline()
-    piped = QualityFilterPipeline(
-        canonicalize_urls=True,
-        sample_fractions={"en": 0.5},
-        sample_default_fraction=0.1,
-    )
-    full = base.score(pages)
-    sampled = piped.score(pages)
+    pipe = QualityFilterPipeline()
+    full = pipe.score(pages)
+    sampled = pipe.score(pre_stages(pages))
     n_full, n_sampled = full.count(), sampled.count()
     assert 0 < n_sampled < n_full
     # deterministic: a second plan over the same input keeps the exact rows
-    again = {r["url"] for r in piped.score(pages).select("url").collect()}
+    again = {r["url"] for r in pipe.score(pre_stages(pages)).select("url").collect()}
     assert {r["url"] for r in sampled.select("url").collect()} == again
     # canonicalization really ran: no uppercase scheme/host, no utm params
     assert sampled.where(F.col("url").rlike("^HTTPS|utm_")).count() == 0
