@@ -29,7 +29,10 @@ Scale design (10^12 docs, 1000 executors):
 - the hot path is scan → project (codegen + the fused Arrow UDF stage) →
   ONE shuffle onto ``min(buckets, shuffle_parallelism)`` write tasks → write;
 - metrics, row/kept counts and the watermark ride the write via ``observe``;
-- lineage is one read-back of a 3-column projection of the written buckets;
+- lineage is one groupBy of the wave's bucket-shuffled frame, persisted for
+  the write and released after it (no read-back of the written buckets);
+- the metadata-scale tables (metrics, lineage: rows per wave, not per page)
+  are written on the driver by :func:`write_partition`, not by a Spark job;
 - host-domain skew never concentrates work because per-domain aggregation
   is two-phase (salt → partial agg → final agg);
 - resume is per-bucket: dynamic partition overwrite + watermark records.
@@ -39,10 +42,13 @@ from __future__ import annotations
 
 import operator
 import time
+import uuid
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 from functools import reduce
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,6 +69,64 @@ def shuffle_to_buckets(df: DataFrame, buckets: Sequence[int]) -> DataFrame:
     n = min(len(buckets), shuffle_parallelism(df))
     slot = F.array_position(F.array(*map(F.lit, buckets)), F.col("part_bucket")) - 1
     return df.repartitionById(n, slot.cast("int"))
+
+
+# parquet types of the metrics tables' data columns (the partition keys
+# run_id/wave or batch_id live in the path). Files hold them in sorted name
+# order: the order Spark's dict-row inference gave these tables.
+_METRIC_TYPES = {
+    "column": pa.string(), "element_count": pa.int64(),
+    "expectation_type": pa.string(), "rule_name": pa.string(),
+    "run_ts": pa.string(), "success": pa.bool_(),
+    "unexpected_count": pa.int64(), "unexpected_percent": pa.float64(),
+}
+# the lineage table's data columns; a UTC-adjusted watermark, so Spark reads
+# it as ``timestamp``, never ``timestamp_ntz``
+_LINEAGE_SCHEMA = pa.schema([
+    ("part_bucket", pa.int32()), ("rows", pa.int64()), ("kept", pa.int64()),
+    ("watermark", pa.timestamp("us", tz="UTC")),
+])
+
+
+def metrics_table(rows: list[dict]) -> pa.Table:
+    """The data columns of :meth:`QualityFilterPipeline.metric_rows` as an
+    Arrow table for :func:`write_partition`."""
+    names = sorted(k for k in rows[0] if k in _METRIC_TYPES)
+    return pa.Table.from_pylist(rows, schema=pa.schema([(k, _METRIC_TYPES[k]) for k in names]))
+
+
+def write_partition(spark: SparkSession, path: str, partition: dict, table: pa.Table) -> None:
+    """Replace partition ``partition`` (ordered ``{column: value}``) of the
+    parquet table at ``path`` with ``table``, written on the driver: one
+    file, no Spark job. For metadata-scale tables only (a wave's metrics
+    and lineage, a micro-batch's metrics).
+
+    The bytes go through the path's Hadoop ``FileSystem``, so any filesystem
+    Spark writes to works. The file is staged as ``_staging-*`` under
+    ``path`` (a name Spark's readers skip), then the partition directory is
+    replaced by it: a re-run replaces its partition, as a dynamic partition
+    overwrite does, and a crash or a failed write leaves at worst an
+    invisible staging file."""
+    jvm = spark._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    root = Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink, compression="zstd")
+    name = f"part-00000-{uuid.uuid4()}.zstd.parquet"
+    staged = Path(root, f"_staging-{name}")
+    escape = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    target = Path(root, "/".join(escape.getPartitionPathString(k, str(v))
+                                 for k, v in partition.items()))
+    out = fs.create(staged, True)
+    try:
+        out.write(sink.getvalue().to_pybytes())
+    finally:
+        out.close()
+    fs.delete(target, True)
+    fs.mkdirs(target)
+    if not fs.rename(staged, Path(target, name)):
+        raise OSError(f"could not move {staged.toString()} to {target.toString()}")
 
 
 def default_webtext_rules() -> list[Rule]:
@@ -139,6 +203,11 @@ class QualityFilterPipeline:
         """Pure transformation: pages → scored rows. Lazy; no jobs run.
         Drops `html` immediately — the binary payload must never cross the
         Arrow boundary (input_hint: carried through but unscanned)."""
+        return self._score(df, self._expectation_metric_masks())
+
+    def _score(self, df: DataFrame, metric_masks) -> DataFrame:
+        """:meth:`score` with the suite already compiled
+        (:meth:`_expectation_metric_masks`), for callers that compile it once."""
         scored = df.select(*[c for c in df.columns if c != "html"])
         # ALL derived columns (Gopher features, repetition, langid,
         # perplexity) come from ONE fused Arrow UDF stage: HOF-lambda SQL
@@ -148,7 +217,7 @@ class QualityFilterPipeline:
         scored = with_text_scores(scored)
 
         by_rule: dict[str, list[Column]] = {}
-        for rule_name, _, _, _, mask in self._expectation_metric_masks():
+        for rule_name, _, _, _, mask in metric_masks:
             by_rule.setdefault(rule_name, []).append(mask)
         failed = [F.when(reduce(operator.or_, masks), F.lit(name))
                   for name, masks in by_rule.items()]
@@ -218,12 +287,13 @@ class QualityFilterPipeline:
     ) -> dict:
         """Execute the pipeline with per-bucket checkpointed waves.
 
-        Each wave: score pending buckets → shuffle onto write tasks → write
-        output partitions (dynamic overwrite ⇒ idempotent re-run), whose
-        observe() yields the rule metrics, row/kept counts and watermark →
-        metrics → lineage (one read-back, only with ``lineage_path``) →
-        watermark record committed last. ``max_buckets`` processes only a
-        prefix of pending buckets (the kill-and-resume test's mid-run crash).
+        Each wave: score pending buckets → shuffle onto write tasks (persisted
+        only with ``lineage_path``) → write output partitions (dynamic
+        overwrite ⇒ idempotent re-run), whose observe() yields the rule
+        metrics, row/kept counts and watermark → metrics → lineage (a groupBy
+        of the persisted wave) → persist released → watermark record
+        committed last. ``max_buckets`` processes only a prefix of pending
+        buckets (the kill-and-resume test's mid-run crash).
         """
         # dynamic partition overwrite is set PER WRITER below, never on the
         # session: a session-wide conf.set would silently change overwrite
@@ -237,6 +307,7 @@ class QualityFilterPipeline:
 
         t0 = time.time()
         metric_masks = self._expectation_metric_masks()
+        scored = self._score(pages, metric_masks)
         all_metrics: list[dict] = []
         n_rows_total = 0
         # wave keys continue from completed waves so a resume never reuses a
@@ -247,55 +318,50 @@ class QualityFilterPipeline:
         wave_groups = [w for w in wave_groups if w]
         for wave_idx, buckets in enumerate(wave_groups):
             wave_key = wave_base + wave_idx
-            scored = self.score(pages).filter(F.col("part_bucket").isin(buckets))
-
+            partition = {"run_id": run_id, "wave": wave_key}
             obs = Observation(f"metrics-{run_id}-{wave_idx}")
-            observed = scored.observe(
+            observed = scored.filter(F.col("part_bucket").isin(buckets)).observe(
                 obs, *self.metric_aggs(metric_masks),
                 F.sum(F.col("verdict").cast("long")).alias("kept"),
                 F.max("warc_ts").alias("watermark"))
-            # raw text is scored but not persisted: the output corpus is the
-            # scrubbed text, and the input table already holds the raw bytes
-            (shuffle_to_buckets(observed.drop("text"), buckets).write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("part_bucket")
-             .parquet(output_path))
-
-            row = obs.get
-            element_count = int(row["element_count"])
-            n_rows_total += element_count
-            wave_metrics = self.metric_rows(row, metric_masks, run_id=run_id,
-                                            run_ts=run_ts, wave=wave_key)
-            all_metrics.extend(wave_metrics)
-            if metrics_path and wave_metrics:
-                # per-wave dynamic partition overwrite: re-running a crashed
-                # wave replaces its metrics instead of appending duplicates,
-                # and metrics for completed waves survive a mid-run crash
-                (spark.createDataFrame(wave_metrics)
-                 .write.mode("overwrite")
+            # raw text is scored but not written: the output corpus is the
+            # scrubbed text, and the input table already holds the raw bytes.
+            # The shuffled wave is cached for the lineage groupBy below (only
+            # when there is a lineage table to feed); the observation still
+            # resolves through the cached plan.
+            wave = shuffle_to_buckets(observed.drop("text"), buckets)
+            if lineage_path:
+                wave.persist()
+            try:
+                (wave.write.mode("overwrite")
                  .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("run_id", "wave")
-                 .parquet(metrics_path))
+                 .partitionBy("part_bucket")
+                 .parquet(output_path))
 
-            # lineage: per-bucket counts + warc_ts watermark, read back from
-            # the written buckets (3-column pruned, bucket-pruned scan) and
-            # written in the same job. An empty wave wrote no files, so there
-            # is nothing to read. Per-wave dynamic partition overwrite, like
-            # metrics: a wave re-run after a crash before its checkpoint
-            # replaces its partition instead of duplicating rows.
-            if lineage_path and element_count:
-                (spark.read.parquet(output_path)
-                 .filter(F.col("part_bucket").isin(buckets))
-                 .groupBy("part_bucket")
-                 .agg(F.count(F.lit(1)).alias("rows"),
-                      F.sum(F.col("verdict").cast("long")).alias("kept"),
-                      F.max("warc_ts").alias("watermark"))
-                 .withColumn("run_id", F.lit(run_id))
-                 .withColumn("wave", F.lit(wave_key))
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("run_id", "wave")
-                 .parquet(lineage_path))
+                row = obs.get
+                element_count = int(row["element_count"])
+                n_rows_total += element_count
+                wave_metrics = self.metric_rows(row, metric_masks, run_id=run_id,
+                                                run_ts=run_ts, wave=wave_key)
+                all_metrics.extend(wave_metrics)
+                # both tables are replaced per (run_id, wave) partition: a
+                # wave re-run after a crash before its checkpoint replaces
+                # its rows instead of duplicating them, and the rows of
+                # completed waves survive a mid-run crash
+                if metrics_path and wave_metrics:
+                    write_partition(spark, metrics_path, partition, metrics_table(wave_metrics))
+                # lineage: per-bucket counts + warc_ts watermark of the
+                # cached wave. An empty wave has no buckets to report.
+                if lineage_path and element_count:
+                    lineage = (wave.groupBy("part_bucket")
+                               .agg(F.count(F.lit(1)).alias("rows"),
+                                    F.sum(F.col("verdict").cast("long")).alias("kept"),
+                                    F.max("warc_ts").alias("watermark"))
+                               .toArrow())
+                    write_partition(spark, lineage_path, partition,
+                                    lineage.cast(_LINEAGE_SCHEMA))
+            finally:
+                wave.unpersist()
 
             if store:
                 watermark = row["watermark"]

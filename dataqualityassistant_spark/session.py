@@ -68,7 +68,6 @@ def tuned_session(
 ) -> SparkSession:
     """Build (or reuse) the session with the engine's settings.
 
-
     It sets only what differs from Spark's defaults. ``getOrCreate()``
     applies every builder option to a session that already exists, so
     restating a default here would silently reset a value the user (or
@@ -108,8 +107,12 @@ def tuned_session(
     conf.update(extra_conf or {})
     for k, v in conf.items():
         b = b.config(k, v)
+    # the log level is the session owner's: only a call that starts the
+    # session sets it, so a second call leaves the caller's level alone
+    fresh = SparkSession.getActiveSession() is None
     spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    if fresh:
+        spark.sparkContext.setLogLevel("WARN")
     return spark
 
 

@@ -20,7 +20,10 @@ a replayed batch REPLACES its own partitions instead of appending duplicates
 
 Per-batch rule metrics ride an ``Observation`` attached to the scored frame
 before the write, so each micro-batch is scored exactly once (no second
-evaluation of the Arrow scoring stage for metrics).
+evaluation of the Arrow scoring stage for metrics). The rule suite is
+compiled once per processor, not per micro-batch, and the metrics rows (one
+per expectation) are written on the driver by ``write_partition``, the same
+writer and table layout as the batch pipeline's metrics.
 """
 
 from __future__ import annotations
@@ -29,7 +32,12 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dataqualityassistant_spark.fixtures import PAGES_SCHEMA
-from dataqualityassistant_spark.plans.quality_filter import QualityFilterPipeline, shuffle_to_buckets
+from dataqualityassistant_spark.plans.quality_filter import (
+    QualityFilterPipeline,
+    metrics_table,
+    shuffle_to_buckets,
+    write_partition,
+)
 
 
 def make_batch_processor(
@@ -41,9 +49,9 @@ def make_batch_processor(
     with the same ``batch_id`` (simulating a replayed micro-batch after a
     crash-before-checkpoint-commit) must leave exactly one copy of the
     batch's rows and metrics."""
-    # compile the rule-suite masks ONCE per processor, not per micro-batch:
-    # they are deterministic for the pipeline, and only needed for metrics
-    masks = pipe._expectation_metric_masks() if metrics_path else []
+    # compile the rule suite ONCE per processor, not per micro-batch: its
+    # masks are deterministic for the pipeline
+    masks = pipe._expectation_metric_masks()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -51,7 +59,7 @@ def make_batch_processor(
             # it is a no-op and Observation.get on a zero-task write cannot
             # produce a metrics row
             return
-        scored = pipe.score(batch_df)
+        scored = pipe._score(batch_df, masks)
         obs = None
         if metrics_path:
             # metrics ride the write via observe(): scored exactly once.
@@ -67,14 +75,11 @@ def make_batch_processor(
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("batch_id", "part_bucket")
          .parquet(output_path))
-        if metrics_path and obs is not None:
+        if obs is not None:
             rows = pipe.metric_rows(obs.get, masks, batch_id=batch_id)
             if rows:
-                (batch_df.sparkSession.createDataFrame(rows)
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("batch_id")
-                 .parquet(metrics_path))
+                write_partition(batch_df.sparkSession, metrics_path,
+                                {"batch_id": batch_id}, metrics_table(rows))
 
     return process_batch
 

@@ -18,13 +18,8 @@ from dataqualityassistant_spark import cli
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.01"
 
-
-@pytest.fixture(autouse=True)
-def _shared_session(spark):
-    """main() builds through tuned_session, which reuses the active session
-    (and sets its log level to WARN)."""
-    yield
-    spark.sparkContext.setLogLevel("ERROR")
+# main() reuses the shared test session (and leaves its log level alone)
+pytestmark = pytest.mark.usefixtures("spark")
 
 
 def run_cli(args):

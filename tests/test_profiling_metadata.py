@@ -200,6 +200,16 @@ def test_tuned_session_reuses_active(spark):
         spark.conf.set(key, before)
 
 
+def test_tuned_session_keeps_callers_log_level(spark):
+    """Only the call that starts the session sets its log level: a second
+    tuned_session() (e.g. cli.main run in-process) leaves the caller's."""
+    from dataqualityassistant_spark.session import tuned_session
+    root = spark.sparkContext._jvm.org.apache.logging.log4j.LogManager.getRootLogger()
+    spark.sparkContext.setLogLevel("ERROR")
+    assert tuned_session() is spark
+    assert root.getLevel().toString() == "ERROR"
+
+
 def test_metrics_trend_across_runs(spark, tmp_path):
     """Two pipeline runs into one metrics table -> one trend row per
     (run, expectation) with wave counts re-summed, drift visible."""

@@ -438,6 +438,110 @@ def test_streaming_metrics_match_batch_run(spark, tmp_path):
     assert decoded(stream_met) == batch
 
 
+def test_metadata_table_schemas_are_pinned(spark, tmp_path):
+    """The driver-written metrics, lineage and streaming metrics tables
+    read back with the layout Spark's own writes gave them, on a resumed
+    multi-wave run: sorted metric columns, bigint counts, an int bucket and
+    a ``timestamp`` (never ``timestamp_ntz``) watermark."""
+    from dataqualityassistant_spark.streaming.stream_filter import make_batch_processor
+
+    pages = pages_spark_df(spark, 300, partitions=4)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    lin, met = str(tmp_path / "lineage"), str(tmp_path / "metrics")
+    pipe = QualityFilterPipeline(n_buckets=6)
+    kw = dict(lineage_path=lin, metrics_path=met, checkpoint_path=ckpt, run_id="r", waves=2)
+    pipe.run(spark, pages, out, max_buckets=3, **kw)
+    pipe.run(spark, pages, out, **kw)
+    stream_met = str(tmp_path / "stream_metrics")
+    process = make_batch_processor(pipe, str(tmp_path / "stream_out"), metrics_path=stream_met)
+    process(pages, 0)
+    process(pages, 1)
+
+    metric_cols = ("column:string,element_count:bigint,expectation_type:string,"
+                   "rule_name:string,{}success:boolean,unexpected_count:bigint,"
+                   "unexpected_percent:double")
+    assert spark.read.parquet(met).schema.simpleString() == (
+        "struct<" + metric_cols.format("run_ts:string,") + ",run_id:string,wave:int>")
+    assert spark.read.parquet(lin).schema.simpleString() == (
+        "struct<part_bucket:int,rows:bigint,kept:bigint,watermark:timestamp,"
+        "run_id:string,wave:int>")
+    assert spark.read.parquet(stream_met).schema.simpleString() == (
+        "struct<" + metric_cols.format("") + ",batch_id:int>")
+    assert spark.read.parquet(lin).count() == 6
+    assert spark.read.parquet(met).select("wave").distinct().count() == 4
+
+
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_run_releases_the_wave_cache(spark, tmp_path):
+    """run() persists each wave's shuffled frame for its lineage and
+    releases it, also when the wave's write raises. The shared test session
+    may hold other tests' persisted RDDs, so the check is that run() adds
+    none."""
+    from py4j.protocol import Py4JJavaError
+
+    pages = pages_spark_df(spark, 200, partitions=4)
+    pipe = QualityFilterPipeline(n_buckets=4)
+    before = _persistent_rdds(spark)
+    pipe.run(spark, pages, str(tmp_path / "out"), lineage_path=str(tmp_path / "lineage"),
+             metrics_path=str(tmp_path / "metrics"), waves=2)
+    assert _persistent_rdds(spark) == before
+    blocked = tmp_path / "blocked"
+    blocked.write_text("an existing file where the output directory should go")
+    with pytest.raises(Py4JJavaError, match="not a directory"):
+        pipe.run(spark, pages, str(blocked), lineage_path=str(tmp_path / "lineage2"))
+    assert _persistent_rdds(spark) == before
+
+
+def _data_files(path):
+    return sorted(os.path.relpath(os.path.join(d, f), path)
+                  for d, _, files in os.walk(path) for f in files
+                  if not f.startswith((".", "_")))
+
+
+def test_write_partition_replaces_the_partition(spark, tmp_path):
+    """Writing one partition twice leaves one data file holding the second
+    content; other partitions are untouched."""
+    import pyarrow as pa
+
+    from dataqualityassistant_spark.plans.quality_filter import write_partition
+
+    path = str(tmp_path / "t")
+    write_partition(spark, path, {"run_id": "r", "wave": 0}, pa.table({"x": [1, 2]}))
+    write_partition(spark, path, {"run_id": "r", "wave": 1}, pa.table({"x": [7]}))
+    write_partition(spark, path, {"run_id": "r", "wave": 0}, pa.table({"x": [3]}))
+    files = _data_files(path)
+    assert [os.path.dirname(f) for f in files] == ["run_id=r/wave=0", "run_id=r/wave=1"]
+    got = {(r["wave"], r["x"]) for r in spark.read.parquet(path).collect()}
+    assert got == {(0, 3), (1, 7)}
+
+
+def test_staging_leftover_is_invisible_to_readers(spark, tmp_path):
+    """A ``_staging-*`` file left by a crash mid-write is skipped by
+    spark.read.parquet and by the report's metrics reader."""
+    import pyarrow.parquet as pq
+
+    from dataqualityassistant_spark.plans.quality_filter import metrics_table, write_partition
+    from dataqualityassistant_spark.report import metrics_trend
+
+    def rows(n, unexpected):
+        return [{"run_id": "r", "run_ts": "2026-01-01", "wave": 0, "rule_name": "rule",
+                 "expectation_type": "expect_column_values_to_not_be_null", "column": "text",
+                 "element_count": n, "unexpected_count": unexpected,
+                 "unexpected_percent": unexpected / n * 100, "success": True}]
+
+    path = str(tmp_path / "metrics")
+    write_partition(spark, path, {"run_id": "r", "wave": 0}, metrics_table(rows(10, 1)))
+    want = [r.asDict() for r in metrics_trend(spark, path).collect()]
+    pq.write_table(metrics_table(rows(1000, 999)),
+                   str(tmp_path / "metrics" / "_staging-part-00000-crashed.zstd.parquet"))
+    assert spark.read.parquet(path).count() == 1
+    assert [r.asDict() for r in metrics_trend(spark, path).collect()] == want
+    assert want[0]["element_count"] == 10
+
+
 def test_output_drops_raw_text_by_default(spark, tmp_path):
     """The persisted output is the scrubbed corpus: raw `text` is scored but
     not written (the input table already holds it; duplicating doubles output
