@@ -93,11 +93,16 @@ class CompiledExpectation:
     # project the mask to a boolean column before the fused aggregate (window
     # functions are legal in projections, not inside aggregates/filters)
     pre_project: bool = False
+    # z-score bound: set for the two-pass z-score expectation, whose mask the
+    # engine resolves from the aggregate's μ/σ
+    zscore_threshold: float | None = None
+    zscore_double_sided: bool = True
 
     @property
     def row_local(self) -> bool:
         """Judges each row on its own (a compiled, non-window mask) — the
-        ONE test for the pipeline's verdict and metrics and ``keep_mask``.
+        ONE test for the pipeline's verdict and metrics
+        (``engine.failed_rules_column``, ``engine.metric_aggs``).
         Not: set-level checks, ``increasing`` windows, two-pass z-scores."""
         return self.unexpected_mask is not None and not self.pre_project
 
@@ -275,8 +280,8 @@ def _c_unique(kwargs):
     #                    = N - count_distinct(col) - (1 if any null else 0)
     # because every group (dup or not) contributes (cnt-1), singletons 0.
     # This identity lets uniqueness ride the SAME single-pass agg as every
-    # other expectation: count_distinct is exact (required for parity; at
-    # 10^12 rows swap in approx_count_distinct via engine option).
+    # other expectation. count_distinct is exact (required for parity) and
+    # never exceeds N − has_null, so the count is never negative.
     column = kwargs["column"]
     c = F.col(column)
     ce = CompiledExpectation(
@@ -293,11 +298,8 @@ def _c_unique(kwargs):
         "d": F.count_distinct(c),
         "hasnull": F.max(c.isNull().cast("long")),
     }
-    # clamped at 0: with the engine's approx_unique option the sketch can
-    # OVERestimate d past n on an all-unique column, and a negative
-    # unexpected_count/percent is nonsense in the metrics output
-    ce._count = lambda row, p: max(
-        0, (row[f"{p}_n"] or 0) - (row[f"{p}_d"] or 0) - (row[f"{p}_hasnull"] or 0))
+    ce._count = lambda row, p: (
+        (row[f"{p}_n"] or 0) - (row[f"{p}_d"] or 0) - (row[f"{p}_hasnull"] or 0))
     return ce
 
 
@@ -501,7 +503,6 @@ def _c_zscore(kwargs):
     global window would move all rows to a single partition at scale,
     rejected). σ = 0 or null (constant/empty column) ⇒ no violations."""
     column = kwargs["column"]
-    t = float(kwargs["threshold"])
     c = F.col(column)
     ce = CompiledExpectation(
         expectation_type="expect_column_value_z_scores_to_be_less_than",
@@ -511,11 +512,11 @@ def _c_zscore(kwargs):
         column=column,
         values_kind="rows",
         samples_kind="mask",
+        zscore_threshold=float(kwargs["threshold"]),
+        zscore_double_sided=bool(kwargs.get("double_sided", True)),
     )
     ce._agg = {"mu": F.avg(c), "sigma": F.stddev(c)}
     ce._count = lambda row, p: 0    # engine overrides via the literal-mask job
-    ce.zscore_threshold = t
-    ce.zscore_double_sided = bool(kwargs.get("double_sided", True))
     return ce
 
 

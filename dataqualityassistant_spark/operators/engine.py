@@ -22,7 +22,9 @@ against the full row count, empty table ⇒ success (``:238``).
 
 from __future__ import annotations
 
+import operator
 import time
+from functools import reduce
 from typing import Any, Iterable
 
 from pyspark.sql import Column, DataFrame
@@ -36,6 +38,10 @@ from dataqualityassistant_spark.operators.compiler import (
     type_matches,
     REFERENCE_TYPES,
 )
+
+# the reference's sample caps (quality_engine.py:213, 284, 388-395)
+MAX_SAMPLE_ROWS = 5
+MAX_UNEXPECTED_VALUES = 10
 
 
 def _serialize_value(v: Any) -> Any:
@@ -66,50 +72,23 @@ class SuiteEngine:
         evaluates; everything else fails with the reference's error message
         (quality_engine.py:412-420). Off by default — pair/compare_to/of_type
         run first-class.
-    approx_unique:
-        use ``approx_count_distinct`` for uniqueness counts (metric-grade at
-        10^12 rows; exact by default for label parity).
     collect_samples:
-        fetch failing-row samples / unexpected values for failing
-        expectations (extra tiny jobs). Disable on giant batch runs where
-        only metrics matter.
+        fetch up to ``MAX_UNEXPECTED_VALUES`` unexpected values and
+        ``MAX_SAMPLE_ROWS`` failing rows for each failing expectation (extra
+        tiny jobs). Disable on giant batch runs where only metrics matter.
     """
 
-    def __init__(
-        self,
-        reference_parity: bool = False,
-        approx_unique: bool = False,
-        collect_samples: bool = True,
-        max_sample_rows: int = 5,
-        max_unexpected_values: int = 10,
-    ):
+    def __init__(self, reference_parity: bool = False, collect_samples: bool = True):
         self.reference_parity = reference_parity
-        self.approx_unique = approx_unique
         self.collect_samples = collect_samples
-        self.max_sample_rows = max_sample_rows
-        self.max_unexpected_values = max_unexpected_values
 
     # -- compilation ------------------------------------------------------
 
     def compile_rules(self, rules: Iterable[Rule]) -> list[tuple[Rule, list[CompiledExpectation]]]:
         allowed = REFERENCE_TYPES if self.reference_parity else None
-        out = []
-        for rule in rules:
-            compiled = [
-                compile_expectation(e.expectation_type, e.kwargs, allowed_types=allowed)
-                for e in rule.expectations
-            ]
-            if self.approx_unique:
-                for ce in compiled:
-                    if ce.expectation_type == "expect_column_values_to_be_unique" and not ce.error:
-                        c = F.col(ce.column)
-                        ce._agg = {
-                            "n": F.count(F.lit(1)),
-                            "d": F.approx_count_distinct(c),
-                            "hasnull": F.max(c.isNull().cast("long")),
-                        }
-            out.append((rule, compiled))
-        return out
+        return [(rule, [compile_expectation(e.expectation_type, e.kwargs, allowed_types=allowed)
+                        for e in rule.expectations])
+                for rule in rules]
 
     # -- execution --------------------------------------------------------
 
@@ -274,7 +253,7 @@ class SuiteEngine:
                     )
                 )
                 unexpected_count = orphans.count()
-            elif getattr(ce, "zscore_threshold", None) is not None:
+            elif ce.zscore_threshold is not None:
                 # two-pass by nature: μ/σ rode the fused aggregate; one extra
                 # scan counts violations against the resolved literals (and
                 # installs the literal mask so sample fetching works)
@@ -284,7 +263,7 @@ class SuiteEngine:
                     unexpected_count = 0  # constant/empty column: no z-scores
                 else:
                     z = (F.col(ce.column) - F.lit(float(mu))) / F.lit(float(sigma))
-                    t = float(ce.zscore_threshold)
+                    t = ce.zscore_threshold
                     bad = (F.abs(z) >= t) if ce.zscore_double_sided else (z >= t)
                     ce.unexpected_mask = F.col(ce.column).isNotNull() & bad
                     unexpected_count = df.filter(ce.unexpected_mask).count()
@@ -304,9 +283,7 @@ class SuiteEngine:
                 "kwargs": ce.kwargs,
             }
 
-        # float64 percent arithmetic identical to the reference (:238)
-        unexpected_percent = (unexpected_count / element_count * 100) if element_count > 0 else 0
-        success = unexpected_percent <= (1 - ce.mostly) * 100  # `<=` — :241
+        unexpected_percent, success = expectation_outcome(unexpected_count, element_count, ce.mostly)
 
         result: dict[str, Any] = {
             "element_count": element_count,
@@ -327,7 +304,7 @@ class SuiteEngine:
             if ce.values_kind is not None:
                 result["unexpected_values"] = []  # filled below or by flush
             if ce.values_kind == "dups":
-                dup_rows = self._dup_values(df, ce.column, self.max_unexpected_values)
+                dup_rows = self._dup_values(df, ce.column, MAX_UNEXPECTED_VALUES)
                 dup_vals = [r[0] for r in dup_rows]
                 result["unexpected_values"] = [_serialize_value(v) for v in dup_vals]
                 # reuse the fetched values: the sample fetch used to re-run
@@ -343,7 +320,7 @@ class SuiteEngine:
                         r[0]
                         for r in self._mask_filtered(df, ce)
                         .select(ce.column)
-                        .limit(self.max_unexpected_values)
+                        .limit(MAX_UNEXPECTED_VALUES)
                         .collect()
                     ]
                     result["unexpected_values"] = [_serialize_value(v) for v in vals]
@@ -357,14 +334,14 @@ class SuiteEngine:
         job: each expectation contributes a ``limit``-ed branch projected to
         a common (tag, row-struct) schema; the branches union and collect
         once, then fan back out to each expectation's ``unexpected_values``
-        (first ``max_unexpected_values`` rows' column values) and
+        (first ``MAX_UNEXPECTED_VALUES`` rows' column values) and
         ``sample_rows``. On a 100 TB table a suite with N failing rules
         previously launched ~2N sequential small scans here; now it is one
         job regardless of N."""
         if not pending:
             return
         dfp = self._sample_projection(df)
-        limit = max(self.max_unexpected_values, self.max_sample_rows)
+        limit = max(MAX_UNEXPECTED_VALUES, MAX_SAMPLE_ROWS)
         cols = [F.col(c) for c in dfp.columns]
         branches = []
         for tag, (ce, _result, _out) in enumerate(pending):
@@ -386,18 +363,18 @@ class SuiteEngine:
             got = by_tag.get(tag, [])
             if ce.values_kind == "rows":
                 if ce.column in dfp.columns:
-                    vals = [row[ce.column] for row in got[: self.max_unexpected_values]]
+                    vals = [row[ce.column] for row in got[: MAX_UNEXPECTED_VALUES]]
                 else:  # binary column pruned from the sample projection
                     vals = [
                         r[0]
                         for r in self._mask_filtered(df, ce)
                         .select(ce.column)
-                        .limit(self.max_unexpected_values)
+                        .limit(MAX_UNEXPECTED_VALUES)
                         .collect()
                     ]
                 result["unexpected_values"] = [_serialize_value(v) for v in vals]
             if ce.samples_kind == "mask":
-                out["sample_rows"] = [_row_to_sample(r) for r in got[: self.max_sample_rows]]
+                out["sample_rows"] = [_row_to_sample(r) for r in got[: MAX_SAMPLE_ROWS]]
 
     def _dup_values(self, df: DataFrame, column: str, limit: int):
         return (
@@ -422,7 +399,7 @@ class SuiteEngine:
             # filter the full frame, project after (mask may reference a
             # pruned binary column — see _flush_pending_samples)
             rows = (self._mask_filtered(df, ce).select(*dfp.columns)
-                    .limit(self.max_sample_rows).collect())
+                    .limit(MAX_SAMPLE_ROWS).collect())
             return [_row_to_sample(r) for r in rows]
         if ce.samples_kind == "dups":
             # reference :383-395: ≤5 dup values × ≤2 rows each, cap 5 total;
@@ -437,30 +414,67 @@ class SuiteEngine:
             for v in dup_vals[:5]:
                 rows = dfp.filter(F.col(ce.column) == F.lit(v)).limit(2).collect()
                 samples.extend(_row_to_sample(r) for r in rows[:2])
-                if len(samples) >= self.max_sample_rows:
+                if len(samples) >= MAX_SAMPLE_ROWS:
                     break
-            return samples[: self.max_sample_rows]
+            return samples[: MAX_SAMPLE_ROWS]
         return []
 
-    # -- row-level verdicts (webtext pipeline) -----------------------------
 
-    def keep_mask(self, rules: Iterable[Rule]) -> Column:
-        """Per-row keep predicate: a row is kept iff NO row-local expectation
-        flags it. (Row-granular analog of rule success = AND of expectations,
-        reference quality_engine.py:445-446.) Expectations without a
-        ROW-LOCAL verdict (``CompiledExpectation.row_local``) contribute
-        nothing, by contract: set-level checks (uniqueness, of_type — dedup
-        is its own operator), window-based masks (``increasing`` — a window
-        expression is illegal in WHERE), and two-pass z-scores (μ/σ need
-        their own aggregate). The pandas counterpart
-        (``oracle.oracle_keep_mask``) skips the SAME set so the engine/oracle
-        verdicts stay in lockstep."""
-        mask = F.lit(True)
-        for _, ces in self.compile_rules(rules):
-            for ce in ces:
-                if ce.row_local:
-                    mask = mask & ~ce.unexpected_mask
-        return mask
+def expectation_outcome(unexpected_count: int, element_count: int,
+                        mostly: float) -> tuple[float, bool]:
+    """``(unexpected_percent, success)`` of one expectation, for the suite
+    result and for the pipeline's metrics rows: float64 percent of the full
+    row count as the reference computes it (:238), 0 on an empty table, and
+    success iff ``unexpected_percent <= (1 - mostly) * 100`` (``<=``, :241)."""
+    unexpected_percent = (unexpected_count / element_count * 100) if element_count > 0 else 0
+    return unexpected_percent, unexpected_percent <= (1 - mostly) * 100
+
+
+# -- row-local expectations (webtext pipeline) ------------------------------
+# The pipeline judges rows by, and reports metrics of, a list of
+# ``(rule_name, CompiledExpectation)`` pairs holding only row-local
+# expectations (``CompiledExpectation.row_local``). Set-level checks
+# (uniqueness, of_type), window masks (``increasing``) and two-pass z-scores
+# are suite-level only; ``oracle.oracle_keep_mask`` skips the same set.
+
+
+def failed_rules_column(expectations: list[tuple[str, CompiledExpectation]]) -> Column:
+    """Per-row ``array<string>`` of the rules with a row-local expectation
+    that flags the row; empty ⇔ the row is kept (row-granular analog of rule
+    success = AND of expectations, reference quality_engine.py:445-446)."""
+    by_rule: dict[str, list[Column]] = {}
+    for rule_name, ce in expectations:
+        by_rule.setdefault(rule_name, []).append(ce.unexpected_mask)
+    failed = [F.when(reduce(operator.or_, masks), F.lit(name))
+              for name, masks in by_rule.items()]
+    return F.array_compact(F.array(*failed)) if failed else F.array().cast("array<string>")
+
+
+def metric_aggs(expectations: list[tuple[str, CompiledExpectation]]) -> list[Column]:
+    """``observe()`` aggregates of the row-local expectations: the row count
+    and each expectation's own aggregates under the prefix ``u{k}``,
+    decoded by :func:`metric_rows`."""
+    return [F.count(F.lit(1)).alias("element_count")] + [
+        agg for k, (_, ce) in enumerate(expectations) for agg in ce.agg_exprs(f"u{k}")]
+
+
+def metric_rows(row: dict, expectations: list[tuple[str, CompiledExpectation]],
+                **keys) -> list[dict]:
+    """One metrics row per row-local expectation from the observed
+    :func:`metric_aggs` ``row`` (``{}`` when no row was observed), prefixed
+    with ``keys`` (a batch wave's run/wave, or a stream's batch id)."""
+    n = int(row.get("element_count") or 0)
+    out = []
+    for k, (rule_name, ce) in enumerate(expectations):
+        cnt = ce.count_from_row(row, f"u{k}") if n else 0
+        pct, success = expectation_outcome(cnt, n, ce.mostly)
+        out.append({
+            **keys, "rule_name": rule_name, "expectation_type": ce.expectation_type,
+            "column": ce.kwargs.get("column"),
+            "element_count": n, "unexpected_count": cnt,
+            "unexpected_percent": pct, "success": success,
+        })
+    return out
 
 
 def run_suite(df: DataFrame, rules: Iterable[Rule], table_name: str = "", **kwargs) -> dict[str, Any]:

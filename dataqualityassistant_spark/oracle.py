@@ -218,8 +218,8 @@ def oracle_expectation(df: pd.DataFrame, expectation_type: str, kwargs: dict[str
             "error": f"Expectation type '{expectation_type}' not implemented in direct evaluation mode"}
 
 
-# expectations with no ROW-LOCAL verdict — the Spark engine's keep_mask
-# skips exactly this set (set-level, window-based, or two-pass), so the
+# expectations with no ROW-LOCAL verdict — the Spark engine's row verdict
+# (engine.failed_rules_column) skips exactly this set (set-level, window-based, or two-pass), so the
 # oracle must too or the verdicts drift out of lockstep
 _NON_ROW_LOCAL = frozenset({
     "expect_column_values_to_be_unique",
@@ -230,8 +230,9 @@ _NON_ROW_LOCAL = frozenset({
 
 def oracle_keep_mask(df: pd.DataFrame, rules) -> pd.Series:
     """Row-level keep verdict: keep iff no row-local expectation flags the
-    row (same predicates the Spark engine's keep_mask compiles; the same
-    non-row-local expectation types are skipped on both sides)."""
+    row (same predicates the Spark engine's ``failed_rules_column``
+    compiles; the same non-row-local expectation types are skipped on both
+    sides)."""
     keep = pd.Series(True, index=df.index)
     for rule in rules:
         for e in rule.expectations:

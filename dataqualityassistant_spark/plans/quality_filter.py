@@ -16,7 +16,9 @@ Common-Crawl-style pages ``(url, warc_ts, html, text, lang)``:
    ROW-LOCAL expectations (``CompiledExpectation.row_local``) judge a row,
    and the same list is the metrics table; uniqueness, window
    (``increasing``) and z-score expectations are suite-level only
-   (``run_suite``).
+   (``run_suite``). The verdict column, the metric aggregates and their
+   arithmetic come from ``operators/engine.py``; this module observes and
+   writes.
 3. **Scrub stage** — ordered JVM ``regexp_replace`` PII/toxicity chain,
    byte-identical to the Python-re oracle.
 4. **Outputs** — scored table (parquet, partitioned by url-hash bucket;
@@ -40,21 +42,25 @@ Scale design (10^12 docs, 1000 executors):
 
 from __future__ import annotations
 
-import operator
 import time
 import uuid
 from collections.abc import Sequence
 from dataclasses import dataclass, field
-from functools import reduce
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dataqualityassistant_spark.rules import Rule
 from dataqualityassistant_spark.session import shuffle_parallelism
-from dataqualityassistant_spark.operators.engine import SuiteEngine
+from dataqualityassistant_spark.operators.compiler import CompiledExpectation
+from dataqualityassistant_spark.operators.engine import (
+    SuiteEngine,
+    failed_rules_column,
+    metric_aggs,
+    metric_rows,
+)
 from dataqualityassistant_spark.functions.scoring import with_text_scores
 from dataqualityassistant_spark.functions.scrub import scrub_text_column
 from dataqualityassistant_spark.streaming.checkpoint import CheckpointStore
@@ -89,7 +95,7 @@ _LINEAGE_SCHEMA = pa.schema([
 
 
 def metrics_table(rows: list[dict]) -> pa.Table:
-    """The data columns of :meth:`QualityFilterPipeline.metric_rows` as an
+    """The data columns of :func:`operators.engine.metric_rows` as an
     Arrow table for :func:`write_partition`."""
     names = sorted(k for k in rows[0] if k in _METRIC_TYPES)
     return pa.Table.from_pylist(rows, schema=pa.schema([(k, _METRIC_TYPES[k]) for k in names]))
@@ -205,7 +211,7 @@ class QualityFilterPipeline:
         Arrow boundary (input_hint: carried through but unscanned)."""
         return self._score(df, self._expectation_metric_masks())
 
-    def _score(self, df: DataFrame, metric_masks) -> DataFrame:
+    def _score(self, df: DataFrame, expectations) -> DataFrame:
         """:meth:`score` with the suite already compiled
         (:meth:`_expectation_metric_masks`), for callers that compile it once."""
         scored = df.select(*[c for c in df.columns if c != "html"])
@@ -216,13 +222,7 @@ class QualityFilterPipeline:
         # bit-identical to the label oracle.
         scored = with_text_scores(scored)
 
-        by_rule: dict[str, list[Column]] = {}
-        for rule_name, _, _, _, mask in metric_masks:
-            by_rule.setdefault(rule_name, []).append(mask)
-        failed = [F.when(reduce(operator.or_, masks), F.lit(name))
-                  for name, masks in by_rule.items()]
-        failed_rules = F.array_compact(F.array(*failed)) if failed else F.array().cast("array<string>")
-        scored = scored.withColumn("failed_rules", failed_rules)
+        scored = scored.withColumn("failed_rules", failed_rules_column(expectations))
         scored = scored.withColumn("verdict", F.size("failed_rules") == 0)
         scored = scored.withColumn("scrubbed_text", scrub_text_column("text"))
         scored = scored.withColumn(
@@ -230,45 +230,14 @@ class QualityFilterPipeline:
         )
         return scored
 
-    def _expectation_metric_masks(self) -> list[tuple[str, str, dict, float, Column]]:
-        """(rule_name, expectation_type, kwargs, mostly, mask) for every
-        row-local expectation: the verdict set of :meth:`score` and the
-        observe() metric set. Window masks would sort inside the Arrow
-        scoring stage and are illegal inside observe() aggregates."""
-        return [(rule.name, ce.expectation_type, ce.kwargs, ce.mostly, ce.unexpected_mask)
+    def _expectation_metric_masks(self) -> list[tuple[str, CompiledExpectation]]:
+        """(rule_name, compiled expectation) for every row-local expectation:
+        the verdict set of :meth:`score` and the observe() metric set. Window
+        masks would sort inside the Arrow scoring stage and are illegal
+        inside observe() aggregates."""
+        return [(rule.name, ce)
                 for rule, ces in SuiteEngine().compile_rules(self.rules)
                 for ce in ces if ce.row_local]
-
-    @staticmethod
-    def metric_aggs(metric_masks) -> list:
-        """Observation aggregates for the expectation masks (element count +
-        one conditional count aliased ``u{k}`` per mask) — shared by the
-        batch waves and the streaming foreachBatch sink, and decoded by
-        :meth:`metric_rows` for both, so the two metrics tables cannot
-        drift."""
-        return [F.count(F.lit(1)).alias("element_count")] + [
-            F.sum(F.when(m, 1).otherwise(0)).alias(f"u{k}")
-            for k, (_, _, _, _, m) in enumerate(metric_masks)
-        ]
-
-    @staticmethod
-    def metric_rows(row, metric_masks, **keys) -> list[dict]:
-        """One metrics row per expectation mask from the observed
-        :meth:`metric_aggs` ``row``, prefixed with ``keys`` (the batch
-        wave's run/wave, or the stream's batch id)."""
-        n = int(row["element_count"])
-        out = []
-        for k, (rule_name, etype, kwargs, mostly, _) in enumerate(metric_masks):
-            cnt = int(row[f"u{k}"] or 0)
-            pct = cnt / n * 100 if n > 0 else 0.0
-            out.append({
-                **keys, "rule_name": rule_name, "expectation_type": etype,
-                "column": kwargs.get("column"),
-                "element_count": n, "unexpected_count": cnt,
-                "unexpected_percent": pct,
-                "success": pct <= (1 - mostly) * 100,
-            })
-        return out
 
     # ------------------------------------------------------------- execution
 
@@ -306,8 +275,8 @@ class QualityFilterPipeline:
             pending = pending[:max_buckets]
 
         t0 = time.time()
-        metric_masks = self._expectation_metric_masks()
-        scored = self._score(pages, metric_masks)
+        expectations = self._expectation_metric_masks()
+        scored = self._score(pages, expectations)
         all_metrics: list[dict] = []
         n_rows_total = 0
         # wave keys continue from completed waves so a resume never reuses a
@@ -321,7 +290,7 @@ class QualityFilterPipeline:
             partition = {"run_id": run_id, "wave": wave_key}
             obs = Observation(f"metrics-{run_id}-{wave_idx}")
             observed = scored.filter(F.col("part_bucket").isin(buckets)).observe(
-                obs, *self.metric_aggs(metric_masks),
+                obs, *metric_aggs(expectations),
                 F.sum(F.col("verdict").cast("long")).alias("kept"),
                 F.max("warc_ts").alias("watermark"))
             # raw text is scored but not written: the output corpus is the
@@ -338,11 +307,15 @@ class QualityFilterPipeline:
                  .partitionBy("part_bucket")
                  .parquet(output_path))
 
-                row = obs.get
-                element_count = int(row["element_count"])
+                # a wave without rows (its buckets are empty) leaves an empty
+                # shuffle, after which AQE drops the observed node: the
+                # observation then holds a row with no fields, which obs.get
+                # cannot convert. Such a wave observed nothing: zero counts.
+                row = obs.get if obs._jo.getRow().length() else {}
+                element_count = int(row.get("element_count") or 0)
                 n_rows_total += element_count
-                wave_metrics = self.metric_rows(row, metric_masks, run_id=run_id,
-                                                run_ts=run_ts, wave=wave_key)
+                wave_metrics = metric_rows(row, expectations, run_id=run_id,
+                                           run_ts=run_ts, wave=wave_key)
                 all_metrics.extend(wave_metrics)
                 # both tables are replaced per (run_id, wave) partition: a
                 # wave re-run after a crash before its checkpoint replaces
@@ -364,9 +337,9 @@ class QualityFilterPipeline:
                 wave.unpersist()
 
             if store:
-                watermark = row["watermark"]
+                watermark = row.get("watermark")
                 store.mark_completed(run_id, wave_key, buckets, {
-                    "rows": element_count, "kept": int(row["kept"] or 0),
+                    "rows": element_count, "kept": int(row.get("kept") or 0),
                     "watermark": watermark.isoformat() if watermark else None,
                 })
 

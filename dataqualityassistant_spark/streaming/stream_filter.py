@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dataqualityassistant_spark.fixtures import PAGES_SCHEMA
+from dataqualityassistant_spark.operators.engine import metric_aggs, metric_rows
 from dataqualityassistant_spark.plans.quality_filter import (
     QualityFilterPipeline,
     metrics_table,
@@ -51,7 +52,7 @@ def make_batch_processor(
     batch's rows and metrics."""
     # compile the rule suite ONCE per processor, not per micro-batch: its
     # masks are deterministic for the pipeline
-    masks = pipe._expectation_metric_masks()
+    expectations = pipe._expectation_metric_masks()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -59,14 +60,14 @@ def make_batch_processor(
             # it is a no-op and Observation.get on a zero-task write cannot
             # produce a metrics row
             return
-        scored = pipe._score(batch_df, masks)
+        scored = pipe._score(batch_df, expectations)
         obs = None
         if metrics_path:
             # metrics ride the write via observe(): scored exactly once.
             # anonymous Observation: names are registered once per session,
             # so a REPLAYED batch_id would collide with its first attempt
             obs = Observation()
-            scored = scored.observe(obs, *pipe.metric_aggs(masks))
+            scored = scored.observe(obs, *metric_aggs(expectations))
         # batch_id partitioning + dynamic overwrite = idempotent replay:
         # a re-delivered micro-batch overwrites ONLY its own partitions
         (shuffle_to_buckets(scored.drop("text"), range(pipe.n_buckets))
@@ -76,7 +77,7 @@ def make_batch_processor(
          .partitionBy("batch_id", "part_bucket")
          .parquet(output_path))
         if obs is not None:
-            rows = pipe.metric_rows(obs.get, masks, batch_id=batch_id)
+            rows = metric_rows(obs.get, expectations, batch_id=batch_id)
             if rows:
                 write_partition(batch_df.sparkSession, metrics_path,
                                 {"batch_id": batch_id}, metrics_table(rows))

@@ -584,9 +584,13 @@ def test_in_table_set_missing_ref_table_errors(spark):
 
 
 def test_keep_mask_skips_non_row_local_and_matches_oracle(spark):
-    """keep_mask over rules containing increasing + z-score expectations
-    must be filterable (no window-in-WHERE AnalysisException) and agree
-    with oracle_keep_mask, which skips the same non-row-local set."""
+    """The row verdict (no failed rules) over rules containing increasing +
+    z-score expectations must be filterable (no window-in-WHERE
+    AnalysisException) and agree with oracle_keep_mask, which skips the
+    same non-row-local set."""
+    from pyspark.sql import functions as F
+
+    from dataqualityassistant_spark.operators.engine import failed_rules_column
     from dataqualityassistant_spark.oracle import oracle_keep_mask
 
     rows = [(1, 10, "x"), (2, 9, None), (3, 11, "y"), (4, 200, "z")]
@@ -599,8 +603,9 @@ def test_keep_mask_skips_non_row_local_and_matches_oracle(spark):
         {"expectation_type": "expect_column_value_z_scores_to_be_less_than",
          "kwargs": {"column": "v", "threshold": 1.5}},
     ])]
-    eng = SuiteEngine()
-    kept = sorted(r["id"] for r in df.filter(eng.keep_mask(rules)).collect())
+    row_local = [(rule.name, ce) for rule, ces in SuiteEngine().compile_rules(rules)
+                 for ce in ces if ce.row_local]
+    kept = sorted(r["id"] for r in df.filter(F.size(failed_rules_column(row_local)) == 0).collect())
     pdf = pd.DataFrame(rows, columns=["id", "v", "t"])
     want = sorted(pdf[oracle_keep_mask(pdf, rules)]["id"].tolist())
     assert kept == want == [1, 3, 4]

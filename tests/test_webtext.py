@@ -247,30 +247,39 @@ def test_scrub_byte_parity_on_adversarial_corpus(spark):
 def test_pipeline_observe_metrics_equal_engine_metrics(spark, tmp_path):
     """The observe()-collected per-wave metrics summed across waves must
     equal a SuiteEngine pass over the same scored frame — the two metric
-    paths (streaming-during-write vs dedicated aggregate) may never drift."""
+    paths (streaming-during-write vs dedicated aggregate) may never drift.
+    A one-wave run sees the whole table, so its unexpected_percent and
+    success must equal the engine's exactly."""
     from dataqualityassistant_spark.operators.engine import SuiteEngine
 
     pages = pages_spark_df(spark, 300, partitions=4)
     pipe = QualityFilterPipeline(n_buckets=4)
-    stats = pipe.run(spark, pages, str(tmp_path / "out"), run_id="m", waves=2)
-
-    by_key = {}
-    for m in stats["metrics"]:
-        k = (m["rule_name"], m["expectation_type"], m["column"])
-        agg = by_key.setdefault(k, {"unexpected": 0, "element": 0})
-        agg["unexpected"] += m["unexpected_count"]
-        agg["element"] += m["element_count"]
-
     suite = SuiteEngine(collect_samples=False).execute(
         pipe.score(pages), pipe.rules)
+    engine = {}
     for rr in suite["results"]:
         for er in rr["results"]:
             if "result" not in er or er["kwargs"].get("column") is None:
                 continue
             k = (rr["rule_name"], er["expectation_type"], er["kwargs"]["column"])
+            engine[k] = {**er["result"], "success": er["success"]}
+
+    for waves in (2, 1):
+        stats = pipe.run(spark, pages, str(tmp_path / f"out{waves}"), run_id=f"m{waves}",
+                         waves=waves)
+        by_key = {}
+        for m in stats["metrics"]:
+            k = (m["rule_name"], m["expectation_type"], m["column"])
+            agg = by_key.setdefault(k, {"unexpected": 0, "element": 0})
+            agg["unexpected"] += m["unexpected_count"]
+            agg["element"] += m["element_count"]
+            if waves == 1:
+                assert m["unexpected_percent"] == engine[k]["unexpected_percent"], k
+                assert m["success"] == engine[k]["success"], k
+        for k, er in engine.items():
             if k in by_key:
-                assert by_key[k]["unexpected"] == er["result"]["unexpected_count"], k
-                assert by_key[k]["element"] == er["result"]["element_count"], k
+                assert by_key[k]["unexpected"] == er["unexpected_count"], k
+                assert by_key[k]["element"] == er["element_count"], k
 
 
 def test_scored_features_match_mirror_on_unicode_whitespace(spark):
@@ -354,6 +363,62 @@ def test_checkpoint_stats_reconcile_with_lineage(spark, tmp_path):
         assert m["element_count"] == rows_by_wave[m["wave"]], m
     kept = spark.read.parquet(out).agg(F.sum(F.col("verdict").cast("long"))).first()[0]
     assert sum(r["kept"] for r in records) == kept
+
+
+def test_run_commits_empty_waves(spark, tmp_path):
+    """A wave whose buckets hold no rows commits zero-count metrics rows and
+    its checkpoint record (rows 0, kept 0, no watermark) and writes no
+    lineage rows: an empty input, and a 3-row table spread over more waves
+    than it has non-empty buckets, crashed halfway and then resumed."""
+    from dataqualityassistant_spark.streaming.checkpoint import CheckpointStore
+
+    pipe = QualityFilterPipeline(n_buckets=16)
+    n_exp = len(pipe._expectation_metric_masks())
+
+    def run(pages, name, **kw):
+        d = {k: str(tmp_path / name / k) for k in ("out", "metrics", "lineage", "ckpt")}
+        stats = pipe.run(spark, pages, d["out"], metrics_path=d["metrics"],
+                         lineage_path=d["lineage"], checkpoint_path=d["ckpt"],
+                         run_id="e", **kw)
+        return stats, d
+
+    s, d = run(spark.createDataFrame([], PAGES_SCHEMA), "empty")
+    assert (s["rows"], s["buckets_processed"]) == (0, 16)
+    records = CheckpointStore(d["ckpt"]).records("e")
+    assert [(r["rows"], r["kept"], r["watermark"]) for r in records] == [(0, 0, None)]
+    metrics = spark.read.parquet(d["metrics"]).collect()
+    assert len(metrics) == n_exp
+    assert all((m["element_count"], m["unexpected_count"], m["unexpected_percent"], m["success"])
+               == (0, 0, 0.0, True) for m in metrics)
+    assert not os.path.exists(d["lineage"])
+
+    src = str(tmp_path / "three")
+    spark.createDataFrame(pages_batch(0, 3), PAGES_SCHEMA).write.parquet(src)
+    pages = spark.read.parquet(src)
+    s1, d = run(pages, "sparse", waves=8, max_buckets=8)
+    s2, _ = run(pages, "sparse", waves=8)
+    assert s1["buckets_processed"] == s2["buckets_processed"] == 8
+    records = CheckpointStore(d["ckpt"]).records("e")
+    assert [r["wave"] for r in records] == list(range(16))
+    assert sum(r["rows"] for r in records) == s1["rows"] + s2["rows"] == 3
+    assert spark.read.parquet(d["out"]).count() == 3
+    lineage = {
+        r["wave"]: r for r in spark.read.parquet(d["lineage"]).groupBy("wave").agg(
+            F.sum("rows").alias("rows"), F.sum("kept").alias("kept"),
+            F.max("watermark").alias("watermark")).collect()
+    }
+    assert set(lineage) == {r["wave"] for r in records if r["rows"]}
+    for rec in records:
+        if rec["rows"]:
+            got = lineage[rec["wave"]]
+            assert (rec["rows"], rec["kept"], rec["watermark"]) == (
+                got["rows"], got["kept"], got["watermark"].isoformat()), (rec, got)
+        else:
+            assert (rec["kept"], rec["watermark"]) == (0, None), rec
+    rows_by_wave = {rec["wave"]: rec["rows"] for rec in records}
+    metrics = spark.read.parquet(d["metrics"]).select("wave", "element_count").collect()
+    assert len(metrics) == 16 * n_exp
+    assert all(m["element_count"] == rows_by_wave[m["wave"]] for m in metrics)
 
 
 def test_streaming_filter_exactly_once(spark, tmp_path):
