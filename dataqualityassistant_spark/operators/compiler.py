@@ -3,10 +3,18 @@
 The reference evaluates each expectation eagerly with a pandas boolean mask
 (reference: ``app/services/quality_engine.py:224-430``, fn
 ``evaluate_expectation``). Here every expectation compiles to **metadata** —
-a lazy "unexpected" (violating-row) ``Column`` mask plus aggregate
-expressions — so the suite engine can fuse ALL expectations of ALL rules
-into ONE ``df.agg(...)`` scan (partial + final hash aggregate, whole-stage
-codegen). No per-row Python anywhere on the hot path.
+a lazy "unexpected" (violating-row) ``Column`` mask, aggregate expressions,
+and a count that reads the violation count back from the aggregate row —
+so the suite engine can fuse ALL expectations of ALL rules into ONE
+``df.agg(...)`` scan (partial + final hash aggregate, whole-stage codegen).
+No per-row Python anywhere on the hot path.
+
+Everything an expectation type means lives in its compiler function here,
+second passes included: the FK check's anti-join, the z-score's counting
+scan against the resolved μ/σ, and the schema check of ``of_type`` run
+inside the count, which receives the frame as well as the aggregate row.
+The engine (``operators/engine.py``) runs every expectation the same way
+and knows no expectation type.
 
 Semantics reproduced exactly (each is a test case in
 ``tests/test_expectations.py``):
@@ -37,7 +45,7 @@ import re
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -65,38 +73,35 @@ class CompiledExpectation:
     """Lazy, composable compilation of one expectation.
 
     ``agg_exprs()`` contributes named aggregate Columns to the suite's
-    single-pass ``df.agg``; ``count_from_row`` recovers the violation count
-    from the resulting row. ``unexpected_mask`` is the per-row violating
-    predicate (used for keep/drop verdicts and sample fetching); it is None
-    only for errored/unknown expectations and for schema-level checks.
+    single-pass ``df.agg``; ``count_from_row`` turns the resulting row (and,
+    for a type with a second pass, the frame) into the violation count.
+    ``unexpected_mask`` is the per-row violating predicate, used for the
+    pipeline's row verdict and for sample rows. It is None for errored or
+    unknown expectations and for set-level and table-level checks, and a
+    z-score expectation gets its mask from its count.
     """
 
     expectation_type: str
     kwargs: dict[str, Any]
     mostly: float = 1.0
     unexpected_mask: Column | None = None
-    # aliases -> aggregate Column builders; filled by the per-type compilers
+    # alias -> aggregate Column; filled by the per-type compilers
     _agg: dict[str, Column] = field(default_factory=dict)
-    # (row_dict, prefix) -> unexpected_count
-    _count: Callable[[dict, str], int] | None = None
+    # (row_dict, prefix, frame) -> unexpected_count; the frame is None where
+    # the caller has only the row (the pipeline's row-local metrics)
+    _count: Callable[[dict, str, DataFrame | None], int] | None = None
     error: str | None = None
-    # value-listing strategy: 'rows' (first-10 in row order) | 'dups' | None
+    # value listing: 'rows' (first 10 masked rows' values) | 'dups' | None.
+    # Samples follow from it: 'dups' samples the duplicate groups, otherwise
+    # a mask samples its rows and an expectation without one has none.
     values_kind: str | None = None
-    # sample strategy: 'mask' | 'dups' | None
-    samples_kind: str | None = None
     column: str | None = None
     # agg alias whose value is surfaced as GE-style observed_value
     observed_value_key: str | None = None
-    # set for join-backed expectations (resolved by the engine, not the agg)
-    ref_table: str | None = None
     # True when unexpected_mask contains a WINDOW expression: the engine must
     # project the mask to a boolean column before the fused aggregate (window
     # functions are legal in projections, not inside aggregates/filters)
     pre_project: bool = False
-    # z-score bound: set for the two-pass z-score expectation, whose mask the
-    # engine resolves from the aggregate's μ/σ
-    zscore_threshold: float | None = None
-    zscore_double_sided: bool = True
 
     @property
     def row_local(self) -> bool:
@@ -109,9 +114,9 @@ class CompiledExpectation:
     def agg_exprs(self, prefix: str) -> list[Column]:
         return [expr.alias(f"{prefix}_{name}") for name, expr in self._agg.items()]
 
-    def count_from_row(self, row: dict, prefix: str) -> int:
+    def count_from_row(self, row: dict, prefix: str, df: DataFrame | None = None) -> int:
         assert self._count is not None
-        return int(self._count(row, prefix))
+        return int(self._count(row, prefix, df))
 
 
 _COMPILERS: dict[str, Callable[[dict[str, Any]], CompiledExpectation]] = {}
@@ -147,10 +152,9 @@ def _simple(expectation_type, kwargs, mask: Column, column: str | None) -> Compi
         unexpected_mask=mask,
         column=column,
         values_kind="rows" if column else None,
-        samples_kind="mask",
     )
     ce._agg = _mask_count_agg("u", mask)
-    ce._count = lambda row, p: row[f"{p}_u"] or 0
+    ce._count = lambda row, p, df: row[f"{p}_u"] or 0
     return ce
 
 
@@ -291,14 +295,13 @@ def _c_unique(kwargs):
         unexpected_mask=None,  # not row-local; dup detection needs grouping
         column=column,
         values_kind="dups",
-        samples_kind="dups",
     )
     ce._agg = {
         "n": F.count(F.lit(1)),
         "d": F.count_distinct(c),
         "hasnull": F.max(c.isNull().cast("long")),
     }
-    ce._count = lambda row, p: (
+    ce._count = lambda row, p, df: (
         (row[f"{p}_n"] or 0) - (row[f"{p}_d"] or 0) - (row[f"{p}_hasnull"] or 0))
     return ce
 
@@ -345,19 +348,25 @@ def _c_greater_than_other(kwargs):
 
 @register_expectation("expect_column_values_to_be_of_type")
 def _c_of_type(kwargs):
-    # extended op: schema-level check resolved at compile/finalize time by
-    # the engine (needs df.schema); mask is all-or-nothing.
+    # extended op: schema-level check of the frame's column type against the
+    # declared type_ (TYPE_ALIASES); all-or-nothing, so a mismatch counts
+    # every row and there is no mask.
+    column = kwargs.get("column")
+    declared = kwargs.get("type_") or kwargs.get("type", "")
     ce = CompiledExpectation(
         expectation_type="expect_column_values_to_be_of_type",
         kwargs=kwargs,
         mostly=_mostly(kwargs),
         unexpected_mask=None,
-        column=kwargs.get("column"),
-        values_kind=None,
-        samples_kind=None,
+        column=column,
     )
     ce._agg = {"n": F.count(F.lit(1))}
-    ce._count = lambda row, p: 0  # engine overrides using schema check
+
+    def count(row, p, df):
+        actual = {f.name: f.dataType.simpleString() for f in df.schema.fields}.get(column, "")
+        return 0 if type_matches(declared, actual) else row[f"{p}_n"]
+
+    ce._count = count
     return ce
 
 
@@ -404,7 +413,7 @@ def _agg_stat(expectation_type: str, kwargs: dict[str, Any], stat: Column) -> Co
     ce._agg = {"n": F.count(F.lit(1)), "stat": stat}
     lo, hi = kwargs.get("min_value"), kwargs.get("max_value")
 
-    def count(row, p):
+    def count(row, p, df):
         v = row[f"{p}_stat"]
         n = row[f"{p}_n"] or 0
         ok = v is not None and (lo is None or v >= lo) and (hi is None or v <= hi)
@@ -488,8 +497,7 @@ def _c_increasing(kwargs):
     mask = c.isNotNull() & prev.isNotNull() & bad
     ce = _simple("expect_column_values_to_be_increasing", kwargs, mask, column)
     ce.pre_project = True
-    ce._agg = {}          # engine builds the agg from the projected mask
-    ce._count = lambda row, p: row[f"{p}_u"] or 0
+    ce._agg = {}  # a window cannot sit in an aggregate: the engine counts the projected mask
     return ce
 
 
@@ -497,26 +505,37 @@ def _c_increasing(kwargs):
 def _c_zscore(kwargs):
     """GE-style z-score bound: |x − μ|/σ < threshold (``double_sided=False``
     bounds only (x − μ)/σ). Inherently TWO-pass — μ and σ must be known
-    before any row can be judged — so μ/σ/count ride the suite's single
-    fused aggregate and the engine runs ONE extra counting scan with the
-    resolved literals (same pattern as the FK anti-join expectation; a
-    global window would move all rows to a single partition at scale,
-    rejected). σ = 0 or null (constant/empty column) ⇒ no violations."""
+    before any row can be judged — so μ/σ ride the suite's single fused
+    aggregate and the count runs ONE extra counting scan with the resolved
+    literals (same pattern as the FK anti-join expectation; a global window
+    would move all rows to a single partition at scale, rejected). The count
+    installs that literal mask as ``unexpected_mask``, so the engine fetches
+    the violating rows' samples like any other mask's. σ = 0 or null
+    (constant/empty column) ⇒ no violations and no mask."""
     column = kwargs["column"]
+    threshold = float(kwargs["threshold"])
+    double_sided = bool(kwargs.get("double_sided", True))
     c = F.col(column)
     ce = CompiledExpectation(
         expectation_type="expect_column_value_z_scores_to_be_less_than",
         kwargs=kwargs,
         mostly=_mostly(kwargs),
-        unexpected_mask=None,       # resolved by the engine from μ/σ
+        unexpected_mask=None,       # installed by count() from μ/σ
         column=column,
         values_kind="rows",
-        samples_kind="mask",
-        zscore_threshold=float(kwargs["threshold"]),
-        zscore_double_sided=bool(kwargs.get("double_sided", True)),
     )
     ce._agg = {"mu": F.avg(c), "sigma": F.stddev(c)}
-    ce._count = lambda row, p: 0    # engine overrides via the literal-mask job
+
+    def count(row, p, df):
+        mu, sigma = row.get(f"{p}_mu"), row.get(f"{p}_sigma")
+        if mu is None or sigma is None or float(sigma) == 0.0:
+            return 0  # constant/empty column: no z-scores
+        z = (c - F.lit(float(mu))) / F.lit(float(sigma))
+        bad = (F.abs(z) >= threshold) if double_sided else (z >= threshold)
+        ce.unexpected_mask = c.isNotNull() & bad
+        return df.filter(ce.unexpected_mask).count()
+
+    ce._count = count
     return ce
 
 
@@ -535,27 +554,37 @@ def _c_in_table_set(kwargs):
     """FK-style membership against another table (the reference documents
     this as `value_set: {"query": "SELECT id FROM ..."}` —
     api_documentation.md:401-423 — but never evaluates it). kwargs:
-    column, ref_table (path or catalog name), ref_column. The engine
-    resolves it as a broadcast left-anti join (violations = non-null values
-    absent from the reference column); nulls pass, like in_set."""
-    if not kwargs.get("ref_table"):
-        # without this the engine would skip the anti-join branch and fall
-        # through to the unconditional-zero count — a misconfigured FK check
-        # reporting green forever
+    column, ref_table (path or catalog name), ref_column. The count is a
+    broadcast left-anti join (violations = non-null values absent from the
+    reference column; Catalyst falls back to a shuffle join past the
+    broadcast threshold); nulls pass, like in_set."""
+    ref_table = kwargs.get("ref_table")
+    if not ref_table:
+        # an FK check with nothing to check against must error, not report
+        # green forever
         raise ValueError(
             "expect_column_values_to_be_in_table_set requires 'ref_table'")
+    column = kwargs.get("column")
+    ref_column = kwargs.get("ref_column", column)
     ce = CompiledExpectation(
         expectation_type="expect_column_values_to_be_in_table_set",
         kwargs=kwargs,
         mostly=_mostly(kwargs),
         unexpected_mask=None,
-        column=kwargs.get("column"),
-        values_kind=None,
-        samples_kind=None,
+        column=column,
     )
     ce._agg = {"n": F.count(F.lit(1))}
-    ce._count = lambda row, p: 0  # engine overrides via the anti-join job
-    ce.ref_table = kwargs.get("ref_table")
+
+    def count(row, p, df):
+        from dataqualityassistant_spark.sources.tables import read_table
+
+        ref = read_table(df.sparkSession, ref_table)
+        return (df.where(F.col(column).isNotNull())
+                .join(F.broadcast(ref.select(F.col(ref_column).alias("__ref")).distinct()),
+                      F.col(column) == F.col("__ref"), "left_anti")
+                .count())
+
+    ce._count = count
     return ce
 
 

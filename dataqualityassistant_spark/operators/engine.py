@@ -34,8 +34,8 @@ from pyspark.sql import types as T
 from dataqualityassistant_spark.rules import Rule
 from dataqualityassistant_spark.operators.compiler import (
     CompiledExpectation,
+    _mask_count_agg,
     compile_expectation,
-    type_matches,
     REFERENCE_TYPES,
 )
 
@@ -99,14 +99,14 @@ class SuiteEngine:
         t0 = time.time()
         rules = list(rules)
         compiled = self.compile_rules(rules)
-        schema_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+        present = set(df.columns)
 
         # A missing column must error THAT expectation, not crash the suite
         # (reference catches per-expectation, quality_engine.py:422-430).
         for (rule, ces) in compiled:
             for exp, ce in zip(rule.expectations, ces):
                 if ce.error is None:
-                    missing = [c for c in exp.columns_referenced() if c not in schema_types]
+                    missing = [c for c in exp.columns_referenced() if c not in present]
                     if missing:
                         ce.error = f"Column '{missing[0]}' not found in table"
                         ce.unexpected_mask = None
@@ -118,30 +118,14 @@ class SuiteEngine:
             # One malformed expectation (e.g. an invalid regex that only the
             # JVM rejects) must not poison the fused job for every other
             # rule (reference isolates per expectation, :422-430). Fall back
-            # to per-expectation aggregates, erroring only the bad ones.
+            # to one aggregate per expectation, erroring only the bad ones.
             agg_row = df.agg(F.count(F.lit(1)).alias("__element_count")).collect()[0].asDict()
-            for i, (_, ces) in enumerate(compiled):
-                for j, ce in enumerate(ces):
-                    if ce.error is not None:
-                        continue
-                    prefix = f"r{i}e{j}"
-                    try:
-                        if ce.pre_project and ce.unexpected_mask is not None:
-                            # window masks have no ce._agg — replay the same
-                            # project→sum shape agg_frame uses, or a healthy
-                            # 'increasing' expectation would be poisoned by
-                            # an unrelated malformed one (KeyError on _u)
-                            agg_row.update(
-                                df.select(ce.unexpected_mask.alias("__ppm"))
-                                .agg(F.sum(F.when(F.col("__ppm"), 1).otherwise(0))
-                                     .alias(f"{prefix}_u"))
-                                .collect()[0].asDict())
-                        elif ce._agg:
-                            agg_row.update(
-                                df.agg(*ce.agg_exprs(prefix)).collect()[0].asDict())
-                    except Exception as e:
-                        ce.error = str(e)
-                        ce.unexpected_mask = None
+            for prefix, ce in _live(compiled):
+                try:
+                    agg_row.update(_aggregate(df, [(prefix, ce)]).collect()[0].asDict())
+                except Exception as e:
+                    ce.error = str(e)
+                    ce.unexpected_mask = None
         element_count = int(agg_row["__element_count"])
 
         results = []
@@ -152,7 +136,7 @@ class SuiteEngine:
             for j, ce in enumerate(ces):
                 exp_results.append(
                     self._finalize_expectation(df, ce, agg_row, f"r{i}e{j}", element_count,
-                                               schema_types, pending_samples)
+                                               pending_samples)
                 )
             rule_success = all(r.get("success", False) for r in exp_results)
             results.append(
@@ -191,26 +175,8 @@ class SuiteEngine:
         conditional aggregate per expectation, one ``count(*)``, one job.
         Exposed for plan-shape tests (the whole point of the engine is that
         N expectations never cost N scans)."""
-        agg_cols: list[Column] = [F.count(F.lit(1)).alias("__element_count")]
-        pre_cols: list[Column] = []
-        for i, (_, ces) in enumerate(compiled):
-            for j, ce in enumerate(ces):
-                if ce.error is not None:
-                    continue
-                prefix = f"r{i}e{j}"
-                if ce.pre_project and ce.unexpected_mask is not None:
-                    # window-containing mask: legal in a projection, not in
-                    # an aggregate — project to a boolean first. Still ONE
-                    # scan (project → agg in the same job).
-                    alias = f"__pp_{prefix}"
-                    pre_cols.append(ce.unexpected_mask.alias(alias))
-                    agg_cols.append(
-                        F.sum(F.when(F.col(alias), 1).otherwise(0)).alias(f"{prefix}_u"))
-                else:
-                    agg_cols.extend(ce.agg_exprs(prefix))
-        if pre_cols:
-            df = df.select("*", *pre_cols)
-        return df.agg(*agg_cols)
+        return _aggregate(df, list(_live(compiled)),
+                          F.count(F.lit(1)).alias("__element_count"))
 
     @staticmethod
     def _mask_filtered(df: DataFrame, ce: CompiledExpectation) -> DataFrame:
@@ -223,8 +189,7 @@ class SuiteEngine:
     # -- per-expectation finalization --------------------------------------
 
     def _finalize_expectation(self, df: DataFrame, ce: CompiledExpectation, agg_row: dict,
-                              prefix: str, element_count: int, schema_types: dict,
-                              pending_samples: list | None = None) -> dict:
+                              prefix: str, element_count: int, pending_samples: list) -> dict:
         if ce.error is not None:
             return {
                 "expectation_type": ce.expectation_type,
@@ -234,46 +199,10 @@ class SuiteEngine:
                 "kwargs": ce.kwargs,
             }
 
-        observed_value = None
         try:
-            if ce.ref_table is not None:
-                # FK membership: broadcast left-anti join against the
-                # reference column's distinct values. Small-dim broadcast;
-                # Catalyst falls back to shuffle join past the threshold.
-                from dataqualityassistant_spark.sources.tables import read_table
-
-                ref = read_table(df.sparkSession, ce.ref_table)
-                ref_col = ce.kwargs.get("ref_column", ce.column)
-                orphans = (
-                    df.where(F.col(ce.column).isNotNull())
-                    .join(
-                        F.broadcast(ref.select(F.col(ref_col).alias("__ref")).distinct()),
-                        F.col(ce.column) == F.col("__ref"),
-                        "left_anti",
-                    )
-                )
-                unexpected_count = orphans.count()
-            elif ce.zscore_threshold is not None:
-                # two-pass by nature: μ/σ rode the fused aggregate; one extra
-                # scan counts violations against the resolved literals (and
-                # installs the literal mask so sample fetching works)
-                mu = agg_row.get(f"{prefix}_mu")
-                sigma = agg_row.get(f"{prefix}_sigma")
-                if mu is None or sigma is None or float(sigma) == 0.0:
-                    unexpected_count = 0  # constant/empty column: no z-scores
-                else:
-                    z = (F.col(ce.column) - F.lit(float(mu))) / F.lit(float(sigma))
-                    t = ce.zscore_threshold
-                    bad = (F.abs(z) >= t) if ce.zscore_double_sided else (z >= t)
-                    ce.unexpected_mask = F.col(ce.column).isNotNull() & bad
-                    unexpected_count = df.filter(ce.unexpected_mask).count()
-            elif ce.expectation_type == "expect_column_values_to_be_of_type":
-                declared = ce.kwargs.get("type_") or ce.kwargs.get("type", "")
-                actual = schema_types.get(ce.column, "")
-                ok = type_matches(declared, actual)
-                unexpected_count = 0 if ok else element_count
-            else:
-                unexpected_count = ce.count_from_row(agg_row, prefix)
+            # the compiled count runs any second pass its type needs
+            # against the frame
+            unexpected_count = ce.count_from_row(agg_row, prefix, df)
         except Exception as e:  # any evaluation error -> failed expectation
             return {
                 "expectation_type": ce.expectation_type,
@@ -307,24 +236,15 @@ class SuiteEngine:
                 dup_rows = self._dup_values(df, ce.column, MAX_UNEXPECTED_VALUES)
                 dup_vals = [r[0] for r in dup_rows]
                 result["unexpected_values"] = [_serialize_value(v) for v in dup_vals]
-                # reuse the fetched values: the sample fetch used to re-run
-                # the identical full-table duplicate groupBy a second time
-                out["sample_rows"] = self._fetch_samples(df, ce, dup_vals=dup_vals[:5])
-            elif ce.unexpected_mask is not None and pending_samples is not None:
+                # the samples reuse these values: no second full-table
+                # duplicate groupBy
+                out["sample_rows"] = self._dup_samples(df, ce.column, dup_vals[:5])
+            elif ce.unexpected_mask is not None:
                 # mask-based fetches are deferred and batched into ONE job
                 # for the whole suite (see _flush_pending_samples)
                 pending_samples.append((ce, result, out))
-            else:
-                if ce.values_kind == "rows" and ce.unexpected_mask is not None:
-                    vals = [
-                        r[0]
-                        for r in self._mask_filtered(df, ce)
-                        .select(ce.column)
-                        .limit(MAX_UNEXPECTED_VALUES)
-                        .collect()
-                    ]
-                    result["unexpected_values"] = [_serialize_value(v) for v in vals]
-                out["sample_rows"] = self._fetch_samples(df, ce)
+            # an expectation without a mask (a set- or table-level check)
+            # has no rows to sample
         elif ce.values_kind is not None:
             result["unexpected_values"] = []
         return out
@@ -373,8 +293,7 @@ class SuiteEngine:
                         .collect()
                     ]
                 result["unexpected_values"] = [_serialize_value(v) for v in vals]
-            if ce.samples_kind == "mask":
-                out["sample_rows"] = [_row_to_sample(r) for r in got[: MAX_SAMPLE_ROWS]]
+            out["sample_rows"] = [_row_to_sample(r) for r in got[: MAX_SAMPLE_ROWS]]
 
     def _dup_values(self, df: DataFrame, column: str, limit: int):
         return (
@@ -392,32 +311,48 @@ class SuiteEngine:
         keep = [f.name for f in df.schema.fields if not isinstance(f.dataType, T.BinaryType)]
         return df.select(*keep) if len(keep) != len(df.schema.fields) else df
 
-    def _fetch_samples(self, df: DataFrame, ce: CompiledExpectation,
-                       dup_vals: list | None = None) -> list[dict]:
+    def _dup_samples(self, df: DataFrame, column: str, dup_vals: list) -> list[dict]:
+        """Sample rows of the duplicate groups of ``dup_vals`` (reference
+        :383-395: ≤5 dup values × ≤2 rows each, cap 5 total). pandas
+        ``df[col] == NaN`` matches nothing, so a null dup group contributes
+        no samples."""
         dfp = self._sample_projection(df)
-        if ce.samples_kind == "mask" and ce.unexpected_mask is not None:
-            # filter the full frame, project after (mask may reference a
-            # pruned binary column — see _flush_pending_samples)
-            rows = (self._mask_filtered(df, ce).select(*dfp.columns)
-                    .limit(MAX_SAMPLE_ROWS).collect())
-            return [_row_to_sample(r) for r in rows]
-        if ce.samples_kind == "dups":
-            # reference :383-395: ≤5 dup values × ≤2 rows each, cap 5 total;
-            # pandas `df[col] == NaN` matches nothing, so null dup groups
-            # contribute no samples — filter nulls out of the fetch.
-            # dup_vals lets the caller reuse its already-fetched duplicate
-            # values instead of paying the full-table groupBy a second time.
-            if dup_vals is None:
-                dup_vals = [r[0] for r in self._dup_values(df, ce.column, 5)]
-            dup_vals = [v for v in dup_vals if v is not None]
-            samples: list[dict] = []
-            for v in dup_vals[:5]:
-                rows = dfp.filter(F.col(ce.column) == F.lit(v)).limit(2).collect()
-                samples.extend(_row_to_sample(r) for r in rows[:2])
-                if len(samples) >= MAX_SAMPLE_ROWS:
-                    break
-            return samples[: MAX_SAMPLE_ROWS]
-        return []
+        samples: list[dict] = []
+        for v in [v for v in dup_vals if v is not None][:5]:
+            rows = dfp.filter(F.col(column) == F.lit(v)).limit(2).collect()
+            samples.extend(_row_to_sample(r) for r in rows[:2])
+            if len(samples) >= MAX_SAMPLE_ROWS:
+                break
+        return samples[: MAX_SAMPLE_ROWS]
+
+
+def _live(compiled) -> Iterable[tuple[str, CompiledExpectation]]:
+    """``(prefix, ce)`` of every expectation of a compiled suite that has not
+    errored; the prefix names its aggregates in the fused row."""
+    for i, (_, ces) in enumerate(compiled):
+        for j, ce in enumerate(ces):
+            if ce.error is None:
+                yield f"r{i}e{j}", ce
+
+
+def _aggregate(df: DataFrame, items: list[tuple[str, CompiledExpectation]],
+               *extra: Column) -> DataFrame:
+    """ONE ``df.agg`` of ``extra`` and each ``(prefix, ce)``'s aggregates.
+    A window mask (``pre_project``) is legal in a projection, not in an
+    aggregate: it is projected to a boolean column first and counted there,
+    still in the same single scan (project → agg in one job)."""
+    aggs, pre = list(extra), []
+    for prefix, ce in items:
+        if ce.pre_project:
+            alias = f"__pp_{prefix}"
+            pre.append(ce.unexpected_mask.alias(alias))
+            aggs.extend(agg.alias(f"{prefix}_{name}") for name, agg
+                        in _mask_count_agg("u", F.col(alias)).items())
+        else:
+            aggs.extend(ce.agg_exprs(prefix))
+    if pre:
+        df = df.select("*", *pre)
+    return df.agg(*aggs)
 
 
 def expectation_outcome(unexpected_count: int, element_count: int,

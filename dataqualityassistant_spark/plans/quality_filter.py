@@ -94,6 +94,15 @@ _LINEAGE_SCHEMA = pa.schema([
 ])
 
 
+def observed_row(obs: Observation) -> dict:
+    """The row an ``observe()``d write collected, ``{}`` if it had no rows.
+    A write of no rows (an empty wave or micro-batch) leaves an empty
+    shuffle, after which AQE drops the observed node: the observation then
+    holds a row with no fields, which ``obs.get`` cannot convert. Such a
+    write observed nothing, and its metrics are zero counts."""
+    return obs.get if obs._jo.getRow().length() else {}
+
+
 def metrics_table(rows: list[dict]) -> pa.Table:
     """The data columns of :func:`operators.engine.metric_rows` as an
     Arrow table for :func:`write_partition`."""
@@ -307,11 +316,8 @@ class QualityFilterPipeline:
                  .partitionBy("part_bucket")
                  .parquet(output_path))
 
-                # a wave without rows (its buckets are empty) leaves an empty
-                # shuffle, after which AQE drops the observed node: the
-                # observation then holds a row with no fields, which obs.get
-                # cannot convert. Such a wave observed nothing: zero counts.
-                row = obs.get if obs._jo.getRow().length() else {}
+                # a wave whose buckets are empty observes nothing
+                row = observed_row(obs)
                 element_count = int(row.get("element_count") or 0)
                 n_rows_total += element_count
                 wave_metrics = metric_rows(row, expectations, run_id=run_id,

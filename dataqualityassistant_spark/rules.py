@@ -42,7 +42,8 @@ class Expectation:
         """All column names this expectation touches (used for validation and
         column pruning). Mirrors the reference's extraction logic at
         ``app/main.py:1466-1488`` (column / column_A / column_B / columns /
-        compare_to)."""
+        compare_to), plus the ``order_by`` / ``partition_by`` keys of
+        ``expect_column_values_to_be_increasing`` (a name or a list)."""
         cols: list[str] = []
         kw = self.kwargs
         if kw.get("column"):
@@ -55,6 +56,9 @@ class Expectation:
             cols.extend(kw["columns"])
         if kw.get("compare_to"):
             cols.append(kw["compare_to"])
+        for key in ("order_by", "partition_by"):
+            if kw.get(key):
+                cols.extend([kw[key]] if isinstance(kw[key], str) else kw[key])
         return cols
 
     def to_dict(self) -> dict[str, Any]:

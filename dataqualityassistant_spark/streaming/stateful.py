@@ -147,7 +147,7 @@ def start_domain_stats_stream(
         # batch_df's plan is the OUTPUT of the stateful operator: each
         # action re-runs scoring + shuffle + state-store work, so the
         # emptiness probe and the write must share ONE execution — persist
-        # first (unlike stream_filter, where isEmpty probes the raw source)
+        # first (stream_filter needs no probe: its empty batch writes nothing)
         batch_df.persist()
         try:
             if batch_df.isEmpty():

@@ -36,6 +36,7 @@ from dataqualityassistant_spark.operators.engine import metric_aggs, metric_rows
 from dataqualityassistant_spark.plans.quality_filter import (
     QualityFilterPipeline,
     metrics_table,
+    observed_row,
     shuffle_to_buckets,
     write_partition,
 )
@@ -55,11 +56,9 @@ def make_batch_processor(
     expectations = pipe._expectation_metric_masks()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            # availableNow triggers can deliver an empty final batch; writing
-            # it is a no-op and Observation.get on a zero-task write cannot
-            # produce a metrics row
-            return
+        # an empty batch (availableNow can deliver one last) is processed
+        # like any other: its write adds no partition and its metrics rows
+        # hold zero counts, as an empty batch wave's do
         scored = pipe._score(batch_df, expectations)
         obs = None
         if metrics_path:
@@ -77,7 +76,7 @@ def make_batch_processor(
          .partitionBy("batch_id", "part_bucket")
          .parquet(output_path))
         if obs is not None:
-            rows = metric_rows(obs.get, expectations, batch_id=batch_id)
+            rows = metric_rows(observed_row(obs), expectations, batch_id=batch_id)
             if rows:
                 write_partition(batch_df.sparkSession, metrics_path,
                                 {"batch_id": batch_id}, metrics_table(rows))

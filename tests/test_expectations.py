@@ -210,6 +210,8 @@ def test_of_type(spark):
     r = single(df, "expect_column_values_to_be_of_type", {"column": "b", "type_": "integer"})
     assert r["success"] is False
     assert r["result"]["unexpected_count"] == 1
+    # a schema check has no rows to sample and lists no values
+    assert r["sample_rows"] == [] and "unexpected_values" not in r["result"]
 
 
 def test_value_lengths_between(spark):
@@ -305,6 +307,8 @@ def test_row_count_between(spark):
     r = single(df, "expect_table_row_count_to_be_between", {"min_value": 10})
     assert r["success"] is False
     assert r["result"]["unexpected_count"] == 3  # all-or-nothing
+    assert r["sample_rows"] == [] and "unexpected_values" not in r["result"]
+    assert r["result"]["observed_value"] == 3
 
 
 def test_column_mean_between(spark):
@@ -331,6 +335,8 @@ def test_in_table_set_fk(spark, tmp_path):
     assert r["result"]["unexpected_count"] == 1  # 3 is orphan; null passes
     assert r["result"]["element_count"] == 4
     assert r["success"] is False
+    # the anti-join count has no mask: no sample rows, no value listing
+    assert r["sample_rows"] == [] and "unexpected_values" not in r["result"]
 
 
 def test_reference_create_rule_scenario(spark):
@@ -569,6 +575,38 @@ def test_fallback_preserves_window_expectation(spark):
     assert bad["success"] is False and bad.get("error")
     assert "error" not in inc
     assert inc["result"]["unexpected_count"] == 1  # v drops 10 -> 9 once
+
+
+@pytest.mark.parametrize("key", ["order_by", "partition_by"])
+def test_missing_window_key_errors_one_expectation_in_fused_job(spark, key):
+    """A missing ``order_by`` / ``partition_by`` column is a missing column:
+    that expectation carries the reference's message, and the rest of the
+    suite still runs in the ONE fused aggregate job (not the per-expectation
+    fallback that an unresolved column in the fused job would force)."""
+    df = spark.createDataFrame([(1, 1, 10), (1, 2, 9), (2, 3, None)],
+                               "u: long, ts: long, v: long")
+    kwargs = {"column": "v", "order_by": ["ts"], "partition_by": "u"}
+    kwargs[key] = "missing_ts" if key == "order_by" else ["u", "missing_ts"]
+    rules = [Rule(id=1, name="r", rule_config=[
+        {"expectation_type": "expect_column_values_to_be_increasing", "kwargs": kwargs},
+        {"expectation_type": "expect_column_values_to_be_between",
+         "kwargs": {"column": "v", "min_value": 0}},
+    ])]
+    sc = spark.sparkContext
+    # AQE off: the job count is then the number of actions the engine runs
+    group = f"missing-window-key-{key}"
+    sc.setJobGroup(group, "counting suite jobs")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        out = run_suite(df, rules)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    inc, between = out["results"][0]["results"]
+    assert inc["success"] is False
+    assert inc["error"] == "Column 'missing_ts' not found in table"
+    assert between["success"] is True and between["result"]["element_count"] == 3
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
 def test_in_table_set_missing_ref_table_errors(spark):

@@ -473,10 +473,15 @@ def test_streaming_replayed_batch_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(out).count() == 100
     assert spark.read.parquet(met).count() == 2 * n_exp
 
-    # empty micro-batch (availableNow edge case): no-op, nothing written
+    # empty micro-batch (availableNow edge case): no output rows, and
+    # zero-count metrics rows for its batch_id, as an empty wave commits
     empty = spark.createDataFrame([], PAGES_SCHEMA)
     process(empty, 2)
     assert spark.read.parquet(out).count() == 100
+    empty_met = spark.read.parquet(met).where("batch_id = 2").collect()
+    assert len(empty_met) == n_exp
+    assert all(r["element_count"] == 0 and r["unexpected_count"] == 0 and r["success"]
+               for r in empty_met)
 
 
 def test_streaming_metrics_match_batch_run(spark, tmp_path):
