@@ -251,36 +251,16 @@ class SuiteEngine:
 
     def _flush_pending_samples(self, df: DataFrame, pending: list) -> None:
         """Driver samples for ALL failing mask-based expectations in ONE
-        job: each expectation contributes a ``limit``-ed branch projected to
-        a common (tag, row-struct) schema; the branches union and collect
-        once, then fan back out to each expectation's ``unexpected_values``
-        (first ``MAX_UNEXPECTED_VALUES`` rows' column values) and
-        ``sample_rows``. On a 100 TB table a suite with N failing rules
-        previously launched ~2N sequential small scans here; now it is one
-        job regardless of N."""
-        if not pending:
-            return
+        job (:meth:`_fetch_tagged`), fanned back out to each expectation's
+        ``unexpected_values`` (first ``MAX_UNEXPECTED_VALUES`` rows' column
+        values) and ``sample_rows``."""
         dfp = self._sample_projection(df)
-        limit = max(MAX_UNEXPECTED_VALUES, MAX_SAMPLE_ROWS)
-        cols = [F.col(c) for c in dfp.columns]
-        branches = []
-        for tag, (ce, _result, _out) in enumerate(pending):
-            # filter the FULL frame, project afterwards: a mask referencing
-            # a pruned binary column (e.g. not_be_null on pages.html) would
-            # otherwise fail analysis and crash the whole suite run
-            branches.append(
-                self._mask_filtered(df, ce)
-                .select(F.lit(tag).alias("__tag"), F.struct(*cols).alias("__row"))
-                .limit(limit)
-            )
-        unioned = branches[0]
-        for b in branches[1:]:
-            unioned = unioned.unionByName(b)
-        by_tag: dict[int, list] = {}
-        for r in unioned.collect():
-            by_tag.setdefault(r["__tag"], []).append(r["__row"])
-        for tag, (ce, result, out) in enumerate(pending):
-            got = by_tag.get(tag, [])
+        # filter the FULL frame, project afterwards: a mask referencing a
+        # pruned binary column (e.g. not_be_null on pages.html) would
+        # otherwise fail analysis and crash the whole suite run
+        fetched = self._fetch_tagged([self._mask_filtered(df, ce) for ce, _, _ in pending],
+                                     dfp.columns, max(MAX_UNEXPECTED_VALUES, MAX_SAMPLE_ROWS))
+        for (ce, result, out), got in zip(pending, fetched):
             if ce.values_kind == "rows":
                 if ce.column in dfp.columns:
                     vals = [row[ce.column] for row in got[: MAX_UNEXPECTED_VALUES]]
@@ -312,18 +292,31 @@ class SuiteEngine:
         return df.select(*keep) if len(keep) != len(df.schema.fields) else df
 
     def _dup_samples(self, df: DataFrame, column: str, dup_vals: list) -> list[dict]:
-        """Sample rows of the duplicate groups of ``dup_vals`` (reference
-        :383-395: ≤5 dup values × ≤2 rows each, cap 5 total). pandas
-        ``df[col] == NaN`` matches nothing, so a null dup group contributes
-        no samples."""
-        dfp = self._sample_projection(df)
-        samples: list[dict] = []
-        for v in [v for v in dup_vals if v is not None][:5]:
-            rows = dfp.filter(F.col(column) == F.lit(v)).limit(2).collect()
-            samples.extend(_row_to_sample(r) for r in rows[:2])
-            if len(samples) >= MAX_SAMPLE_ROWS:
-                break
-        return samples[: MAX_SAMPLE_ROWS]
+        """Sample rows of the duplicate groups of ``dup_vals`` in ONE job
+        (reference :383-395: ≤5 dup values × ≤2 rows each, in ``dup_vals``
+        order, cap 5 total). pandas ``df[col] == NaN`` matches nothing, so a
+        null dup group contributes no samples."""
+        vals = [v for v in dup_vals if v is not None][:5]
+        fetched = self._fetch_tagged([df.filter(F.col(column) == F.lit(v)) for v in vals],
+                                     self._sample_projection(df).columns, 2)
+        return [_row_to_sample(r) for rows in fetched for r in rows][: MAX_SAMPLE_ROWS]
+
+    @staticmethod
+    def _fetch_tagged(frames: list[DataFrame], columns: list[str], limit: int) -> list[list]:
+        """Up to ``limit`` rows of each frame, as structs of ``columns``, in
+        ONE job: each frame is a ``limit``-ed branch tagged with its index,
+        the branches union and collect once. On a 100 TB table N follow-up
+        fetches would be N sequential small scans; this is one job
+        regardless of N."""
+        if not frames:
+            return []
+        cols = [F.col(c) for c in columns]
+        branches = [f.select(F.lit(tag).alias("__tag"), F.struct(*cols).alias("__row")).limit(limit)
+                    for tag, f in enumerate(frames)]
+        fetched: list[list] = [[] for _ in frames]
+        for r in reduce(DataFrame.unionByName, branches).collect():
+            fetched[r["__tag"]].append(r["__row"])
+        return fetched
 
 
 def _live(compiled) -> Iterable[tuple[str, CompiledExpectation]]:

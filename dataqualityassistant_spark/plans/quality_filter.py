@@ -25,7 +25,9 @@ Common-Crawl-style pages ``(url, warc_ts, html, text, lang)``:
    Iceberg-ready layout), per-rule×expectation ``metrics`` rows collected
    via ``DataFrame.observe`` during the output write (ZERO extra scans),
    per-bucket ``lineage`` rows, salted per-domain stats, and checkpoint
-   watermarks for idempotent resume.
+   watermarks for idempotent resume. One function, :func:`commit_wave`,
+   writes the output, metrics and lineage of a batch wave and of a
+   streaming micro-batch (``streaming/stream_filter.py``).
 
 Scale design (10^12 docs, 1000 executors):
 - the hot path is scan → project (codegen + the fused Arrow UDF stage) →
@@ -142,6 +144,67 @@ def write_partition(spark: SparkSession, path: str, partition: dict, table: pa.T
     fs.mkdirs(target)
     if not fs.rename(staged, Path(target, name)):
         raise OSError(f"could not move {staged.toString()} to {target.toString()}")
+
+
+def commit_wave(
+    scored: DataFrame,
+    expectations: list[tuple[str, CompiledExpectation]],
+    buckets: Sequence[int],
+    output_path: str,
+    partition: dict,
+    metrics_path: str | None = None,
+    lineage_path: str | None = None,
+    **keys,
+) -> tuple[dict, list[dict]]:
+    """Commit one wave of ``scored`` rows, all in ``buckets`` (a batch wave
+    of :meth:`QualityFilterPipeline.run` or a streaming micro-batch): the
+    ``part_bucket``-partitioned output write, whose ``observe()`` yields the
+    metrics and the row/kept/watermark figures, then the metrics rows (keyed
+    by ``partition`` and ``keys``) and the lineage. Each table replaces its
+    partition, so a replayed wave replaces its rows instead of duplicating
+    them. Returns the observed row (``{}`` for a wave of no rows) and the
+    metrics rows."""
+    # anonymous: observation names are registered once per session, so a
+    # named one would collide when a wave or micro-batch is replayed
+    obs = Observation()
+    observed = scored.observe(
+        obs, *metric_aggs(expectations),
+        F.sum(F.col("verdict").cast("long")).alias("kept"),
+        F.max("warc_ts").alias("watermark"))
+    # raw text is scored but not written: the output corpus is the scrubbed
+    # text, and the input table already holds the raw bytes. The shuffled
+    # wave is cached for the lineage groupBy below (only when there is a
+    # lineage table to feed); the observation still resolves through the
+    # cached plan.
+    wave = shuffle_to_buckets(observed.drop("text"), buckets)
+    if lineage_path:
+        wave.persist()
+    try:
+        # dynamic partition overwrite is set PER WRITER, never on the
+        # session: a session-wide conf.set would silently change overwrite
+        # semantics (stale partitions kept) for every later partitioned write
+        (wave.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("part_bucket")
+         .parquet(output_path))
+        # a wave whose buckets are empty observes nothing
+        row = observed_row(obs)
+        metrics = metric_rows(row, expectations, **partition, **keys)
+        if metrics_path and metrics:
+            write_partition(scored.sparkSession, metrics_path, partition, metrics_table(metrics))
+        # lineage: per-bucket counts + warc_ts watermark of the cached wave.
+        # An empty wave has no buckets to report.
+        if lineage_path and row.get("element_count"):
+            lineage = (wave.groupBy("part_bucket")
+                       .agg(F.count(F.lit(1)).alias("rows"),
+                            F.sum(F.col("verdict").cast("long")).alias("kept"),
+                            F.max("warc_ts").alias("watermark"))
+                       .toArrow())
+            write_partition(scored.sparkSession, lineage_path, partition,
+                            lineage.cast(_LINEAGE_SCHEMA))
+    finally:
+        wave.unpersist()
+    return row, metrics
 
 
 def default_webtext_rules() -> list[Rule]:
@@ -265,18 +328,14 @@ class QualityFilterPipeline:
     ) -> dict:
         """Execute the pipeline with per-bucket checkpointed waves.
 
-        Each wave: score pending buckets → shuffle onto write tasks (persisted
-        only with ``lineage_path``) → write output partitions (dynamic
-        overwrite ⇒ idempotent re-run), whose observe() yields the rule
-        metrics, row/kept counts and watermark → metrics → lineage (a groupBy
-        of the persisted wave) → persist released → watermark record
+        The pending buckets are split into ``waves`` strided groups. Each
+        wave is committed by :func:`commit_wave` (output, metrics and lineage
+        replaced per wave, so a wave re-run after a crash before its
+        checkpoint replaces its rows and the rows of completed waves survive)
+        and then its watermark record, taken from the write's observe(), is
         committed last. ``max_buckets`` processes only a prefix of pending
         buckets (the kill-and-resume test's mid-run crash).
         """
-        # dynamic partition overwrite is set PER WRITER below, never on the
-        # session: a session-wide conf.set would silently change overwrite
-        # semantics (stale partitions kept) for every later partitioned
-        # write in the same session
         store = CheckpointStore(checkpoint_path) if checkpoint_path else None
         done = store.completed_buckets(run_id) if store else set()
         pending = [b for b in range(self.n_buckets) if b not in done]
@@ -296,52 +355,13 @@ class QualityFilterPipeline:
         wave_groups = [w for w in wave_groups if w]
         for wave_idx, buckets in enumerate(wave_groups):
             wave_key = wave_base + wave_idx
-            partition = {"run_id": run_id, "wave": wave_key}
-            obs = Observation(f"metrics-{run_id}-{wave_idx}")
-            observed = scored.filter(F.col("part_bucket").isin(buckets)).observe(
-                obs, *metric_aggs(expectations),
-                F.sum(F.col("verdict").cast("long")).alias("kept"),
-                F.max("warc_ts").alias("watermark"))
-            # raw text is scored but not written: the output corpus is the
-            # scrubbed text, and the input table already holds the raw bytes.
-            # The shuffled wave is cached for the lineage groupBy below (only
-            # when there is a lineage table to feed); the observation still
-            # resolves through the cached plan.
-            wave = shuffle_to_buckets(observed.drop("text"), buckets)
-            if lineage_path:
-                wave.persist()
-            try:
-                (wave.write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("part_bucket")
-                 .parquet(output_path))
-
-                # a wave whose buckets are empty observes nothing
-                row = observed_row(obs)
-                element_count = int(row.get("element_count") or 0)
-                n_rows_total += element_count
-                wave_metrics = metric_rows(row, expectations, run_id=run_id,
-                                           run_ts=run_ts, wave=wave_key)
-                all_metrics.extend(wave_metrics)
-                # both tables are replaced per (run_id, wave) partition: a
-                # wave re-run after a crash before its checkpoint replaces
-                # its rows instead of duplicating them, and the rows of
-                # completed waves survive a mid-run crash
-                if metrics_path and wave_metrics:
-                    write_partition(spark, metrics_path, partition, metrics_table(wave_metrics))
-                # lineage: per-bucket counts + warc_ts watermark of the
-                # cached wave. An empty wave has no buckets to report.
-                if lineage_path and element_count:
-                    lineage = (wave.groupBy("part_bucket")
-                               .agg(F.count(F.lit(1)).alias("rows"),
-                                    F.sum(F.col("verdict").cast("long")).alias("kept"),
-                                    F.max("warc_ts").alias("watermark"))
-                               .toArrow())
-                    write_partition(spark, lineage_path, partition,
-                                    lineage.cast(_LINEAGE_SCHEMA))
-            finally:
-                wave.unpersist()
-
+            row, wave_metrics = commit_wave(
+                scored.filter(F.col("part_bucket").isin(buckets)), expectations, buckets,
+                output_path, {"run_id": run_id, "wave": wave_key},
+                metrics_path=metrics_path, lineage_path=lineage_path, run_ts=run_ts)
+            element_count = int(row.get("element_count") or 0)
+            n_rows_total += element_count
+            all_metrics.extend(wave_metrics)
             if store:
                 watermark = row.get("watermark")
                 store.mark_completed(run_id, wave_key, buckets, {

@@ -145,21 +145,15 @@ def start_domain_stats_stream(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # batch_df's plan is the OUTPUT of the stateful operator: each
-        # action re-runs scoring + shuffle + state-store work, so the
-        # emptiness probe and the write must share ONE execution — persist
-        # first (stream_filter needs no probe: its empty batch writes nothing)
-        batch_df.persist()
-        try:
-            if batch_df.isEmpty():
-                return
-            (batch_df.withColumn("batch_id", F.lit(batch_id))
-             .coalesce(1)  # changelog rows per batch are few (≤ touched domains)
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_id")
-             .parquet(output_path))
-        finally:
-            batch_df.unpersist()
+        # action re-runs scoring + shuffle + state-store work, so the write
+        # is the only action. An empty batch writes no partition and leaves
+        # the existing ones alone.
+        (batch_df.withColumn("batch_id", F.lit(batch_id))
+         .coalesce(1)  # changelog rows per batch are few (≤ touched domains)
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("batch_id")
+         .parquet(output_path))
 
     writer = (updates.writeStream
               .outputMode("update")

@@ -5,41 +5,33 @@ The reference (and the north rule) are batch — checkpointed bucket waves in
 the *continuous-ingestion* variant for deployments where pages land as
 files (e.g. a WARC-extraction job dropping parquet into a landing zone):
 
-    readStream(file source) → foreachBatch(score + partitioned write)
+    readStream(file source) → foreachBatch(score + commit)
 
-``foreachBatch`` reuses the exact batch scoring plan per micro-batch, so
-semantics (features, verdict, scrub) are identical to the batch pipeline.
+``foreachBatch`` reuses the batch pipeline's scoring plan AND its commit
+(``plans/quality_filter.commit_wave``) per micro-batch, so semantics
+(features, verdict, scrub, output layout, metrics) are identical to a batch
+wave's.
 
 **Delivery semantics**: Spark's streaming checkpoint makes micro-batch
 *delivery* at-least-once into ``foreachBatch`` (a crash between the sink
 write and the checkpoint commit replays the batch). End-to-end exactly-once
-therefore comes from making the sink IDEMPOTENT: output and metrics are
-partitioned by ``batch_id`` and written with dynamic partition overwrite, so
-a replayed batch REPLACES its own partitions instead of appending duplicates
-— the same mechanism the batch pipeline uses for bucket waves.
+therefore comes from making the sink IDEMPOTENT: a micro-batch is committed
+as a wave into its own ``batch_id=<id>`` output directory and metrics
+partition, with dynamic partition overwrite, so a replayed batch REPLACES
+its own partitions instead of appending duplicates — the same mechanism the
+batch pipeline uses for bucket waves.
 
-Per-batch rule metrics ride an ``Observation`` attached to the scored frame
-before the write, so each micro-batch is scored exactly once (no second
-evaluation of the Arrow scoring stage for metrics). The rule suite is
-compiled once per processor, not per micro-batch, and the metrics rows (one
-per expectation) are written on the driver by ``write_partition``, the same
-writer and table layout as the batch pipeline's metrics.
+Per-batch rule metrics ride the write's ``observe()``, so each micro-batch
+is scored exactly once. The rule suite is compiled once per processor, not
+per micro-batch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from dataqualityassistant_spark.fixtures import PAGES_SCHEMA
-from dataqualityassistant_spark.operators.engine import metric_aggs, metric_rows
-from dataqualityassistant_spark.plans.quality_filter import (
-    QualityFilterPipeline,
-    metrics_table,
-    observed_row,
-    shuffle_to_buckets,
-    write_partition,
-)
+from dataqualityassistant_spark.plans.quality_filter import QualityFilterPipeline, commit_wave
 
 
 def make_batch_processor(
@@ -56,30 +48,12 @@ def make_batch_processor(
     expectations = pipe._expectation_metric_masks()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # an empty batch (availableNow can deliver one last) is processed
-        # like any other: its write adds no partition and its metrics rows
-        # hold zero counts, as an empty batch wave's do
-        scored = pipe._score(batch_df, expectations)
-        obs = None
-        if metrics_path:
-            # metrics ride the write via observe(): scored exactly once.
-            # anonymous Observation: names are registered once per session,
-            # so a REPLAYED batch_id would collide with its first attempt
-            obs = Observation()
-            scored = scored.observe(obs, *metric_aggs(expectations))
-        # batch_id partitioning + dynamic overwrite = idempotent replay:
-        # a re-delivered micro-batch overwrites ONLY its own partitions
-        (shuffle_to_buckets(scored.drop("text"), range(pipe.n_buckets))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id", "part_bucket")
-         .parquet(output_path))
-        if obs is not None:
-            rows = metric_rows(observed_row(obs), expectations, batch_id=batch_id)
-            if rows:
-                write_partition(batch_df.sparkSession, metrics_path,
-                                {"batch_id": batch_id}, metrics_table(rows))
+        # an empty batch (availableNow can deliver one last) is committed
+        # like an empty wave: it writes no data file and its metrics rows
+        # hold zero counts
+        commit_wave(pipe._score(batch_df, expectations), expectations,
+                    range(pipe.n_buckets), f"{output_path}/batch_id={batch_id}",
+                    {"batch_id": batch_id}, metrics_path=metrics_path)
 
     return process_batch
 
@@ -92,17 +66,13 @@ def start_stream(
     pipeline: QualityFilterPipeline | None = None,
     metrics_path: str | None = None,
     trigger_once: bool = False,
-    max_files_per_trigger: int | None = None,
 ):
     """Start (and return) the streaming query. ``trigger_once`` drains all
     available input then stops — the incremental-batch deployment mode
     (cron-scheduled catch-up runs with streaming's checkpoint bookkeeping +
     idempotent batch sinks, no always-on cluster)."""
     pipe = pipeline or QualityFilterPipeline()
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pages = reader.parquet(input_path)
+    pages = spark.readStream.schema(PAGES_SCHEMA).parquet(input_path)
 
     writer = (
         pages.writeStream

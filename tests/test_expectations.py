@@ -164,6 +164,39 @@ def test_unique_null_group_counts_but_yields_no_samples(spark):
     assert all(s["v"] is not None for s in r["sample_rows"])
 
 
+def test_unique_samples_are_fetched_in_one_job(spark):
+    """A failing uniqueness expectation costs three jobs with samples on:
+    the fused aggregate, the duplicate values and ONE fetch of every
+    sample row (not one job per duplicate value). The samples keep their
+    semantics: duplicate-value order, ≤2 rows per value, ≤5 in total, none
+    for the null group."""
+    rows = ([("a", i) for i in range(3)] + [("b", i) for i in range(2)] + [("c", 0)]
+            + [(None, i) for i in range(2)] + [("d", i) for i in range(2)]
+            + [("e", i) for i in range(2)])
+    df = mk_df(spark, rows, "k: string, i: int").coalesce(1)
+    sc = spark.sparkContext
+    # AQE off and one shuffle partition: the job count is then the number
+    # of actions the engine runs
+    group = "unique-sample-jobs"
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    sc.setJobGroup(group, "counting suite jobs")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        r = single(df, "expect_column_values_to_be_unique", {"column": "k"})
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+    assert r["result"]["unexpected_count"] == 2 + 1 + 1 + 1 + 1
+    dups = r["result"]["unexpected_values"]
+    assert sorted(dups, key=str) == sorted(["a", "b", None, "d", "e"], key=str)
+    counts = {"a": 3, "b": 2, "d": 2, "e": 2}
+    want = [v for v in dups if v is not None for _ in range(min(2, counts[v]))][:5]
+    assert [s["k"] for s in r["sample_rows"]] == want
+
+
 # -------------------------------------------------- unknown / parity / errors
 
 def test_unknown_type_fails_with_reference_error(spark):

@@ -507,6 +507,16 @@ def test_streaming_metrics_match_batch_run(spark, tmp_path):
     assert len(batch) == len(pipe._expectation_metric_masks())
     assert decoded(stream_met) == batch
 
+    # the micro-batch and the wave write the same output rows; the stream
+    # adds only its batch_id partition (except is NaN- and null-safe)
+    batch_out = spark.read.parquet(str(tmp_path / "batch_out"))
+    stream_out = spark.read.parquet(str(tmp_path / "stream_out"))
+    assert set(stream_out.columns) == set(batch_out.columns) | {"batch_id"}
+    stream_out = stream_out.select(*batch_out.columns)
+    assert stream_out.count() == batch_out.count() == 60
+    assert stream_out.exceptAll(batch_out).isEmpty()
+    assert batch_out.exceptAll(stream_out).isEmpty()
+
 
 def test_metadata_table_schemas_are_pinned(spark, tmp_path):
     """The driver-written metrics, lineage and streaming metrics tables
