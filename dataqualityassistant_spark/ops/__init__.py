@@ -47,7 +47,6 @@ from dataqualityassistant_spark.ops.urltools import canonicalize_url, registered
 from dataqualityassistant_spark.ops.textstats import (
     remove_repeated_lines,
     with_token_count,
-    with_quality_score,
     fingerprint_udf,
     TOKEN_PATTERN,
 )
@@ -91,7 +90,6 @@ __all__ = [
     "ann_topk_lsh",
     "remove_repeated_lines",
     "with_token_count",
-    "with_quality_score",
     "fingerprint_udf",
     "TOKEN_PATTERN",
 ]

@@ -15,6 +15,9 @@ Four strategies, each with a distinct cost/recall profile at 10^12-doc scale:
 
 All hashing is deterministic (xxhash64 JVM-side, fixed-parameter universal
 hashing numpy-side) — no Python ``hash()`` (salted per process) anywhere.
+
+The candidate-pair builders share one cache rule: a lazy call caches
+nothing, and ``materialize=True`` caches the input only for the call.
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ from functools import lru_cache, reduce
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -31,20 +35,15 @@ from pyspark.sql.functions import pandas_udf
 
 # ------------------------------------------------------------------ exact
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                normalize: bool = False) -> DataFrame:
+def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep the min-id representative of each exact-text group.
 
     groupBy on xxhash64(text) rather than the text itself: the shuffle moves
     8-byte keys, and at 10^12 rows the aggregate is a standard two-phase
-    hash agg. (Hash collisions at 64 bits are ~1e-7 even at 10^12 docs;
-    pass ``normalize`` to pre-fold case/whitespace first.)
+    hash agg (hash collisions at 64 bits are ~1e-7 even at 10^12 docs).
     Returns the surviving (id, text-hash) pairs joined back to full rows.
     """
-    t = F.col(text_col)
-    if normalize:
-        t = F.regexp_replace(F.lower(t), r"\s+", " ")
-    keyed = df.withColumn("__k", F.xxhash64(t))
+    keyed = df.withColumn("__k", F.xxhash64(F.col(text_col)))
     survivors = keyed.groupBy("__k").agg(F.min(id_col).alias(id_col)).drop("__k")
     return df.join(survivors, id_col, "left_semi")
 
@@ -84,8 +83,6 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
 
     ``cluster_id`` = min doc id in the component.
     """
-    from pyspark import StorageLevel
-
     edges = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
              .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
              .distinct())
@@ -390,28 +387,30 @@ def minhash_signature_batch(texts, n_hashes: int = 128, shingle: int = 9,
     return out
 
 
-def _finalize_pairs(out: DataFrame, cached: DataFrame | None,
-                    materialize: bool, attr: str) -> DataFrame:
-    """Shared tail of the candidate-pair builders (minhash/simhash). Either
-    materialize the (small) pairs eagerly via ``localCheckpoint`` and
-    release the input cache before returning, or return the lazy plan with
-    the unpersist handle attached as ``attr`` (``None`` when nothing was
-    cached).
+def _call_cache(df: DataFrame, materialize: bool) -> DataFrame:
+    """The input of a candidate-pair builder: cached MEMORY_AND_DISK for
+    the call when ``materialize`` (:func:`_finalize_pairs` releases it), as
+    passed otherwise."""
+    return df.persist(StorageLevel.MEMORY_AND_DISK) if materialize else df
 
-    Both paths may evaluate the cached scoring relation up to TWICE on the
-    first action (concurrent join-side stages race the cache fill) — the
-    racing evaluations overlap in wall time, so this measures ~equal to a
-    strict single pass; a serialized pre-fill (``cached.count()`` before
-    the join) was tried and measured ~60% SLOWER on the minhash headline
-    query because its pass cannot overlap the join stages."""
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        if cached is not None:
-            cached.unpersist()
-        setattr(out, attr, None)
+
+def _finalize_pairs(out: DataFrame, cached: DataFrame, materialize: bool) -> DataFrame:
+    """Shared tail of the candidate-pair builders: the lazy plan, or with
+    ``materialize`` the (small) pairs ``localCheckpoint``-ed and the call's
+    input cache released before returning.
+
+    The first action may evaluate the cached input up to TWICE (concurrent
+    join-side stages race the cache fill) — the racing evaluations overlap
+    in wall time, so this measures ~equal to a strict single pass; a
+    serialized pre-fill (``cached.count()`` before the join) was tried and
+    measured ~60% SLOWER on the minhash headline query because its pass
+    cannot overlap the join stages."""
+    if not materialize:
         return out
-    setattr(out, attr, cached)
-    return out
+    try:
+        return out.localCheckpoint(eager=True)
+    finally:
+        cached.unpersist()
 
 
 def _minhash_bands(signatures: DataFrame, id_col: str, bands: int,
@@ -466,7 +465,6 @@ def minhash_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
                             bands: int = 16, threshold: float = 0.8,
                             max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
                             n_hashes: int | None = None,
-                            persist_signatures: bool = True,
                             materialize: bool = False) -> DataFrame:
     """LSH banding: split each signature into ``bands`` rows of
     (band_idx, band_hash); docs sharing one of those buckets are candidate
@@ -491,36 +489,20 @@ def minhash_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     Pairs come from :func:`bucket_pairs` over the (band, band-hash) buckets.
     The signature relation feeds three plan subtrees (the bucket groupBy +
     two re-attach joins; four with ``max_bucket_size=None``, whose self-join
-    reads it twice); ``persist_signatures`` caches it MEMORY_AND_DISK so
-    the signature UDF runs once, not once per subtree (measured 6.5s → 2.0s
-    at sf0.1). Two ways to avoid leaking that cache entry in a long-lived
-    session:
+    reads it twice), so an uncached Arrow UDF input runs once per subtree
+    (measured 6.5s → 2.0s at sf0.1 with the cache).
 
-    * ``materialize=True`` (recommended default usage): the pairs are
-      computed eagerly (``localCheckpoint`` — they are small: two ids + a
-      double per row) and the signature cache is unpersisted BEFORE
-      returning; ``result.persisted_signatures`` is ``None``. The only
-      storage held afterwards is the checkpointed pairs themselves (that
-      IS the result; released when the DataFrame is garbage-collected).
-    * ``materialize=False`` (lazy plan): the cached relation outlives this
-      call by design (the returned plan references it); it is exposed as
-      ``result.persisted_signatures`` so the caller can ``unpersist()`` once
-      the pairs land. NOTE the handle is a plain Python attribute on THIS
-      DataFrame object — any further transformation (``select``/``where``)
-      returns a new DataFrame without it, so read it first.
-
-    On a real cluster with 10^12 rows, checkpoint signatures to storage
-    (write/read parquet) instead and pass the re-read frame here with
-    ``persist_signatures=False`` (``persisted_signatures`` is then
-    ``None``)."""
+    Cache rule (every pair builder here): the default returns the lazy plan
+    over the input as passed and caches nothing — cache the input yourself
+    when the plan is consumed more than once, as :func:`incremental_dedup`
+    does. ``materialize=True`` caches the input for the call,
+    ``localCheckpoint``-s the (small) pairs and releases the cache before
+    returning."""
     if n_hashes is not None and n_hashes < bands:
         # rows_per_band would floor to 0 → every band hashes an empty slice
         # → all docs share one bucket → the join degenerates to all-pairs
         raise ValueError(f"bands ({bands}) must be <= signature length ({n_hashes})")
-    if persist_signatures:
-        from pyspark import StorageLevel
-
-        signatures = signatures.persist(StorageLevel.MEMORY_AND_DISK)
+    signatures = _call_cache(signatures, materialize)
     banded = _minhash_bands(signatures, id_col, bands, lazy_guard=n_hashes is None)
     # Candidate pairs dedupe on (id_a, id_b) ONLY — a distinct over the full
     # signature arrays would shuffle ~1 KB per row instead of 16 bytes.
@@ -549,11 +531,7 @@ def minhash_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
         .where(F.col("jaccard_est") >= threshold)
         .select("id_a", "id_b", "jaccard_est")
     )
-    # caller-side unpersist handle via _finalize_pairs (see docstring) —
-    # plain attribute on the returned DataFrame, None when the caller
-    # persisted upstream themselves or materialized
-    return _finalize_pairs(out, signatures if persist_signatures else None,
-                           materialize, "persisted_signatures")
+    return _finalize_pairs(out, signatures, materialize)
 
 
 def _read_signature_store(spark, store_path: str) -> DataFrame:
@@ -673,8 +651,9 @@ def incremental_dedup(new_docs: DataFrame, store_path: str, batch_id: str,
     against everything previously accepted, then record the survivors'
     signatures. Returns the surviving rows of ``new_docs``.
 
-    1. MinHash signatures for the batch (persisted — they feed three
-       consumers below);
+    1. MinHash signatures for the batch, persisted for the step — they
+       feed the lazy within-batch pairs, the cross pairs and the store
+       write below;
     2. within-batch near-dups via the banded self-join → one survivor per
        cluster (min id);
     3. batch survivors × signature store via the banded cross join — any
@@ -701,15 +680,12 @@ def incremental_dedup(new_docs: DataFrame, store_path: str, batch_id: str,
             f"batch_id {COMPACTED_BATCH_ID!r} is reserved for "
             "compact_signature_store output")
     spark = new_docs.sparkSession
-    from pyspark import StorageLevel
-
     sigs = minhash_signatures(new_docs, text_col, id_col, n_hashes, shingle, seed) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     corpus = None  # bound before the try so the finally can always release it
     try:
         pairs = minhash_candidate_pairs(sigs, id_col, bands, threshold,
-                                        max_bucket_size, n_hashes=n_hashes,
-                                        persist_signatures=False)
+                                        max_bucket_size, n_hashes=n_hashes)
         survivors = drop_near_duplicates(new_docs, pairs, id_col)
         from pyspark.errors import AnalysisException
 
@@ -1040,7 +1016,6 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
 def simhash_candidate_pairs(hashes: DataFrame, id_col: str = "doc_id",
                             max_hamming: int = 3,
                             max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-                            persist_hashes: bool = True,
                             materialize: bool = False) -> DataFrame:
     """Near-dup pairs with hamming(simhash) <= max_hamming via bit-chunk
     banding (pigeonhole: h differing bits over h+1 chunks leave >=1 chunk
@@ -1059,21 +1034,11 @@ def simhash_candidate_pairs(hashes: DataFrame, id_col: str = "doc_id",
     upstream simhash UDF in every subtree (measured 48 ArrowEvalPython
     operators / 32 scans in a single query plan before this rewrite); the
     exploded shape references it once (the bucket groupBy; twice for the
-    ``max_bucket_size=None`` self-join), and ``persist_hashes`` (default
-    ON — the relation is 16 bytes/row) caches it so the scoring UDF runs
-    exactly once. Same handle/`
-    ``materialize`` contract as :func:`minhash_candidate_pairs`: the lazy
-    result exposes ``result.persisted_hashes`` to unpersist later, or pass
-    ``materialize=True`` to compute the (small) pairs eagerly and release
-    the cache before returning.
-
-    CACHE-LIFETIME WARNING: a lazy-default call that IGNORES the
-    ``persisted_hashes`` handle leaks one MEMORY_AND_DISK cache entry per
-    call until session end (measured ≡ ``materialize=True`` in wall time,
-    so there is no performance reason to take the lazy path for one-shot
-    calls). Repeated one-shot invocations — entry queries, bench loops,
-    per-batch jobs — should pass ``materialize=True``; compose lazily only
-    when you keep the handle and unpersist it yourself.
+    ``max_bucket_size=None`` self-join, plus the null filter's own read of
+    an uncached UDF column). Same cache rule as
+    :func:`minhash_candidate_pairs`: lazy by default with nothing cached;
+    ``materialize=True`` caches the (16 bytes/row) input for the call so
+    the scoring UDF runs once, checkpoints the pairs and releases the cache.
 
     ``max_bucket_size`` drops (chunk_idx, chunk_value) buckets above the cap
     — at web scale a hot chunk value (e.g. all-zero chunks from short
@@ -1089,15 +1054,11 @@ def simhash_candidate_pairs(hashes: DataFrame, id_col: str = "doc_id",
     base_w, rem = divmod(64, n_chunks)
     widths = [base_w + 1] * rem + [base_w] * (n_chunks - rem)
     offsets = [sum(widths[:i]) for i in range(n_chunks)]
-    # persist BEFORE the null filter: a filter on a Python-UDF column pushes
+    # cache BEFORE the null filter: a filter on a Python-UDF column pushes
     # below the projection and DUPLICATES the UDF (filter + project each
     # evaluate it — measured 2x per row); with the UDF inside the cached
     # relation the filter reads the materialized column instead
-    t = hashes.select(id_col, "simhash")
-    if persist_hashes:
-        from pyspark import StorageLevel
-
-        t = t.persist(StorageLevel.MEMORY_AND_DISK)
+    t = _call_cache(hashes.select(id_col, "simhash"), materialize)
     t_nn = t.where(F.col("simhash").isNotNull())
     chunks = F.array(*[
         F.shiftrightunsigned(F.col("simhash"), offsets[i])
@@ -1123,10 +1084,7 @@ def simhash_candidate_pairs(hashes: DataFrame, id_col: str = "doc_id",
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-    # lazy path: the first action's concurrent join-side stages may race the
-    # cache fill and compute the hashes up to twice; cached thereafter
-    return _finalize_pairs(out, t if persist_hashes else None,
-                           materialize, "persisted_hashes")
+    return _finalize_pairs(out, t, materialize)
 
 
 # ------------------------------------------------------------- ngram jaccard
@@ -1134,7 +1092,6 @@ def simhash_candidate_pairs(hashes: DataFrame, id_col: str = "doc_id",
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                         n: int = 3, threshold: float = 0.5,
                         max_shingle_df: int | None = DEFAULT_MAX_BUCKET_SIZE,
-                        persist_shingles: bool = True,
                         materialize: bool = False) -> DataFrame:
     """Exact word-n-gram Jaccard similarity for all pairs sharing at least
     one shingle. Pure DataFrame algebra (explode → :func:`bucket_pairs` on
@@ -1153,12 +1110,10 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
 
     Rows sharing an id count as one document (copies of one text).
 
-    ``persist_shingles`` (default ON) caches the shingle relation so its
-    tokenize→explode subtree runs once, not once per consuming subtree. Same handle/``materialize`` contract as
-    :func:`minhash_candidate_pairs`: lazy results expose
-    ``result.persisted_shingles`` to unpersist; one-shot calls should pass
-    ``materialize=True`` (pairs checkpointed, cache released before
-    returning)."""
+    Same cache rule as :func:`minhash_candidate_pairs`: lazy by default with
+    nothing cached; ``materialize=True`` caches the shingle relation for the
+    call, so its tokenize→explode subtree runs once rather than once per
+    consuming subtree, checkpoints the pairs and releases the cache."""
     # explicit ASCII class == RE2 \s (the DuckDB oracle engine); Java \s
     # additionally includes \x0B and would tokenize such text differently
     words = F.filter(F.split(F.col(text_col), "[ \t\n\f\r]+"), lambda w: w != F.lit(""))
@@ -1173,25 +1128,17 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
             )
         ),
     )
-    from pyspark import StorageLevel
-
     member = [F.col(id_col).alias("id")]
     if max_shingle_df is None:
         # uncapped: a doc's shingle count comes free from the array size
         member.append(F.size("grams").alias("n"))
-    shingled = (
+    # the pair builder and (capped) the retained-size count both consume
+    # the tokenize→explode relation
+    shingled = _call_cache(
         df.select(F.col(id_col), grams.alias("grams"))
         .where(F.col("grams").isNotNull())
-        .select(F.struct(*member).alias("m"), F.explode("grams").alias("g"))
-    )
-    cached = None
-    if persist_shingles:
-        # cache the tokenize→explode relation: the pair builder and (capped)
-        # the retained-size count both consume it, so uncached the xxhash
-        # tokenization would re-run per consumer. Same handle/``materialize``
-        # contract as the minhash/simhash pair builders.
-        shingled = shingled.persist(StorageLevel.MEMORY_AND_DISK)
-        cached = shingled
+        .select(F.struct(*member).alias("m"), F.explode("grams").alias("g")),
+        materialize)
     pairs = bucket_pairs(shingled, ["g"], max_shingle_df)
     if max_shingle_df is None:
         inter = pairs.groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
@@ -1222,4 +1169,4 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return _finalize_pairs(out, cached, materialize, "persisted_shingles")
+    return _finalize_pairs(out, shingled, materialize)

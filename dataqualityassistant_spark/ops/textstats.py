@@ -1,5 +1,5 @@
 """Text-analysis operators for training-data pipelines: token counting,
-composite quality scoring, and winnowing document fingerprints. Language-ID
+compression ratio, line dedup and winnowing document fingerprints. Language-ID
 and perplexity live in :mod:`dataqualityassistant_spark.functions`."""
 
 from __future__ import annotations
@@ -69,24 +69,6 @@ def remove_repeated_lines(col: Column | str, split_regex: str = r"\n",
     ``list_position(ls, ls[i]) = i``."""
     c = F.col(col) if isinstance(col, str) else col
     return F.array_join(F.array_distinct(F.split(c, split_regex)), join_sep)
-
-
-def quality_score_expr() -> Column:
-    """Composite 0..1 quality score over the derived feature columns
-    (requires with_text_scores upstream): equal-weight blend of
-    stopword presence, alphabetic density, length adequacy, and
-    non-repetitiveness. A cheap single-number ranking signal."""
-    stop = F.least(F.coalesce(F.col("stopword_ratio") / 0.3, F.lit(0.0)), F.lit(1.0))
-    alpha = F.coalesce(F.col("alpha_word_ratio"), F.lit(0.0))
-    length = F.least(F.coalesce(F.col("word_count") / 100.0, F.lit(0.0)), F.lit(1.0))
-    non_rep = F.lit(1.0) - F.least(
-        F.coalesce(F.col("dup_5gram_char_frac"), F.lit(0.0)), F.lit(1.0)
-    )
-    return ((stop + alpha + length + non_rep) / 4.0).alias("quality_score")
-
-
-def with_quality_score(df: DataFrame, out_col: str = "quality_score") -> DataFrame:
-    return df.withColumn(out_col, quality_score_expr())
 
 
 _W = 8  # winnowing window (fingerprints per ~W tokens)

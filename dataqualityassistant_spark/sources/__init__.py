@@ -4,9 +4,7 @@ from dataqualityassistant_spark.sources.tables import (
     read_table,
     write_table,
     table_exists,
-    list_tables,
     table_schema,
-    iceberg_available,
 )
 
 __all__ = [
@@ -17,7 +15,5 @@ __all__ = [
     "read_table",
     "write_table",
     "table_exists",
-    "list_tables",
     "table_schema",
-    "iceberg_available",
 ]

@@ -15,12 +15,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when the session's JVM ships the Iceberg Spark connector."""
-    return _session_has_iceberg(spark)
-
-
 def _session_has_iceberg(spark: SparkSession) -> bool:
+    """True when the session's JVM ships the Iceberg Spark connector."""
     try:
         spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
         return True
@@ -87,11 +83,6 @@ def table_exists(spark: SparkSession, ref: str) -> bool:
     if ref.startswith(("/", "file:")) or os.path.isabs(ref):
         return os.path.exists(ref.removeprefix("file:"))
     return spark.catalog.tableExists(ref)
-
-
-def list_tables(spark: SparkSession, database: str | None = None) -> list[str]:
-    """GET /database/tables analog (app/main.py:1311-1334)."""
-    return [t.name for t in spark.catalog.listTables(database)]
 
 
 def table_schema(spark: SparkSession, ref: str) -> list[dict]:

@@ -171,9 +171,9 @@ def test_vocab_topk_is_partial_agg_plus_take_ordered(spark):
 
 def test_minhash_pairs_reuse_cached_signatures(spark):
     """The signature relation feeds three plan subtrees (the bucket groupBy
-    + two re-attach joins); minhash_candidate_pairs persists it, so the
-    LAZY plan must read the signatures from the cache (InMemoryRelation),
-    not recompute the Arrow UDF per subtree. The entry query materializes
+    + two re-attach joins); a caller that persists it gets a LAZY plan
+    that reads the signatures from the cache (InMemoryRelation), not one
+    that recomputes the Arrow UDF per subtree. The entry query materializes
     (r4): its returned plan is the checkpointed pairs — no UDF, no cache
     entry left behind."""
     from dataqualityassistant_spark.ops.dedup import (
@@ -183,12 +183,14 @@ def test_minhash_pairs_reuse_cached_signatures(spark):
     import __spark_entry__ as entrymod
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    sigs = minhash_signatures(docs, n_hashes=64, shingle=9)
-    lazy = minhash_candidate_pairs(sigs, bands=16, threshold=0.9, n_hashes=64)
-    lazy.count()  # fills the cache, executes the real plan
-    plan = lazy._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan
-    lazy.persisted_signatures.unpersist()
+    sigs = minhash_signatures(docs, n_hashes=64, shingle=9).persist()
+    try:
+        lazy = minhash_candidate_pairs(sigs, bands=16, threshold=0.9, n_hashes=64)
+        lazy.count()  # fills the cache, executes the real plan
+        plan = lazy._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan
+    finally:
+        sigs.unpersist()
 
     df = entrymod.q_minhash_dup_pairs(spark, SF)
     eplan = df._jdf.queryExecution().executedPlan().toString()
@@ -207,8 +209,7 @@ def _lsh_pairs_and_bucket_keys(spark, family, cap):
         return embedding_near_dup_pairs(emb, threshold=0.3, n_planes=3,
                                         max_bucket_size=cap), "__b"
     if family == "ngram":
-        return ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_df=cap,
-                                   persist_shingles=False), "g"
+        return ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_df=cap), "g"
     new = docs.withColumn("doc_id", F.col("doc_id") + 1_000_000).where(F.col("doc_id") % 3 == 0)
     return minhash_pairs_against(minhash_signatures(new, n_hashes=64),
                                  minhash_signatures(docs, n_hashes=64),
