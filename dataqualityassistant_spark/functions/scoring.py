@@ -24,6 +24,11 @@ document's segment must stay a left-to-right ``np.cumsum``, never
 ``np.add.reduceat`` or ``ndarray.sum``: over 1-D segments those sum
 pairwise and are not bit-identical to the spec's serial loop.
 
+The UDF also returns the texts' scrub-guard bitmask
+(``scrub.scrub_guards``): it holds every text as a Python ``str`` already,
+where the guard tests are cheap substring searches, and the JVM scrub chain
+then runs its regexes only on the pages a pattern can match.
+
 The quality RULES over these columns still compile to Spark SQL expressions
 (``expect_column_values_to_be_between`` masks) — only the derived-column
 computation lives in the Arrow stage.
@@ -39,6 +44,7 @@ from pyspark.sql.functions import pandas_udf
 
 from dataqualityassistant_spark.functions.langid import classify_batch
 from dataqualityassistant_spark.functions.perplexity import log_perplexity_batch
+from dataqualityassistant_spark.functions.scrub import scrub_guards
 from dataqualityassistant_spark.functions.text_features import (
     FEATURE_COLUMNS,
     text_features_batch,
@@ -57,10 +63,12 @@ _SCORES_TYPE = T.StructType(
         T.StructField("detected_lang", T.StringType()),
         T.StructField("langid_margin", T.DoubleType()),
         T.StructField("log_ppl", T.DoubleType()),
+        T.StructField("scrub_guards", T.ByteType()),
     ]
 )
 
-SCORE_FIELDS = [f.name for f in _SCORES_TYPE.fields]
+# the score columns; the scrub guards are an input of the scrub, not a score
+SCORE_FIELDS = [f.name for f in _SCORES_TYPE.fields if f.name != "scrub_guards"]
 
 
 @pandas_udf(_SCORES_TYPE)
@@ -76,13 +84,19 @@ def text_scores_udf(texts: pd.Series) -> pd.DataFrame:
     out["detected_lang"] = [lang for lang, _ in langs]
     out["langid_margin"] = [margin for _, margin in langs]
     out["log_ppl"] = log_perplexity_batch(docs)
+    out["scrub_guards"] = scrub_guards(docs)
     return out
 
 
-def with_text_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_text_scores(df: DataFrame, text_col: str = "text",
+                     guards_col: str | None = None) -> DataFrame:
     """Adds all SCORE_FIELDS via one Python stage. The struct is materialized
     once into a column and fields projected from it, so the UDF runs exactly
-    once per row."""
+    once per row. With ``guards_col`` the text's scrub-guard bitmask is added
+    under that name too, for ``scrub_text_column(..., guards=)``; the caller
+    drops it."""
+    fields = {name: F.col(f"__scores.{name}") for name in SCORE_FIELDS}
+    if guards_col:
+        fields[guards_col] = F.col("__scores.scrub_guards")
     df = df.withColumn("__scores", text_scores_udf(F.col(text_col)))
-    df = df.withColumns({name: F.col(f"__scores.{name}") for name in SCORE_FIELDS})
-    return df.drop("__scores")
+    return df.withColumns(fields).drop("__scores")

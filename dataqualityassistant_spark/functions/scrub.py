@@ -27,19 +27,38 @@ half-eaten by the phone pattern); the chain applies top to bottom.
 The email pattern is seeded from the reference's email-format rule
 (rule_generator.py:961).
 
-The JVM chain skips patterns that cannot match a row. Guard contract: a
-guard must be a necessary condition of its patterns on the text it tests,
-so skipping never changes the output. Every email match contains ``@``;
-ssn/card/phone/ipv4 each need an ASCII digit, and the email step only
-writes the digit-free ``[EMAIL]``, so "no digit in the raw text" still
-holds when those patterns run. The toxic alternation is unguarded.
+Each step runs only on rows whose scrub-guard bitmask holds its bit. A
+bit must be a NECESSARY condition of its step's patterns, so skipping a
+step never changes the output:
+
+- ``EMAIL_GUARD`` (1): the raw text contains ``@``. Every email match
+  contains one.
+- ``DIGIT_GUARD`` (2): the raw text contains an ASCII ``[0-9]``.
+  ssn/card/phone/ipv4 each need one, and the steps before them only write
+  the digit-free ``[EMAIL]``/``[SSN]``/``[CARD]``/``[PHONE]``, so a text
+  without a digit has none when those patterns run.
+- ``TOXIC_GUARD`` (4): the raw text contains a ``TOXIC_WORDS`` word as a
+  substring. The toxic step is case-sensitive, and every replacement
+  token holds only uppercase letters and brackets, none of which occurs
+  in a toxic word. So a toxic match after the PII steps lies wholly in
+  original characters between tokens, and the raw text holds the word.
+
+Two sources compute the bitmask. The pipeline's fused scoring UDF
+(``functions/scoring.py``) already holds every text as a Python ``str``
+and computes all three bits with :func:`scrub_guards` (substring
+searches, a few µs a page). Without it (``guards=None``, e.g. the
+``scrub_pii`` entry query), :func:`jvm_guard_tests` tests ``@`` and the
+digit on the JVM and runs the toxic step on every row, since a JVM
+substring search costs about what the regex it would skip costs.
 ``scrub_text_python`` stays the unguarded oracle.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Sequence
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -58,21 +77,59 @@ SCRUB_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def _chain(c: Column, patterns) -> Column:
-    for _, pattern, repl in patterns:
-        c = F.regexp_replace(c, pattern, repl)
-    return c
+# the scrub-guard bits; a step runs only on rows whose bitmask holds its bit
+EMAIL_GUARD, DIGIT_GUARD, TOXIC_GUARD = 1, 2, 4
+_STEPS = [(EMAIL_GUARD, SCRUB_PATTERNS[:1]), (DIGIT_GUARD, SCRUB_PATTERNS[1:5]),
+          (TOXIC_GUARD, SCRUB_PATTERNS[5:])]
+_ASCII_DIGITS = "0123456789"
 
 
-def scrub_text_column(col: Column | str) -> Column:
-    """JVM regexp_replace chain over a text column, each step guarded by a
-    precondition every one of its matches needs (see the module docstring).
-    Null in → null out: a null guard takes the ``otherwise`` branch."""
+def scrub_guards(texts: Sequence[str | None]) -> np.ndarray:
+    """The scrub-guard bitmask of each text (int8; 0 for a null or empty
+    text): ``@`` → ``EMAIL_GUARD``, an ASCII digit → ``DIGIT_GUARD``, a
+    ``TOXIC_WORDS`` word → ``TOXIC_GUARD``. Each test is a substring search
+    (memchr for one character)."""
+    out = []
+    for t in texts:
+        g = 0
+        if t:
+            if "@" in t:
+                g = EMAIL_GUARD
+            for d in _ASCII_DIGITS:
+                if d in t:
+                    g |= DIGIT_GUARD
+                    break
+            for w in TOXIC_WORDS:
+                if w in t:
+                    g |= TOXIC_GUARD
+                    break
+        out.append(g)
+    return np.array(out, dtype=np.int8)
+
+
+def jvm_guard_tests(raw: Column) -> list[Column]:
+    """The steps' guards computed on the JVM, one boolean per step: ``@``
+    and an ASCII digit as :func:`scrub_guards` tests them, and TRUE for the
+    toxic step (the optimizer folds its condition away)."""
+    return [F.instr(raw, "@") > 0, raw.rlike("[0-9]"), F.lit(True)]
+
+
+def scrub_text_column(col: Column | str, guards: Column | None = None) -> Column:
+    """JVM regexp_replace chain over a text column, each step run only where
+    ``guards`` (the :func:`scrub_guards` bitmask of the same raw text, see
+    the module docstring) holds its bit, or where :func:`jvm_guard_tests`
+    holds when ``guards`` is None. Null in → null out; a null guard skips
+    every step."""
     raw = F.col(col) if isinstance(col, str) else col
-    email, digits, toxic = SCRUB_PATTERNS[:1], SCRUB_PATTERNS[1:5], SCRUB_PATTERNS[5:]
-    c = F.when(F.instr(raw, "@") > 0, _chain(raw, email)).otherwise(raw)
-    c = F.when(raw.rlike("[0-9]"), _chain(c, digits)).otherwise(c)
-    return _chain(c, toxic)
+    tests = (jvm_guard_tests(raw) if guards is None
+             else [guards.bitwiseAND(bit) != 0 for bit, _ in _STEPS])
+    c = raw
+    for test, (_, patterns) in zip(tests, _STEPS):
+        step = c
+        for _, pattern, repl in patterns:
+            step = F.regexp_replace(step, pattern, repl)
+        c = F.when(test, step).otherwise(c)
+    return c
 
 
 _COMPILED = [(re.compile(p), r) for _, p, r in SCRUB_PATTERNS]

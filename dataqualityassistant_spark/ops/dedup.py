@@ -17,7 +17,8 @@ All hashing is deterministic (xxhash64 JVM-side, fixed-parameter universal
 hashing numpy-side) — no Python ``hash()`` (salted per process) anywhere.
 
 The candidate-pair builders share one cache rule: a lazy call caches
-nothing, and ``materialize=True`` caches the input only for the call.
+nothing, and ``materialize=True`` caches the input only for the call; an
+input the caller has cached is used as is and stays cached.
 """
 
 from __future__ import annotations
@@ -387,17 +388,25 @@ def minhash_signature_batch(texts, n_hashes: int = 128, shingle: int = 9,
     return out
 
 
-def _call_cache(df: DataFrame, materialize: bool) -> DataFrame:
-    """The input of a candidate-pair builder: cached MEMORY_AND_DISK for
-    the call when ``materialize`` (:func:`_finalize_pairs` releases it), as
-    passed otherwise."""
-    return df.persist(StorageLevel.MEMORY_AND_DISK) if materialize else df
+def _call_cache(df: DataFrame, materialize: bool) -> tuple[DataFrame, DataFrame | None]:
+    """The input of a candidate-pair builder and the cache the call owns.
+    With ``materialize`` an input that is not cached yet is cached
+    MEMORY_AND_DISK for the call and returned as both (:func:`_finalize_pairs`
+    releases it). A lazy call's input, and an input the caller has cached
+    (its ``storageLevel`` is not NONE), come back as passed with no cache of
+    the call's own: releasing the caller's cache would drop it for the
+    caller too."""
+    if materialize and df.storageLevel == StorageLevel.NONE:
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        return df, df
+    return df, None
 
 
-def _finalize_pairs(out: DataFrame, cached: DataFrame, materialize: bool) -> DataFrame:
+def _finalize_pairs(out: DataFrame, materialize: bool, owned: DataFrame | None) -> DataFrame:
     """Shared tail of the candidate-pair builders: the lazy plan, or with
-    ``materialize`` the (small) pairs ``localCheckpoint``-ed and the call's
-    input cache released before returning.
+    ``materialize`` the (small) pairs ``localCheckpoint``-ed and the cache
+    the call owns (``owned``, from :func:`_call_cache`) released before
+    returning.
 
     The first action may evaluate the cached input up to TWICE (concurrent
     join-side stages race the cache fill) — the racing evaluations overlap
@@ -410,7 +419,8 @@ def _finalize_pairs(out: DataFrame, cached: DataFrame, materialize: bool) -> Dat
     try:
         return out.localCheckpoint(eager=True)
     finally:
-        cached.unpersist()
+        if owned is not None:
+            owned.unpersist()
 
 
 def _minhash_bands(signatures: DataFrame, id_col: str, bands: int,
@@ -497,12 +507,12 @@ def minhash_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     when the plan is consumed more than once, as :func:`incremental_dedup`
     does. ``materialize=True`` caches the input for the call,
     ``localCheckpoint``-s the (small) pairs and releases the cache before
-    returning."""
+    returning; an input the caller has cached stays cached."""
     if n_hashes is not None and n_hashes < bands:
         # rows_per_band would floor to 0 → every band hashes an empty slice
         # → all docs share one bucket → the join degenerates to all-pairs
         raise ValueError(f"bands ({bands}) must be <= signature length ({n_hashes})")
-    signatures = _call_cache(signatures, materialize)
+    signatures, owned = _call_cache(signatures, materialize)
     banded = _minhash_bands(signatures, id_col, bands, lazy_guard=n_hashes is None)
     # Candidate pairs dedupe on (id_a, id_b) ONLY — a distinct over the full
     # signature arrays would shuffle ~1 KB per row instead of 16 bytes.
@@ -531,7 +541,7 @@ def minhash_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
         .where(F.col("jaccard_est") >= threshold)
         .select("id_a", "id_b", "jaccard_est")
     )
-    return _finalize_pairs(out, signatures, materialize)
+    return _finalize_pairs(out, materialize, owned)
 
 
 def _read_signature_store(spark, store_path: str) -> DataFrame:
@@ -1058,7 +1068,7 @@ def simhash_candidate_pairs(hashes: DataFrame, id_col: str = "doc_id",
     # below the projection and DUPLICATES the UDF (filter + project each
     # evaluate it — measured 2x per row); with the UDF inside the cached
     # relation the filter reads the materialized column instead
-    t = _call_cache(hashes.select(id_col, "simhash"), materialize)
+    t, owned = _call_cache(hashes.select(id_col, "simhash"), materialize)
     t_nn = t.where(F.col("simhash").isNotNull())
     chunks = F.array(*[
         F.shiftrightunsigned(F.col("simhash"), offsets[i])
@@ -1084,7 +1094,7 @@ def simhash_candidate_pairs(hashes: DataFrame, id_col: str = "doc_id",
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-    return _finalize_pairs(out, t, materialize)
+    return _finalize_pairs(out, materialize, owned)
 
 
 # ------------------------------------------------------------- ngram jaccard
@@ -1134,7 +1144,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
         member.append(F.size("grams").alias("n"))
     # the pair builder and (capped) the retained-size count both consume
     # the tokenize→explode relation
-    shingled = _call_cache(
+    shingled, owned = _call_cache(
         df.select(F.col(id_col), grams.alias("grams"))
         .where(F.col("grams").isNotNull())
         .select(F.struct(*member).alias("m"), F.explode("grams").alias("g")),
@@ -1169,4 +1179,4 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return _finalize_pairs(out, shingled, materialize)
+    return _finalize_pairs(out, materialize, owned)

@@ -20,7 +20,9 @@ Common-Crawl-style pages ``(url, warc_ts, html, text, lang)``:
    arithmetic come from ``operators/engine.py``; this module observes and
    writes.
 3. **Scrub stage** — ordered JVM ``regexp_replace`` PII/toxicity chain,
-   byte-identical to the Python-re oracle.
+   byte-identical to the Python-re oracle; each step runs only on the
+   pages whose scrub-guard bitmask, computed by the fused UDF, says it can
+   match (``functions/scrub.py``).
 4. **Outputs** — scored table (parquet, partitioned by url-hash bucket;
    Iceberg-ready layout), per-rule×expectation ``metrics`` rows collected
    via ``DataFrame.observe`` during the output write (ZERO extra scans),
@@ -292,15 +294,18 @@ class QualityFilterPipeline:
         # expressions fall out of whole-stage codegen and stopped scaling
         # (see functions/scoring.py); the fused Python loop is faster and
         # bit-identical to the label oracle.
-        scored = with_text_scores(scored)
+        # The same stage computes the scrub-guard bitmask, so the JVM scrub
+        # chain runs each regex step only on the pages it can match.
+        scored = with_text_scores(scored, guards_col="__scrub_guards")
 
         scored = scored.withColumn("failed_rules", failed_rules_column(expectations))
         scored = scored.withColumn("verdict", F.size("failed_rules") == 0)
-        scored = scored.withColumn("scrubbed_text", scrub_text_column("text"))
+        scored = scored.withColumn(
+            "scrubbed_text", scrub_text_column("text", F.col("__scrub_guards")))
         scored = scored.withColumn(
             "part_bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(self.n_buckets)).cast("int")
         )
-        return scored
+        return scored.drop("__scrub_guards")
 
     def _expectation_metric_masks(self) -> list[tuple[str, CompiledExpectation]]:
         """(rule_name, compiled expectation) for every row-local expectation:

@@ -413,6 +413,25 @@ def test_pair_builders_cache_only_inside_a_materialized_call(spark, docs, family
     assert sorted(map(tuple, eager.collect())) == want
 
 
+@pytest.mark.parametrize("family", sorted(_PAIR_BUILDERS))
+def test_materialized_pair_builders_keep_the_callers_cache(spark, docs, family):
+    """materialize=True on an input the caller has cached uses that cache
+    and leaves it cached: the call releases only a cache it made itself."""
+    from pyspark import StorageLevel
+
+    make_input, build = _PAIR_BUILDERS[family]
+    df = make_input(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        df.count()
+        level = df.storageLevel
+        want = sorted(map(tuple, build(df).collect()))
+        eager = build(df, materialize=True)
+        assert df.storageLevel == level != StorageLevel.NONE
+        assert sorted(map(tuple, eager.collect())) == want and want
+    finally:
+        df.unpersist()
+
+
 def test_ngram_jaccard_hot_shingle_filter(spark, docs):
     # with the boilerplate shingle dropped everywhere, real near-dups remain
     pairs = ngram_jaccard_pairs(docs, n=3, threshold=0.3, max_shingle_df=10,

@@ -15,11 +15,16 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from dataqualityassistant_spark import Rule, run_suite
+from dataqualityassistant_spark.functions.corpus import TOXIC_WORDS
 from dataqualityassistant_spark.functions.scrub import (
+    _STEPS,
     SCRUB_PATTERNS,
+    jvm_guard_tests,
+    scrub_guards,
     scrub_text_column,
     scrub_text_python,
 )
+from dataqualityassistant_spark.plans.quality_filter import QualityFilterPipeline
 from dataqualityassistant_spark.oracle import oracle_expectation
 
 values_s = st.lists(
@@ -687,7 +692,7 @@ def test_feature_whitespace_sets_cover_every_codepoint():
 
 
 # --------------------------------------------------------------------------
-# scrub guards: a text that fails a guard can never match its patterns
+# scrub guards: a step whose guard bit is unset can never match
 
 
 _SCRUB_ATOMS = [
@@ -695,6 +700,11 @@ _SCRUB_ATOMS = [
     "123-45-6789", "000-00-0000", "4111 1111 1111 1111", "0000 0000 0000 0000",
     "+1 212-555-0000", "(212) 555 0000", "555-0000", "1.2.3.4", "0.0.0.0",
     "frakking", "belgium", "[EMAIL]", "a", "_", " ", "-", ".", "\n",
+    # toxic words next to PII, capitalised or embedded, and halves of one
+    # that a PII match may split
+    "gorram", "smegging", "Frakking", "frakkingly", "BELGIUM", "[SSN]",
+    "frakking@b.co", "a@b.co.gorram", "123-45-6789smegging", "belgium1.2.3.4",
+    "frak", "king", "gor", "ram", "smeg", "ging", "bel", "gium",
 ]
 # non-ASCII digits, fullwidth at sign, NUL, NBSP, line separator
 _SCRUB_ADVERSARIAL = ["٣", "３", "²", "߇", "＠", "\x00", "\u00a0", "\u2028"]
@@ -703,49 +713,64 @@ _SCRUB_ADVERSARIAL = ["٣", "３", "²", "߇", "＠", "\x00", "\u00a0", "\u2028"
 _scrub_piece = st.one_of(st.sampled_from(_SCRUB_ATOMS + _SCRUB_ADVERSARIAL),
                          st.characters(max_codepoint=0x36F))
 _scrub_text = st.lists(_scrub_piece, max_size=10).map("".join)
+_TOXIC_RX = re.compile("|".join(TOXIC_WORDS))
 
 
 @st.composite
 def _guard_failing_variants(draw, pieces):
     """The text, the text with every ``@`` swapped for a non-``@`` stand-in,
     the text with every ASCII digit swapped for a non-ASCII one (or
-    dropped), and the text whose only digit is ``0`` — so both guards see
-    failing and barely passing texts that keep the PII shapes."""
+    dropped), the text whose only digit is ``0``, and the text with every
+    toxic word capitalised — so each guard sees failing and barely passing
+    texts that keep the PII and toxic shapes."""
     text = draw(pieces)
     no_at = text.replace("@", draw(st.sampled_from(["＠", "", " "])))
     digit = draw(st.sampled_from(["٣", "３", "²", "߇", ""]))
     no_digit = "".join(digit if "0" <= ch <= "9" else ch for ch in text)
     zeros = re.sub("[0-9]", "0", text)
-    return [text, no_at, no_digit, zeros]
-
-
-_EMAIL_RX = re.compile(SCRUB_PATTERNS[0][1])
-_DIGIT_RXS = [re.compile(p) for name, p, _ in SCRUB_PATTERNS
-              if name in ("ssn", "card", "phone", "ipv4")]
+    no_toxic = _TOXIC_RX.sub(lambda m: m.group().capitalize(), text)
+    return [text, no_at, no_digit, zeros, no_toxic]
 
 
 def _assert_guards_sound(text):
-    if "@" not in text:
-        assert _EMAIL_RX.search(text) is None, text
-    if re.search("[0-9]", text) is None:
-        # the digit guard tests the raw text; the digit patterns run on the
-        # text after the email step
-        for t in (text, _EMAIL_RX.sub("[EMAIL]", text)):
-            for rx in _DIGIT_RXS:
-                assert rx.search(t) is None, (rx.pattern, t)
+    """Whenever a scrub step can change the text, ``scrub_guards`` sets its
+    bit: with the bit unset, none of the step's patterns matches the text
+    as the chain hands it to that step."""
+    guards = int(scrub_guards([text])[0])
+    t = text
+    for bit, patterns in _STEPS:
+        for _, pattern, repl in patterns:
+            rx = re.compile(pattern)
+            if not guards & bit:
+                assert rx.search(t) is None, (pattern, text, t)
+            t = rx.sub(repl, t)
+
+
+def test_replacement_tokens_keep_the_guards_sound():
+    """The guard arguments rest on the replacement tokens: none holds a
+    digit (the digit bit tests the raw text) or a character of a toxic word
+    (the toxic bit tests the raw text), and the toxic step is the last."""
+    toxic_chars = set("".join(TOXIC_WORDS))
+    assert [name for name, _, _ in SCRUB_PATTERNS][-1] == "toxic"
+    for _, _, repl in SCRUB_PATTERNS[:-1]:
+        assert re.search("[0-9]", repl) is None and not toxic_chars & set(repl), repl
 
 
 @settings(max_examples=300, deadline=None)
 @given(_guard_failing_variants(
     st.lists(st.one_of(_scrub_piece, st.sampled_from(["\ud800", "\udcff", "a\udfff1"])),
              max_size=10).map("".join)))
+@example(["frakking a@b.co", "a@b.co frakking", "123-45-6789 gorram", "frakkingly",
+          "Frakking", "frak123-45-6789king", "belg a@b.co ium"])
 def test_scrub_guards_are_necessary_conditions(texts):
     """Python side: a text without ``@`` never matches the email pattern,
-    and one without an ASCII digit never matches ssn/card/phone/ipv4,
-    before or after the email step. Lone surrogates are covered here only:
+    one without an ASCII digit never matches ssn/card/phone/ipv4, before or
+    after the email step, and one without a toxic word never matches the
+    toxic step after the PII steps. Lone surrogates are covered here only:
     Spark strings are UTF-8 and cannot carry them."""
     for text in texts:
         _assert_guards_sound(text)
+    assert list(scrub_guards(texts + [None, ""]))[-2:] == [0, 0]
 
 
 # Java's \b and Python's disagree next to these categories (see
@@ -760,27 +785,52 @@ def _unguarded_jvm_chain(c):
 
 
 def _jvm_scrub(spark, texts, *scrubs):
-    """One row of the given scrub columns per text, in input order."""
-    sdf = spark.createDataFrame([(t,) for t in texts], "text: string")
+    """One row of the given scrub columns per text, in input order. The
+    frame holds ``text`` and its ``scrub_guards`` bitmask ``g``."""
+    rows = [(t, int(g)) for t, g in zip(texts, scrub_guards(texts))]
+    sdf = spark.createDataFrame(rows, "text: string, g: tinyint")
     return [tuple(r) for r in sdf.select(*(f(F.col("text")) for f in scrubs)).collect()]
 
 
 @settings(max_examples=25, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(st.lists(_guard_failing_variants(_scrub_text), min_size=1, max_size=12))
-@example([["000-00-0000", "0.0.0.0 x", "1@b.co", "a@b.co", "a@b.co 0000 0000 0000 0000"]])
+@example([["000-00-0000", "0.0.0.0 x", "1@b.co", "a@b.co", "a@b.co 0000 0000 0000 0000",
+           "frakking@b.co", "Frakking 123-45-6789", "gor 1.2.3.4 ram"]])
 def test_scrub_guarded_chain_matches_oracle(spark, variants):
-    """JVM side: the guarded ``scrub_text_column`` equals the unguarded JVM
-    chain on every text, and ``scrub_text_python`` on every text outside the
-    known ``\\b`` gap. Null in, null out."""
+    """JVM side: ``scrub_text_column`` under the JVM's guards and under
+    ``scrub_guards`` equals the unguarded JVM chain on every text, and
+    ``scrub_text_python`` on every text outside the known ``\\b`` gap; the
+    JVM's ``@`` and digit bits equal ``scrub_guards``'. Null in, null out."""
     texts = [t for group in variants for t in group] + [None]
     for t in texts[:-1]:
         _assert_guards_sound(t)
-    rows = _jvm_scrub(spark, texts, scrub_text_column, _unguarded_jvm_chain)
-    for t, (guarded, unguarded) in zip(texts, rows):
-        assert guarded == unguarded, (t, guarded, unguarded)
+    rows = _jvm_scrub(spark, texts, scrub_text_column,
+                      lambda c: scrub_text_column(c, F.col("g")), _unguarded_jvm_chain,
+                      lambda c: F.array(*jvm_guard_tests(c)[:2]),
+                      lambda c: F.array(*(F.col("g").bitwiseAND(b) != 0 for b in (1, 2))))
+    for t, (jvm_guarded, guarded, unguarded, jvm_bits, bits) in zip(texts, rows):
+        assert jvm_guarded == guarded == unguarded, (t, jvm_guarded, guarded, unguarded)
+        assert t is None or jvm_bits == bits, (t, jvm_bits, bits)
         if t is None or not any(unicodedata.category(ch) in _BOUNDARY_GAP for ch in t):
             assert guarded == scrub_text_python(t), (t, guarded)
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(st.lists(_guard_failing_variants(_scrub_text), min_size=1, max_size=12))
+def test_pipeline_scrub_matches_unguarded_chain(spark, variants):
+    """``QualityFilterPipeline().score()``, whose scrub steps run under the
+    fused UDF's guards, writes the unguarded JVM chain's text for every
+    page, null and empty text included."""
+    texts = [t for group in variants for t in group] + [None, ""]
+    pages = spark.createDataFrame([(f"https://x.test/{i}", t) for i, t in enumerate(texts)],
+                                  "url: string, text: string")
+    rows = (QualityFilterPipeline().score(pages)
+            .select("text", "scrubbed_text", _unguarded_jvm_chain(F.col("text"))).collect())
+    assert len(rows) == len(texts)
+    for t, got, want in rows:
+        assert got == want, (t, got, want)
 
 
 @pytest.mark.xfail(strict=True, reason="Java's \\b and Python's disagree on No/Nl/Mn "

@@ -551,6 +551,34 @@ def test_metadata_table_schemas_are_pinned(spark, tmp_path):
     assert spark.read.parquet(met).select("wave").distinct().count() == 4
 
 
+_SCORED = ("url:string,warc_ts:timestamp,{}lang:string,n_chars:bigint,word_count:bigint,"
+           "mean_word_length:double,stopword_ratio:double,symbol_word_ratio:double,"
+           "alpha_word_ratio:double,n_lines:bigint,mean_line_length:double,"
+           "max_line_length:bigint,bullet_line_frac:double,ellipsis_line_frac:double,"
+           "dup_line_frac:double,top_2gram_char_frac:double,top_3gram_char_frac:double,"
+           "dup_5gram_char_frac:double,detected_lang:string,langid_margin:double,"
+           "log_ppl:double,failed_rules:array<string>,verdict:boolean,scrubbed_text:string,"
+           "{}part_bucket:int")
+
+
+def test_scored_schemas_are_pinned(spark, tmp_path):
+    """``score()``, the ``run()`` output and the stream output keep their
+    columns, types and order; the scrub guards the fused UDF computes for
+    the scrub never reach them."""
+    from dataqualityassistant_spark.streaming.stream_filter import make_batch_processor
+
+    pages = pages_spark_df(spark, 40, partitions=2)
+    pipe = QualityFilterPipeline(n_buckets=4)
+    scored = pipe.score(pages)
+    assert scored.schema.simpleString() == "struct<" + _SCORED.format("text:string,", "") + ">"
+    pipe.run(spark, pages, str(tmp_path / "out"))
+    assert spark.read.parquet(str(tmp_path / "out")).schema.simpleString() == (
+        "struct<" + _SCORED.format("", "") + ">")
+    make_batch_processor(pipe, str(tmp_path / "stream"))(pages, 0)
+    assert spark.read.parquet(str(tmp_path / "stream")).schema.simpleString() == (
+        "struct<" + _SCORED.format("", "batch_id:int,") + ">")
+
+
 def _persistent_rdds(spark):
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
